@@ -42,11 +42,11 @@ runs the 32-window shape at millions of clips.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .payload import map_payloads
 
 
 def energy_signature_py(samples, window_samples: int, n_windows: int) -> list[int]:
@@ -72,81 +72,55 @@ def _band_digests(sig: list[int]) -> list[str]:
     ]
 
 
+SIG_FIELDS = [("sig", "string"), ("b0", "string"), ("b1", "string"),
+              ("b2", "string"), ("b3", "string")]
+
+
+def energy_sig_rows(
+    p: bytes, window_samples: int = 256, n_windows: int = 8
+) -> list[list[str]]:
+    """One clip's ``[[sig, b0, b1, b2, b3]]`` — the payload walk of
+    ``audio_energy_sig``, which fused synth stages compose with
+    ``payload.payload_rows`` so payload bytes never cross the JVM↔Python
+    boundary (guide §4: two chained Arrow stages round-trip every clip
+    through the JVM twice).
+
+    Container dispatch on magic: RIFF/WAVE, or ISO BMFF whose first
+    track is an uncompressed PCM-16 ``sowt``/``twos`` entry (r9: the MP4
+    slice rides the same real sample-table walk) — so one fingerprint
+    pass covers a mixed-container corpus."""
+    from quickstart_streaming_agents_spark.operators.multimodal import (
+        _decode_mp4_pcm,
+        _decode_wav,
+    )
+
+    if p[:4] == b"RIFF":
+        _, arr = _decode_wav(p)
+    elif len(p) >= 12 and p[4:8] == b"ftyp":
+        _, arr = _decode_mp4_pcm(p)
+    else:
+        raise ValueError("not a RIFF/WAVE or ISO-BMFF payload")
+    sig = energy_signature_py(arr[:, 0], window_samples, n_windows)
+    return [[":".join(map(str, sig)), *_band_digests(sig)]]
+
+
 def audio_energy_sig(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
     window_samples: int = 256,
     n_windows: int = 8,
-    on_error: str = "null",
 ) -> DataFrame:
     """Per-clip energy signature: ``(id_col, sig, b0..b3)`` where
     ``sig`` is the ':'-joined bucket sequence and b0..b3 the quarter
-    digests. NULLs for undecodable payloads under ``on_error="null"``
-    (the probe_media contract)."""
+    digests. Undecodable payloads keep an all-NULL row (the
+    payload-walker quarantine, operators/payload.py)."""
     if n_windows % 4:
         raise ValueError("n_windows must be divisible into 4 bands")
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
-
-    return df.select(id_col, payload_col).mapInPandas(
-        sig_batch_fn(id_col, payload_col, window_samples, n_windows,
-                     on_error),
-        schema=(f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
-                "sig string, b0 string, b1 string, "
-                "b2 string, b3 string"),
+    return map_payloads(
+        df, lambda p: energy_sig_rows(p, window_samples, n_windows),
+        SIG_FIELDS, id_col, payload_col, fail_row=[None] * 5,
     )
-
-
-def sig_batch_fn(
-    id_col: str,
-    payload_col: str,
-    window_samples: int,
-    n_windows: int,
-    on_error: str,
-):
-    """The per-batch decode+fingerprint body of ``audio_energy_sig``,
-    exposed so a Python payload *producer* (the fixture synths) can be
-    composed with it inside ONE ``mapInPandas`` stage — payload bytes
-    then never cross the JVM↔Python boundary (guide §4: two chained
-    Arrow stages round-trip every clip through the JVM twice)."""
-    from quickstart_streaming_agents_spark.operators.multimodal import (
-        _decode_mp4_pcm,
-        _decode_wav,
-    )
-
-    def decode_pcm(p: bytes):
-        # container dispatch on magic: RIFF/WAVE, or ISO BMFF whose
-        # first track is an uncompressed PCM-16 `sowt`/`twos` entry
-        # (r9: the MP4 slice rides the same real sample-table walk) —
-        # so one fingerprint pass covers a mixed-container corpus.
-        if p[:4] == b"RIFF":
-            return _decode_wav(p)
-        if len(p) >= 12 and p[4:8] == b"ftyp":
-            return _decode_mp4_pcm(p)
-        raise ValueError("not a RIFF/WAVE or ISO-BMFF payload")
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    _, arr = decode_pcm(bytes(payload or b""))
-                    sig = energy_signature_py(
-                        arr[:, 0], window_samples, n_windows
-                    )
-                    rows.append(
-                        [i, ":".join(map(str, sig)), *_band_digests(sig)]
-                    )
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    rows.append([i, None, None, None, None, None])
-            yield pd.DataFrame(
-                rows, columns=[id_col, "sig", "b0", "b1", "b2", "b3"]
-            )
-
-    return compute
 
 
 def audio_near_dup_pairs(

@@ -29,10 +29,10 @@ and audit landing files without decoding a record.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from quickstart_streaming_agents_spark.operators.payload import map_payloads
 
 from quickstart_streaming_agents_spark.sources.avro import (
     _read_long,
@@ -142,41 +142,24 @@ def ocf_block_index(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
 ) -> DataFrame:
     """Map-only 1→N OCF block index: one row per data block with the
-    file-level metadata repeated. ``on_error="null"`` skips
-    unparseable payloads (the warc_records routing contract)."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
+    file-level metadata repeated. Unparseable payloads are skipped (the
+    payload-walker quarantine, operators/payload.py)."""
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    t = ocf_table(bytes(payload or b""))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                for b in t["blocks"]:
-                    rows.append(
-                        [i, b["block_idx"], b["n_records"], b["byte_size"],
-                         t["codec"], t["schema_name"], t["n_meta_entries"],
-                         len(t["blocks"])]
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "block_idx", "n_records", "byte_size",
-                         "codec", "schema_name", "n_meta_entries",
-                         "n_blocks"],
-            )
+    def walk(p: bytes) -> list[list]:
+        t = ocf_table(p)
+        return [
+            [b["block_idx"], b["n_records"], b["byte_size"], t["codec"],
+             t["schema_name"], t["n_meta_entries"], len(t["blocks"])]
+            for b in t["blocks"]
+        ]
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        walk,
-        schema=(f"{id_col} {id_type}, block_idx int, n_records long, "
-                "byte_size long, codec string, schema_name string, "
-                "n_meta_entries int, n_blocks int"),
+    return map_payloads(
+        df, walk,
+        [("block_idx", "int"), ("n_records", "long"),
+         ("byte_size", "long"), ("codec", "string"),
+         ("schema_name", "string"), ("n_meta_entries", "int"),
+         ("n_blocks", "int")],
+        id_col, payload_col,
     )

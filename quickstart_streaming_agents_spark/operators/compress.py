@@ -5,7 +5,7 @@ Beyond-reference surface: web-scale corpora arrive compressed
 A 100 TB pipeline's first stage is therefore a decompress-and-validate
 map: payload bytes → text + integrity metadata, with per-row fault
 tolerance (a torn member must quarantine the ROW, not kill the job —
-the multimodal ``on_error`` contract).
+the payload-walker quarantine, operators/payload.py).
 
 Spark-first shape: ``mapInPandas`` over Arrow record batches (stdlib
 ``zlib``/``gzip`` — no external codec), map-only: the decompressor
@@ -19,10 +19,11 @@ from __future__ import annotations
 import gzip
 import hashlib
 import zlib
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from .payload import map_payloads
 
 
 def gzip_compress(text: str, level: int = 6) -> bytes:
@@ -73,66 +74,42 @@ def _bounded_inflate(p: bytes, wbits: int, cap: int) -> bytes:
             )
 
 
+_TEXT_FIELDS = [("text", "string"), ("n_bytes", "long"),
+                ("digest", "string")]
+
+
+def _text_row(raw: bytes) -> list:
+    return [raw.decode("utf-8"), len(raw), hashlib.md5(raw).hexdigest()]
+
+
 def decompress_text(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
     max_bytes: int = 64 * 1024 * 1024,
 ) -> DataFrame:
     """Per-row gzip/zlib-member decode: ``(id_col, text, n_bytes,
     digest)`` with digest = md5 hex of the decompressed UTF-8 text.
 
-    Accepts gzip members (magic ``1f 8b``) and raw zlib streams;
-    ``on_error="null"`` emits NULL text/meta for torn or non-compressed
-    payloads, ``"raise"`` fails the job. ``max_bytes`` bounds the
-    inflated size per row (ADVICE r8: this stage fronts UNTRUSTED web
-    payloads, where a single gzip bomb would otherwise expand gigabytes
-    and OOM the executor) — over-cap rows quarantine through the same
-    ``on_error`` path as torn members. Map-only — at 100 TB this is a
-    scan-fused stage like the media probes.
+    Accepts gzip members (magic ``1f 8b``) and raw zlib streams; torn,
+    NULL or non-compressed payloads keep a row with NULL text/meta (the
+    payload-walker quarantine, operators/payload.py). ``max_bytes``
+    bounds the inflated size per row (ADVICE r8: this stage fronts
+    UNTRUSTED web payloads, where a single gzip bomb would otherwise
+    expand gigabytes and OOM the executor) — over-cap rows quarantine
+    like torn members. Map-only — at 100 TB this is a scan-fused stage
+    like the media probes.
     """
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
     if max_bytes <= 0:
         raise ValueError(f"max_bytes must be positive, got {max_bytes}")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, texts, sizes, digests = [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    p = bytes(payload)
-                    if p[:2] == b"\x1f\x8b":
-                        raw = _bounded_inflate(p, 16 + zlib.MAX_WBITS,
-                                               max_bytes)
-                    else:
-                        raw = _bounded_inflate(p, zlib.MAX_WBITS, max_bytes)
-                    t = raw.decode("utf-8")
-                    texts.append(t)
-                    sizes.append(len(raw))
-                    digests.append(hashlib.md5(raw).hexdigest())
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    texts.append(None)
-                    sizes.append(None)
-                    digests.append(None)
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "text": texts,
-                    "n_bytes": pd.array(sizes, dtype="Int64"),
-                    "digest": digests,
-                }
-            )
+    def walk(p: bytes) -> list[list]:
+        wbits = zlib.MAX_WBITS + (16 if p[:2] == b"\x1f\x8b" else 0)
+        return [_text_row(_bounded_inflate(p, wbits, max_bytes))]
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        decode,
-        schema=(f"{id_col} {id_type}, text string, n_bytes long, "
-                "digest string"),
+    return map_payloads(
+        df, walk, _TEXT_FIELDS, id_col, payload_col,
+        fail_row=[None] * 3, null_fails=True,
     )
 
 
@@ -157,7 +134,6 @@ def sniff_decompress_text(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
     max_bytes: int = 64 * 1024 * 1024,
 ) -> DataFrame:
     """Magic-byte codec sniff + decode in one map: ``(id_col, codec,
@@ -170,70 +146,48 @@ def sniff_decompress_text(
     stdlib codec behind the same bounded-inflate bomb cap as
     ``decompress_text``, and the whole stage stays map-only (scan-fused
     at 100 TB, zero shuffle). Torn members, over-cap output, trailing
-    junk, and non-UTF-8 results all quarantine per ``on_error``.
-    zstd/lz4 would slot behind an import-try (not in this runtime —
-    the documented codec-tier convention)."""
+    junk, and non-UTF-8 results keep the sniffed codec with NULL
+    text/meta; a NULL payload keeps an all-NULL row (the payload-walker
+    quarantine, operators/payload.py). zstd/lz4 would slot behind an
+    import-try (not in this runtime — the documented codec-tier
+    convention)."""
     import bz2
     import lzma
 
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
     if max_bytes <= 0:
         raise ValueError(f"max_bytes must be positive, got {max_bytes}")
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, codecs, texts, sizes, digests = [], [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                codec = None
-                try:
-                    p = bytes(payload)
-                    if p[:2] == b"\x1f\x8b":
-                        codec = "gzip"
-                        raw = _bounded_inflate(p, 16 + zlib.MAX_WBITS,
-                                               max_bytes)
-                    elif p[:3] == b"BZh":
-                        codec = "bz2"
-                        raw = _bounded_stdlib_inflate(
-                            bz2.BZ2Decompressor(), p, max_bytes)
-                    elif p[:6] == b"\xfd7zXZ\x00":
-                        codec = "xz"
-                        raw = _bounded_stdlib_inflate(
-                            lzma.LZMADecompressor(lzma.FORMAT_XZ),
-                            p, max_bytes)
-                    else:
-                        codec = "plain"
-                        if len(p) > max_bytes:
-                            raise ValueError("payload exceeds cap")
-                        raw = p
-                    t = raw.decode("utf-8")
-                    codecs.append(codec)
-                    texts.append(t)
-                    sizes.append(len(raw))
-                    digests.append(hashlib.md5(raw).hexdigest())
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    codecs.append(codec)
-                    texts.append(None)
-                    sizes.append(None)
-                    digests.append(None)
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    id_col: ids,
-                    "codec": codecs,
-                    "text": texts,
-                    "n_bytes": pd.array(sizes, dtype="Int64"),
-                    "digest": digests,
-                }
-            )
+    def decode(codec: str, p: bytes) -> bytes:
+        if codec == "gzip":
+            return _bounded_inflate(p, 16 + zlib.MAX_WBITS, max_bytes)
+        if codec == "bz2":
+            return _bounded_stdlib_inflate(
+                bz2.BZ2Decompressor(), p, max_bytes)
+        if codec == "xz":
+            return _bounded_stdlib_inflate(
+                lzma.LZMADecompressor(lzma.FORMAT_XZ), p, max_bytes)
+        if len(p) > max_bytes:
+            raise ValueError("payload exceeds cap")
+        return p
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        decode,
-        schema=(f"{id_col} {id_type}, codec string, text string, "
-                "n_bytes long, digest string"),
+    def walk(p: bytes) -> list[list]:
+        if p[:2] == b"\x1f\x8b":
+            codec = "gzip"
+        elif p[:3] == b"BZh":
+            codec = "bz2"
+        elif p[:6] == b"\xfd7zXZ\x00":
+            codec = "xz"
+        else:
+            codec = "plain"
+        try:
+            return [[codec, *_text_row(decode(codec, p))]]
+        except (ValueError, EOFError, OSError, zlib.error, lzma.LZMAError):
+            # sniffed but undecodable: the codec survives the quarantine
+            return [[codec, None, None, None]]
+
+    return map_payloads(
+        df, walk, [("codec", "string"), *_TEXT_FIELDS], id_col,
+        payload_col, fail_row=[None] * 4, null_fails=True,
     )
 
 

@@ -16,10 +16,10 @@ header-only work (the probe_media triage class), scan speed at 100 TB.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .payload import map_payloads
 
 _TAG_MAKE = 0x010F
 _TAG_MODEL = 0x0110
@@ -165,102 +165,62 @@ def jpeg_exif(p: bytes) -> dict | None:
 
 
 def exif_display_dims(
-    df: "DataFrame",
+    df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
-) -> "DataFrame":
+) -> DataFrame:
     """The practical composition every image-resize stage needs BEFORE
     touching pixels: stored SOF dimensions (header probe) + EXIF
     Orientation → DISPLAY dimensions (orientations 5-8 are the
     transposed ones, so width/height swap). One map-only pass reads
     both headers; images with no EXIF default to orientation 1
-    (the spec's display default)."""
-    import pandas as pd
+    (the spec's display default). Non-JPEG payloads keep an all-NULL
+    row (the payload-walker quarantine, operators/payload.py)."""
 
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
-
-    def parse(batches):
+    def walk(p: bytes) -> list[list]:
         from quickstart_streaming_agents_spark.operators.multimodal import (
             _probe_jpeg,
         )
 
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    p = bytes(payload or b"")
-                    probe = _probe_jpeg(p)
-                    meta = jpeg_exif(p)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    rows.append([i, None, None, None, None, None])
-                    continue
-                orient = (meta or {}).get("orientation") or 1
-                if not 1 <= orient <= 8:
-                    # corrupt/out-of-range EXIF orientation (0, 9+):
-                    # fall back to the spec's display default instead
-                    # of transposing on garbage (ADVICE r10)
-                    orient = 1
-                w, h = probe["width"], probe["height"]
-                dw, dh = (h, w) if orient >= 5 else (w, h)
-                rows.append([i, orient, w, h, dw, dh])
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "orientation", "stored_w", "stored_h",
-                         "display_w", "display_h"],
-            )
+        probe = _probe_jpeg(p)
+        orient = (jpeg_exif(p) or {}).get("orientation") or 1
+        if not 1 <= orient <= 8:
+            # corrupt/out-of-range EXIF orientation (0, 9+): fall back
+            # to the spec's display default instead of transposing on
+            # garbage (ADVICE r10)
+            orient = 1
+        w, h = probe["width"], probe["height"]
+        dw, dh = (h, w) if orient >= 5 else (w, h)
+        return [[orient, w, h, dw, dh]]
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        parse,
-        schema=(f"{id_col} {id_type}, orientation int, stored_w int, "
-                "stored_h int, display_w int, display_h int"),
+    return map_payloads(
+        df, walk,
+        [("orientation", "int"), ("stored_w", "int"), ("stored_h", "int"),
+         ("display_w", "int"), ("display_h", "int")],
+        id_col, payload_col, fail_row=[None] * 5,
     )
+
+
+def _exif_row(p: bytes) -> list[list]:
+    meta = jpeg_exif(p)
+    if meta is None:
+        return [[None, None, None, None, False]]
+    return [[meta["orientation"], meta["make"], meta["model"],
+             meta["little_endian"], True]]
 
 
 def exif_meta(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
 ) -> DataFrame:
     """Per-image EXIF columns ``(id_col, orientation, make, model,
     little_endian, has_exif)``. EXIF-less JPEGs keep a row with NULL
-    tag values and ``has_exif = false``; non-JPEG payloads quarantine
-    per the ``on_error`` contract."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    meta = jpeg_exif(bytes(payload or b""))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    rows.append([i, None, None, None, None, None])
-                    continue
-                if meta is None:
-                    rows.append([i, None, None, None, None, False])
-                else:
-                    rows.append([
-                        i, meta["orientation"], meta["make"],
-                        meta["model"], meta["little_endian"], True,
-                    ])
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "orientation", "make", "model",
-                         "little_endian", "has_exif"],
-            )
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        parse,
-        schema=(f"{id_col} {id_type}, orientation int, make string, "
-                "model string, little_endian boolean, has_exif boolean"),
+    tag values and ``has_exif = false``; non-JPEG payloads keep an
+    all-NULL row (the payload-walker quarantine, operators/payload.py)."""
+    return map_payloads(
+        df, _exif_row,
+        [("orientation", "int"), ("make", "string"), ("model", "string"),
+         ("little_endian", "boolean"), ("has_exif", "boolean")],
+        id_col, payload_col, fail_row=[None] * 5,
     )

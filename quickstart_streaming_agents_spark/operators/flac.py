@@ -24,7 +24,7 @@ MPEG audio (operators/multimodal.py rung (5) closure note); the
 header tier is what the curation use case needs.
 
 Fault contract (the mp3_frame_table convention): not-FLAC or a torn
-STREAMINFO raises (→ quarantine row under ``on_error="null"``); a
+STREAMINFO raises (→ the ``is_flac = false`` quarantine row); a
 torn LATER block ends the walk gracefully with STREAMINFO already
 parsed — tags degrade, identity does not.
 
@@ -35,10 +35,10 @@ Spark-first shape: map-only ``mapInPandas`` — fuses into the scan at
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .payload import map_payloads
 
 STREAMINFO, PADDING, APPLICATION, SEEKTABLE, VORBIS_COMMENT = 0, 1, 2, 3, 4
 
@@ -166,42 +166,32 @@ def flac_stream_table(p: bytes) -> dict:
     }
 
 
+_FLAC_META_FIELDS = [
+    ("sample_rate", "int"), ("channels", "int"),
+    ("bits_per_sample", "int"), ("total_samples", "long"),
+    ("duration_ms", "long"), ("n_meta_blocks", "int"),
+    ("has_vorbis_comment", "boolean"), ("title", "string"),
+    ("audio_md5", "string"),
+]
+
+
 def flac_stream_meta(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
 ) -> DataFrame:
     """Map-only FLAC header probe: one row per payload with STREAMINFO
-    fields, duration, tag summary, and the unencoded-audio MD5.
-    ``on_error="null"`` emits an all-NULL quarantine row (the exif_meta
-    convention — the row count stays 1:1 for audit joins)."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
+    fields, duration, tag summary, and the unencoded-audio MD5. A
+    payload that is not FLAC keeps its row (the row count stays 1:1 for
+    audit joins) with ``is_flac = false`` and NULL fields — the
+    payload-walker quarantine, operators/payload.py."""
 
-    cols = ["sample_rate", "channels", "bits_per_sample", "total_samples",
-            "duration_ms", "n_meta_blocks", "has_vorbis_comment", "title",
-            "audio_md5"]
+    def walk(p: bytes) -> list[list]:
+        t = flac_stream_table(p)
+        return [[True] + [t[c] for c, _ in _FLAC_META_FIELDS]]
 
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    t = flac_stream_table(bytes(payload or b""))
-                    rows.append([i, True] + [t[c] for c in cols])
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    rows.append([i, False] + [None] * len(cols))
-            yield pd.DataFrame(rows, columns=[id_col, "is_flac"] + cols)
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        probe,
-        schema=(f"{id_col} {id_type}, is_flac boolean, sample_rate int, "
-                "channels int, bits_per_sample int, total_samples long, "
-                "duration_ms long, n_meta_blocks int, "
-                "has_vorbis_comment boolean, title string, "
-                "audio_md5 string"),
+    return map_payloads(
+        df, walk, [("is_flac", "boolean"), *_FLAC_META_FIELDS],
+        id_col, payload_col,
+        fail_row=[False] + [None] * len(_FLAC_META_FIELDS),
     )

@@ -24,8 +24,9 @@ librosa/ffmpeg (MP3/AAC entropy decode — not in this container) raise
 ``NotImplementedError`` at the same integration point; MP3 gains real
 ID3v2.3/2.4 tag metadata (make_id3v2/id3_tags/id3_meta) on top of the
 existing frame demux. The real path is
-per-row fault-tolerant (``on_error="null"``): a malformed or NULL asset
-yields NULL meta/features instead of failing the task. ``decoder="fake"``
+per-row fault-tolerant: a malformed or NULL asset yields NULL
+meta/features instead of failing the task (the payload-walker
+quarantine, operators/payload.py). ``decoder="fake"``
 remains the deterministic md5-derived stand-in whose features the DuckDB
 oracle can replay.
 
@@ -48,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .payload import map_payloads
 
 MEDIA_META_TYPE = T.StructType(
     [
@@ -1671,7 +1674,6 @@ def extract_media_features(
     media_type: str = "image",
     feature_dim: int = 8,
     decoder: str = "fake",
-    on_error: str = "null",
     media_type_col: str | None = None,
 ) -> DataFrame:
     """Append ``media_meta`` struct + ``features`` array<float>.
@@ -1686,21 +1688,17 @@ def extract_media_features(
     (n_frames + summed frame delays), PCM-16 WAV for ``"audio"`` (all
     pure struct/numpy/zlib against the public formats; no codec
     libraries). Other media types still raise ``NotImplementedError``
-    until their codecs are available; a video row whose payload is not a
-    GIF fails per-row into the ``on_error`` path. ``decoder="fake"``
-    keeps the deterministic md5-derived stand-in whose features are
-    SQL-replayable for the DuckDB oracle.
+    until their codecs are available. ``decoder="fake"`` keeps the
+    deterministic md5-derived stand-in whose features are SQL-replayable
+    for the DuckDB oracle.
 
-    ``on_error`` governs the real path's per-row failure behavior:
-    ``"null"`` (default) catches decode errors row-by-row and emits NULL
-    media_meta/features, so one malformed or NULL asset can't fail a
-    whole task (and, after Spark's retries, a 100 TB job);
-    ``"raise"`` propagates the first error for strict pipelines.
+    The real path quarantines per row: a malformed or NULL asset (a
+    video row whose payload is not a GIF included) gets NULL
+    media_meta/features, so one bad asset can't fail a whole task (and,
+    after Spark's retries, a 100 TB job).
     """
     if decoder not in ("fake", "real"):
         raise ValueError(f"unknown decoder {decoder!r}")
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"unknown on_error {on_error!r}")
     if (decoder == "real" and media_type_col is None
             and media_type not in ("image", "audio", "video")):
         _real_decode(b"", media_type)  # raises NotImplementedError
@@ -1732,8 +1730,6 @@ def extract_media_features(
                         metas.append(m)
                         feats.append(_real_features(m, a, feature_dim))
                     except (ValueError, struct.error, NotImplementedError):
-                        if on_error == "raise":
-                            raise
                         metas.append(None)
                         feats.append(None)
                 out["media_meta"] = metas
@@ -1755,7 +1751,6 @@ def sample_frames(
     payload_col: str = "payload",
     every_nth: int = 30,
     decoder: str = "fake",
-    on_error: str = "null",
 ) -> DataFrame:
     """Video → one row per sampled frame (frame_idx, frame_payload).
 
@@ -1764,16 +1759,14 @@ def sample_frames(
     every sampled frame as a standalone 8-bit PNG — the emitted
     frame_payload is itself decodable by the image path, the actual
     video→frames→image-corpus pipeline shape. A non-GIF or torn payload
-    follows ``on_error`` ("null" skips the row, "raise" propagates).
-    The fake decoder keeps the md5-derived SQL-replayable stand-in.
-    Either way: 1→N mapInPandas, record-batch streamed.
+    emits no frame rows (the 1→N quarantine). The fake decoder keeps
+    the md5-derived SQL-replayable stand-in. Either way: 1→N
+    mapInPandas, record-batch streamed.
     """
     if decoder not in ("fake", "real"):
         raise NotImplementedError(
             "real frame sampling beyond animated GIF requires ffmpeg-class deps"
         )
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"unknown on_error {on_error!r}")
     out_schema = T.StructType(
         df.schema.fields
         + [
@@ -1803,9 +1796,7 @@ def sample_frames(
                         payload, media_type="video", collect_all=True
                     )
                 except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
+                    continue  # undecodable video: no frame rows
                 for fi in range(0, meta["n_frames"], every_nth):
                     rows.append(
                         {**{c: pdf[c].iloc[i] for c in in_cols},
@@ -1831,10 +1822,10 @@ def sample_frame_features(
     bytes and the per-frame PNGs never leave the Python worker).
 
     Returns ``[(frame_idx, media_meta | None, features | None), ...]``.
-    Raises on an undecodable video payload (the caller implements its
-    ``on_error`` policy, matching ``sample_frames``); a per-frame PNG
-    redecode failure yields ``(idx, None, None)``, mirroring
-    ``extract_media_features``'s ``on_error="null"`` row.
+    Raises on an undecodable video payload (the caller quarantines it,
+    matching ``sample_frames``); a per-frame PNG redecode failure
+    yields ``(idx, None, None)``, mirroring ``extract_media_features``'s
+    NULL row.
     """
     meta, _, frames = _decode_gif(payload, media_type="video", collect_all=True)
     out: list[tuple[int, dict | None, list[float] | None]] = []
@@ -1854,7 +1845,6 @@ def demux_mp4_samples(
     id_col: str = "doc_id",
     payload_col: str = "payload",
     every_nth: int = 1,
-    on_error: str = "null",
 ) -> DataFrame:
     """Real MP4 container demux: one row per (every_nth-th) sample with
     its decode timestamp, size and payload digest — the byte ranges a
@@ -1864,52 +1854,28 @@ def demux_mp4_samples(
     (no H.264/AAC DSP in this runtime); everything up to it — box walk,
     run expansion, chunk-offset resolution, byte slicing — is real.
 
-    mapInPandas 1→N, record-batch streamed, per-row ``on_error``:
-    "null" skips undemuxable payloads (probe_media quarantines them),
-    "raise" fails the job. Output: ``(id_col, sample_idx, dts_ms,
-    sample_size, sample_md5)``."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"unknown on_error {on_error!r}")
+    mapInPandas 1→N, record-batch streamed: undemuxable payloads emit
+    no rows (the payload-walker quarantine, operators/payload.py;
+    probe_media flags them), and a sample whose range runs past EOF is
+    skipped alone. Output: ``(id_col, sample_idx, dts_ms, sample_size,
+    sample_md5)``."""
     if every_nth < 1:
         raise ValueError("every_nth must be >= 1")
 
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = bytes(payload or b"")
-                try:
-                    tab = mp4_sample_table(p)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                for row in tab[::every_nth]:
-                    chunk = p[row["offset"] : row["offset"] + row["size"]]
-                    if len(chunk) != row["size"]:
-                        if on_error == "raise":
-                            raise ValueError(
-                                f"sample {row['sample_idx']} range past EOF"
-                            )
-                        continue
-                    rows.append({
-                        id_col: i,
-                        "sample_idx": row["sample_idx"],
-                        "dts_ms": row["dts_ms"],
-                        "sample_size": row["size"],
-                        "sample_md5": hashlib.md5(chunk).hexdigest(),
-                    })
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "sample_idx", "dts_ms", "sample_size",
-                         "sample_md5"],
-            )
+    def walk(p: bytes) -> list[list]:
+        rows = []
+        for row in mp4_sample_table(p)[::every_nth]:
+            chunk = p[row["offset"] : row["offset"] + row["size"]]
+            if len(chunk) == row["size"]:
+                rows.append([row["sample_idx"], row["dts_ms"], row["size"],
+                             hashlib.md5(chunk).hexdigest()])
+        return rows
 
-    return df.select(id_col, payload_col).mapInPandas(
-        demux,
-        schema=(f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
-                "sample_idx int, dts_ms long, "
-                "sample_size long, sample_md5 string"),
+    return map_payloads(
+        df, walk,
+        [("sample_idx", "int"), ("dts_ms", "long"), ("sample_size", "long"),
+         ("sample_md5", "string")],
+        id_col, payload_col,
     )
 
 
@@ -2096,52 +2062,31 @@ def id3_tags(p: bytes) -> dict | None:
     return {"version": version, "tag_size": tag_size, "frames": frames}
 
 
+def _id3_row(p: bytes) -> list[list]:
+    meta = id3_tags(p)
+    if meta is None:
+        return [[None, None, None, None, None, False]]
+    f = meta["frames"]
+    return [[meta["version"], meta["tag_size"], f.get("TIT2"),
+             f.get("TPE1"), f.get("TALB"), True]]
+
+
 def id3_meta(
-    df: "DataFrame",
+    df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
-) -> "DataFrame":
+) -> DataFrame:
     """Per-asset ID3 columns ``(id_col, id3_version, tag_size, title,
     artist, album, has_id3)``. Tag-less MP3s keep a row with NULL tag
-    values and ``has_id3 = false``; undecodable payloads quarantine per
-    ``on_error`` (the exif_meta contract). Map-only header tier."""
-    import pandas as pd
-
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
-
-    def parse(batches):
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    meta = id3_tags(bytes(payload or b""))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    rows.append([i, None, None, None, None, None, None])
-                    continue
-                if meta is None:
-                    rows.append([i, None, None, None, None, None, False])
-                else:
-                    f = meta["frames"]
-                    rows.append([
-                        i, meta["version"], meta["tag_size"],
-                        f.get("TIT2"), f.get("TPE1"), f.get("TALB"), True,
-                    ])
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "id3_version", "tag_size", "title",
-                         "artist", "album", "has_id3"],
-            )
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        parse,
-        schema=(f"{id_col} {id_type}, id3_version int, tag_size bigint, "
-                "title string, artist string, album string, "
-                "has_id3 boolean"),
+    values and ``has_id3 = false``; undecodable payloads keep an
+    all-NULL row (the exif_meta contract, operators/payload.py).
+    Map-only header tier."""
+    return map_payloads(
+        df, _id3_row,
+        [("id3_version", "int"), ("tag_size", "bigint"),
+         ("title", "string"), ("artist", "string"), ("album", "string"),
+         ("has_id3", "boolean")],
+        id_col, payload_col, fail_row=[None] * 6,
     )
 
 
@@ -2213,44 +2158,27 @@ def mp3_frame_table(p: bytes) -> list[dict]:
     return out
 
 
+_MP3_FRAME_FIELDS = [
+    ("frame_idx", "int"), ("offset", "long"), ("size", "long"),
+    ("bitrate_kbps", "int"), ("samplerate_hz", "int"), ("channels", "int"),
+    ("dts_ms", "long"),
+]
+
+
 def demux_mp3_frames(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
 ) -> DataFrame:
     """Real MP3 frame demux — one row per frame with its byte range,
     header fields and decode timestamp (``mp3_frame_table``), the audio
-    sibling of demux_mp4_samples. Map-only 1→N mapInPandas; per-row
-    ``on_error`` ("null" skips undemuxable payloads, "raise" fails)."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"unknown on_error {on_error!r}")
-
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    tab = mp3_frame_table(bytes(payload or b""))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                for r in tab:
-                    rows.append({id_col: i, **r})
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "offset", "size",
-                         "bitrate_kbps", "samplerate_hz", "channels",
-                         "dts_ms"],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(
-        demux,
-        schema=(f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
-                "frame_idx int, offset long, size long, "
-                "bitrate_kbps int, samplerate_hz int, channels int, "
-                "dts_ms long"),
+    sibling of demux_mp4_samples. Map-only 1→N mapInPandas;
+    undemuxable payloads emit no rows (operators/payload.py)."""
+    return map_payloads(
+        df,
+        lambda p: [[r[c] for c, _ in _MP3_FRAME_FIELDS]
+                   for r in mp3_frame_table(p)],
+        _MP3_FRAME_FIELDS, id_col, payload_col,
     )
 
 
@@ -3064,14 +2992,11 @@ def _probe(payload: bytes) -> tuple[str, dict]:
 def probe_media(
     df: DataFrame,
     payload_col: str = "payload",
-    on_error: str = "null",
 ) -> DataFrame:
     """Append ``container`` (string) + ``media_meta`` struct from
     header-only probes — no sample decode, scan-speed triage. Same
-    mapInPandas shape and per-row ``on_error`` contract as
+    mapInPandas shape and per-row NULL quarantine as
     :func:`extract_media_features`."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"unknown on_error {on_error!r}")
     out_schema = T.StructType(
         df.schema.fields
         + [
@@ -3088,8 +3013,6 @@ def probe_media(
                 try:
                     c, m = _probe(bytes(pdf[payload_col].iloc[i] or b""))
                 except Exception:
-                    if on_error == "raise":
-                        raise
                     c, m = None, None
                 containers.append(c)
                 metas.append(m)

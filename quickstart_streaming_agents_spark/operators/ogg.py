@@ -30,10 +30,10 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .payload import map_payloads
 
 
 def _crc_table() -> list[int]:
@@ -152,41 +152,26 @@ def ogg_page_table(p: bytes) -> list[dict]:
     return out
 
 
+_OGG_PAGE_FIELDS = [
+    ("page_idx", "int"), ("offset", "long"), ("payload_offset", "long"),
+    ("payload_length", "long"), ("granule", "long"), ("serial", "long"),
+    ("page_seq", "long"), ("is_bos", "boolean"), ("is_eos", "boolean"),
+    ("is_continued", "boolean"), ("n_segments", "int"),
+    ("n_packets", "int"), ("payload_md5", "string"),
+]
+
+
 def ogg_pages(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
 ) -> DataFrame:
     """Map-only 1→N Ogg page demux with real CRC verification.
-    ``on_error="null"`` skips undemuxable payloads (the warc_records
-    routing contract), ``"raise"`` fails the job."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
-
-    cols = ["page_idx", "offset", "payload_offset", "payload_length",
-            "granule", "serial", "page_seq", "is_bos", "is_eos",
-            "is_continued", "n_segments", "n_packets", "payload_md5"]
-
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    tab = ogg_page_table(bytes(payload or b""))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                rows.extend([i] + [r[c] for c in cols] for r in tab)
-            yield pd.DataFrame(rows, columns=[id_col] + cols)
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        demux,
-        schema=(f"{id_col} {id_type}, page_idx int, offset long, "
-                "payload_offset long, payload_length long, granule long, "
-                "serial long, page_seq long, is_bos boolean, "
-                "is_eos boolean, is_continued boolean, n_segments int, "
-                "n_packets int, payload_md5 string"),
+    Undemuxable payloads are skipped (the payload-walker quarantine,
+    operators/payload.py)."""
+    return map_payloads(
+        df,
+        lambda p: [[r[c] for c, _ in _OGG_PAGE_FIELDS]
+                   for r in ogg_page_table(p)],
+        _OGG_PAGE_FIELDS, id_col, payload_col,
     )

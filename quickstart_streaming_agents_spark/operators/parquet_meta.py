@@ -39,10 +39,10 @@ Spark-first shape: map-only 1→N ``mapInPandas``.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .payload import map_payloads
 
 _STOP = 0
 _BOOL_TRUE, _BOOL_FALSE = 1, 2
@@ -176,42 +176,26 @@ def parquet_footer_index(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
 ) -> DataFrame:
     """Map-only 1→N footer walk: one row per row group with the file-
     level identity fields repeated (the warc_records shape).
-    ``on_error="null"`` skips unparseable payloads."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
+    Unparseable payloads are skipped (the payload-walker quarantine,
+    operators/payload.py)."""
 
-    def walk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    m = parquet_file_meta(bytes(payload or b""))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                for gi, g in enumerate(m["row_groups"]):
-                    rows.append(
-                        [i, gi, g["num_rows"], m["num_rows"],
-                         len(m["row_groups"]), m["n_leaf_columns"],
-                         m["version"], g["n_col_chunks"],
-                         m["created_by"] is not None]
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "rg_idx", "rg_num_rows", "file_num_rows",
-                         "n_row_groups", "n_leaf_columns", "version",
-                         "n_col_chunks", "has_created_by"],
-            )
+    def walk(p: bytes) -> list[list]:
+        m = parquet_file_meta(p)
+        return [
+            [gi, g["num_rows"], m["num_rows"], len(m["row_groups"]),
+             m["n_leaf_columns"], m["version"], g["n_col_chunks"],
+             m["created_by"] is not None]
+            for gi, g in enumerate(m["row_groups"])
+        ]
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        walk,
-        schema=(f"{id_col} {id_type}, rg_idx int, rg_num_rows long, "
-                "file_num_rows long, n_row_groups int, n_leaf_columns int, "
-                "version int, n_col_chunks int, has_created_by boolean"),
+    return map_payloads(
+        df, walk,
+        [("rg_idx", "int"), ("rg_num_rows", "long"),
+         ("file_num_rows", "long"), ("n_row_groups", "int"),
+         ("n_leaf_columns", "int"), ("version", "int"),
+         ("n_col_chunks", "int"), ("has_created_by", "boolean")],
+        id_col, payload_col,
     )

@@ -34,11 +34,10 @@ family, a documented recall trade for bounded join fan-out.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .payload import map_payloads
 
 
 def dhash_grid(arr, h: int = 8, w: int = 9):
@@ -87,65 +86,32 @@ def dhash_bands_py(grid) -> list[int]:
     return [int(vals[2 * j : 2 * j + 2].sum()) for j in range(4)]
 
 
-def dhash_images(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    on_error: str = "null",
-) -> DataFrame:
-    """Per-image dHash: ``(id_col, b0, b1, b2, b3)``.
-
-    mapInPandas over Arrow record batches, per-row fault tolerance:
-    ``on_error="null"`` emits NULL bands for undecodable payloads (the
-    probe_media contract); ``"raise"`` fails the job."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dhash_batch_fn(id_col, payload_col, on_error),
-        schema=(f"{id_col} {df.schema[id_col].dataType.simpleString()}, "
-                "b0 long, b1 long, b2 long, b3 long"),
-    )
+DHASH_FIELDS = [("b0", "long"), ("b1", "long"), ("b2", "long"),
+                ("b3", "long")]
 
 
-def dhash_batch_fn(id_col: str, payload_col: str, on_error: str):
-    """The per-batch decode+dHash body of ``dhash_images``, exposed so
-    a Python payload producer (the fixture synths) can be composed with
-    it inside ONE ``mapInPandas`` stage — payload bytes then never
-    cross the JVM↔Python boundary (guide §4, the afp.sig_batch_fn
-    pattern)."""
+def dhash_rows(p: bytes) -> list[list[int]]:
+    """One image's ``[[b0, b1, b2, b3]]`` — the payload walk of
+    ``dhash_images``, which fused synth stages compose with
+    ``payload.payload_rows`` (the afp.energy_sig_rows pattern)."""
     from quickstart_streaming_agents_spark.operators.multimodal import (
         _real_decode,
     )
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, bands = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    _, arr = _real_decode(bytes(payload), "image")
-                    bands.append(dhash_bands_py(dhash_grid(arr)))
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    bands.append([None, None, None, None])
-                ids.append(i)
-            yield pd.DataFrame(
-                {
-                    # no dtype pin on ids: the declared Arrow schema
-                    # carries the input id type (string ids must not
-                    # int64-cast here)
-                    id_col: pd.Series(ids),
-                    **{
-                        f"b{j}": pd.Series(
-                            [b[j] for b in bands], dtype="Int64"
-                        )
-                        for j in range(4)
-                    },
-                }
-            )
+    _, arr = _real_decode(p, "image")
+    return [dhash_bands_py(dhash_grid(arr))]
 
-    return compute
+
+def dhash_images(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    payload_col: str = "payload",
+) -> DataFrame:
+    """Per-image dHash: ``(id_col, b0, b1, b2, b3)``. Undecodable
+    payloads keep NULL bands (the payload-walker quarantine,
+    operators/payload.py)."""
+    return map_payloads(df, dhash_rows, DHASH_FIELDS, id_col, payload_col,
+                        fail_row=[None] * 4)
 
 
 def phash_near_dup_pairs(

@@ -426,12 +426,21 @@ def _semantic_kept_fn(threshold: float):
     evaluation (numpy float64 multiply/add are the same IEEE-754 ops).
     Pairs whose arrays differ in length produced a NULL cosine in the
     old zip_with (null-padded) and were never dups — reproduced by
-    pairing only within same-length subgroups. NaN rows (zero-norm
-    normalization) never satisfy ``>= threshold`` on either path.
+    pairing only within same-length subgroups.
 
-    Memory: row-blocked (512 rows x group) so the partial Gram stays
-    small even at ``target_cluster_size`` groups — a 4096-member cluster
-    peaks at 512 x 4096 doubles = 16 MB per task."""
+    Zero-norm rows normalize to NaN. Here a NaN cosine fails
+    ``>= threshold``, so such a row is never a dup and is kept; the
+    DuckDB oracle orders NaN above every number, so there the comparison
+    holds and the row would be dropped. No fixture has a zero-norm
+    vector, so the parity sweep never sees the split (the contract
+    decision is an open ROADMAP item).
+
+    Memory: one cluster is one group, held whole in one Python worker
+    (its rows plus an ``m x dim`` float64 matrix), so the largest
+    cluster must fit a worker — ``target_cluster_size`` bounds the
+    expected size, not the maximum. The Gram is row-blocked (512 rows x
+    group) so it stays small — a 4096-member cluster peaks at
+    512 x 4096 doubles = 16 MB per task."""
 
     def kept_fn(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -495,12 +504,15 @@ def semantic_dedup(
     keeper). Returns ``(id_col, cluster, kept)`` for every corpus row.
 
     Scale shape: k-means training is the bounded-sample driver recipe
-    shared with ann_ivf; assignment is one mapInPandas matmul pass over
-    the corpus; candidate pairs exist only WITHIN clusters (SemDeDup's
-    point), joined on the cluster key; and the pair cosine itself is a
-    JVM zip_with/aggregate fold — whole-stage codegen, no Python in the
-    prune path. The fold matches the SQL oracle's list_transform sum
-    element order, so threshold comparisons are bit-identical.
+    shared with ann_ivf; assignment and normalization are one fused
+    ``MapInPandas`` matmul pass over the corpus; candidate pairs exist
+    only WITHIN clusters (SemDeDup's point), so pruning is one
+    cluster-keyed ``FlatMapGroupsInPandas`` (``applyInPandas``) whose
+    blocked numpy Gram computes every intra-cluster cosine. The Gram
+    accumulates in the SQL oracle's list_transform sum element order, so
+    threshold comparisons are bit-identical (``_semantic_kept_fn``). A
+    whole cluster is one group in one worker: the largest cluster must
+    fit in a Python worker's memory.
 
     ``target_cluster_size`` is what keeps the intra-cluster pair join
     from going quadratic at scale: the cluster count is auto-scaled to

@@ -19,7 +19,7 @@ corrupt block can't masquerade as a member.
 Fault contract (the warc/mp3/mp4 convention): a torn final member
 (header claims bytes past the payload) or trailing junk after ≥ 1 valid
 member ends the walk gracefully; a payload with no valid member raises
-— quarantined per ``on_error``.
+— quarantined by the payload walker (operators/payload.py).
 
 Correctness stance: tests walk archives produced by the stdlib
 ``tarfile`` module (an INDEPENDENT writer — no self-consistency trap),
@@ -35,10 +35,10 @@ WebDataset readers do.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .payload import map_payloads
 
 _BLOCK = 512
 
@@ -111,51 +111,27 @@ def tar_members(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
     with_content_md5: bool = True,
 ) -> DataFrame:
     """Map-only 1→N TAR demux: one row per member with name, size,
     byte range, and (optionally) the content md5 — the integrity handle
-    a WebDataset-style reader joins on. ``on_error="null"`` skips
-    unwalkable payloads, ``"raise"`` fails the job."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
+    a WebDataset-style reader joins on. Unwalkable payloads are skipped
+    (the payload-walker quarantine, operators/payload.py)."""
 
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    p = bytes(payload or b"")
-                    tab = tar_member_table(p)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue  # skip row — the warc_records contract
-                for m in tab:
-                    md5 = (
-                        hashlib.md5(
-                            p[m["content_offset"] :
-                              m["content_offset"] + m["size"]]
-                        ).hexdigest()
-                        if with_content_md5
-                        else None
-                    )
-                    rows.append([
-                        i, m["member_idx"], m["name"], m["size"],
-                        m["typeflag"], m["offset"], m["content_offset"],
-                        md5,
-                    ])
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "member_idx", "name", "size", "typeflag",
-                         "offset", "content_offset", "content_md5"],
-            )
+    def walk(p: bytes) -> list[list]:
+        return [
+            [m["member_idx"], m["name"], m["size"], m["typeflag"],
+             m["offset"], m["content_offset"],
+             hashlib.md5(
+                 p[m["content_offset"] : m["content_offset"] + m["size"]]
+             ).hexdigest() if with_content_md5 else None]
+            for m in tar_member_table(p)
+        ]
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        demux,
-        schema=(f"{id_col} {id_type}, member_idx int, name string, "
-                "size bigint, typeflag string, offset bigint, "
-                "content_offset bigint, content_md5 string"),
+    return map_payloads(
+        df, walk,
+        [("member_idx", "int"), ("name", "string"), ("size", "bigint"),
+         ("typeflag", "string"), ("offset", "bigint"),
+         ("content_offset", "bigint"), ("content_md5", "string")],
+        id_col, payload_col,
     )

@@ -26,10 +26,10 @@ bounded multi-member inflate is the stage in front of this one.)
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .payload import map_payloads
 
 
 def make_warc(records: list[tuple[str, str, str, bytes]]) -> bytes:
@@ -122,53 +122,30 @@ def warc_records(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
     with_content_md5: bool = True,
 ) -> DataFrame:
     """Map-only 1→N WARC demux: one row per record with its byte range,
     header fields, and (optionally) the payload md5 — the integrity
     handle downstream dedup joins on without re-reading the archive.
-    ``on_error="null"`` skips undemuxable payloads (the probe_media
-    routing contract), ``"raise"`` fails the job."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
+    Undemuxable payloads are skipped (the payload-walker quarantine,
+    operators/payload.py)."""
 
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    p = bytes(payload or b"")
-                    tab = warc_record_table(p)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue
-                for r in tab:
-                    md5 = (
-                        hashlib.md5(
-                            p[r["content_offset"] : r["content_offset"]
-                              + r["content_length"]]
-                        ).hexdigest()
-                        if with_content_md5
-                        else None
-                    )
-                    rows.append(
-                        [i, r["record_idx"], r["offset"],
-                         r["content_offset"], r["content_length"],
-                         r["warc_type"], r["target_uri"], md5]
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "record_idx", "offset", "content_offset",
-                         "content_length", "warc_type", "target_uri",
-                         "content_md5"],
-            )
+    def walk(p: bytes) -> list[list]:
+        return [
+            [r["record_idx"], r["offset"], r["content_offset"],
+             r["content_length"], r["warc_type"], r["target_uri"],
+             hashlib.md5(
+                 p[r["content_offset"] : r["content_offset"]
+                   + r["content_length"]]
+             ).hexdigest() if with_content_md5 else None]
+            for r in warc_record_table(p)
+        ]
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        demux,
-        schema=(f"{id_col} {id_type}, record_idx int, offset long, "
-                "content_offset long, content_length long, "
-                "warc_type string, target_uri string, content_md5 string"),
+    return map_payloads(
+        df, walk,
+        [("record_idx", "int"), ("offset", "long"),
+         ("content_offset", "long"), ("content_length", "long"),
+         ("warc_type", "string"), ("target_uri", "string"),
+         ("content_md5", "string")],
+        id_col, payload_col,
     )

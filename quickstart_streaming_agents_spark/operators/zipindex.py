@@ -18,7 +18,7 @@ one, and (for STORED members) recomputes the CRC-32 over the data —
 
 Fault contract (the tar/warc convention): payloads with no EOCD, a
 torn central directory, or an out-of-range local offset raise — the
-Spark surface quarantines them per ``on_error``. Individual members
+payload walker quarantines them (operators/payload.py). Individual members
 with bad local headers are emitted with NULL ``data_offset`` and
 ``crc_ok = false`` rather than poisoning the archive's other members.
 
@@ -33,10 +33,10 @@ from __future__ import annotations
 import hashlib
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .payload import map_payloads
 
 _EOCD_SIG = b"PK\x05\x06"
 _CEN_SIG = b"PK\x01\x02"
@@ -55,8 +55,8 @@ def zip_member_table(p: bytes) -> list[dict]:
         raise ValueError("not a ZIP payload (no end-of-central-directory)")
     n_total, cd_size, cd_off = struct.unpack_from("<HII", p, eocd + 10)
     # ZIP64 sentinels: the real counts/offsets live in the ZIP64 EOCD
-    # record this walker does not parse — quarantine via the on_error
-    # path instead of misparsing a truncated/shifted member list
+    # record this walker does not parse — quarantine the payload
+    # instead of misparsing a truncated/shifted member list
     # (ADVICE r10).
     if n_total == 0xFFFF or cd_size == 0xFFFFFFFF or cd_off == 0xFFFFFFFF:
         raise ValueError("ZIP64 archive (EOCD sentinel fields) unsupported")
@@ -111,55 +111,36 @@ def zip_members(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    on_error: str = "null",
     with_content_md5: bool = True,
 ) -> DataFrame:
     """Map-only 1→N ZIP demux: one row per member with name, sizes,
     byte range, CRC verdict and (for STORED members) the content md5."""
-    if on_error not in ("null", "raise"):
-        raise ValueError(f"on_error must be 'null' or 'raise', got {on_error!r}")
 
-    def demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    p = bytes(payload or b"")
-                    tab = zip_member_table(p)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue  # skip row — the tar_members contract
-                for m in tab:
-                    md5 = None
-                    if (
-                        with_content_md5
-                        and m["method"] == 0
-                        and m["data_offset"] is not None
-                    ):
-                        md5 = hashlib.md5(
-                            p[m["data_offset"] :
-                              m["data_offset"] + m["comp_size"]]
-                        ).hexdigest()
-                    rows.append([
-                        i, m["member_idx"], m["name"], m["method"],
-                        m["comp_size"], m["uncomp_size"], m["crc32"],
-                        m["header_offset"], m["data_offset"], m["crc_ok"],
-                        md5,
-                    ])
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "member_idx", "name", "method",
-                         "comp_size", "uncomp_size", "crc32",
-                         "header_offset", "data_offset", "crc_ok",
-                         "content_md5"],
-            )
+    def walk(p: bytes) -> list[list]:
+        rows = []
+        for m in zip_member_table(p):
+            md5 = None
+            if (
+                with_content_md5
+                and m["method"] == 0
+                and m["data_offset"] is not None
+            ):
+                md5 = hashlib.md5(
+                    p[m["data_offset"] : m["data_offset"] + m["comp_size"]]
+                ).hexdigest()
+            rows.append([
+                m["member_idx"], m["name"], m["method"], m["comp_size"],
+                m["uncomp_size"], m["crc32"], m["header_offset"],
+                m["data_offset"], m["crc_ok"], md5,
+            ])
+        return rows
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        demux,
-        schema=(f"{id_col} {id_type}, member_idx int, name string, "
-                "method int, comp_size bigint, uncomp_size bigint, "
-                "crc32 bigint, header_offset bigint, data_offset bigint, "
-                "crc_ok boolean, content_md5 string"),
+    return map_payloads(
+        df, walk,
+        [("member_idx", "int"), ("name", "string"), ("method", "int"),
+         ("comp_size", "bigint"), ("uncomp_size", "bigint"),
+         ("crc32", "bigint"), ("header_offset", "bigint"),
+         ("data_offset", "bigint"), ("crc_ok", "boolean"),
+         ("content_md5", "string")],
+        id_col, payload_col,
     )

@@ -4345,7 +4345,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 #                 → histogram features are one-hot (bin 0 iff v<=31)
 #   odd  doc_id → constant-amplitude mono 8 kHz WAV, n=8*(1+id%4) samples
 #                 → per-segment RMS features are uniformly 1/sqrt(8)
-#   id%19==0    → deliberately corrupt payload → on_error="null" emits NULL
+#   id%19==0    → deliberately corrupt payload → the quarantine emits NULL
 #                 meta/features (sentinel-coalesced below: NULL ints would
 #                 materialize as float64 in pandas and break the hash).
 _MULTIMODAL_REAL_META_ORACLE = """
@@ -4383,7 +4383,7 @@ def multimodal_real_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder="real", and projected to header fields + feature invariants
     the DuckDB oracle derives in closed form. Every ~19th payload is
     corrupt on purpose, proving one bad asset yields a NULL row instead of
-    failing the task (on_error="null")."""
+    failing the task (the per-row quarantine)."""
     import numpy as np
     import pandas as pd
 
@@ -4456,7 +4456,7 @@ def multimodal_real_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   color_type   = {0,2,4,6}[id % 4]  (gray / RGB / gray+alpha / RGBA)
 #   constant px  v = id % 256, w = 1 + id % 6, h = 1 + id % 4
 #   id % 19 == 0 → TRUNCATED PNG (valid signature, torn chunk) → the
-#                  on_error="null" row-tolerance path, sentinel-coalesced.
+#                  per-row NULL quarantine, sentinel-coalesced.
 # A constant-v image's grayscale histogram is one-hot, so the oracle
 # derives the hot bin analytically: LEAST(FLOOR(v·8/255), 7) (exact —
 # v/255 can never tie a bin edge for 0<v<255 since 255∤8i).
@@ -8045,7 +8045,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   frame f is constant pixel v_f = (id + 17·f) % 256
 #   delay = (1 + id % 4) centiseconds → duration_ms = n_frames·delay·10
 #   id % 23 == 0 → TRUNCATED payload (valid signature, torn color table)
-#                  → the on_error="null" tolerance path, sentinel-coalesced.
+#                  → the per-row NULL quarantine, sentinel-coalesced.
 # Features hash the FIRST frame: constant v → one-hot 8-bin histogram,
 # hot bin = 1 + LEAST(FLOOR(v·8/255), 7) (exact — 255 ∤ 8i, no ties).
 _MULTIMODAL_GIF_META_ORACLE = """
@@ -8129,7 +8129,7 @@ def multimodal_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # actual video→frames→image-corpus pipeline. Synthesis:
 #   n_frames = 1 + id % 5, frame f constant v_f = (id + 17·f) % 256,
 #   w = 1 + id % 4, h = 1 + id % 3; id % 23 == 0 → torn payload whose
-#   rows are DROPPED by on_error="null" (the honest sampling contract:
+#   rows are DROPPED by the 1→N quarantine (the honest sampling contract:
 #   an undecodable video contributes no frames).
 # Constant frame → one-hot histogram: hot_bin = 1+LEAST(FLOOR(v·8/255),7).
 _VIDEO_FRAME_SAMPLE_REAL_ORACLE = """
@@ -8224,7 +8224,7 @@ def video_frame_sample_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   id % 5 == 0 → grayscale single-component JPEG, else RGB with
 #   id % 2 choosing 4:4:4 vs 4:2:0 chroma layout (both exact on a
 #   constant image); id % 23 == 0 → payload torn inside the APP0
-#   segment (SOI intact), decoded to NULL by on_error="null".
+#   segment (SOI intact), quarantined to a NULL row.
 # Constant image → one-hot 8-bin histogram: hot_bin = 1+LEAST(v·8/255,7).
 _MULTIMODAL_JPEG_META_ORACLE = """
 WITH base AS (
@@ -8789,7 +8789,7 @@ def pca_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   6 mp4 w=16·(1+i%4) h=9·(1+i%4) dur=100·(1+i%20) ms (timescale 1000)
 #   7 webp w=2+i%9 h=1+i%6, chunk kind by i%3 (VP8 lossy / VP8L
 #     lossless / VP8X-animated with 2+i%4 frames @40ms → video)
-#   i%23==0 → garbage payload → NULL container+meta (on_error="null").
+#   i%23==0 → garbage payload → NULL container+meta (the quarantine).
 # ---------------------------------------------------------------------------
 _MEDIA_PROBE_ORACLE = """
 WITH base AS (
@@ -9253,28 +9253,43 @@ def _synth_afp_wav_batches():
 
 def _synth_afp_wavs(docs: DataFrame) -> DataFrame:
     """doc_id -> deterministic block-constant PCM-16 WAV (see block
-    comment); every 23rd payload is garbage for the on_error path."""
+    comment); every 23rd payload is garbage for the quarantine path."""
     return spread_scan(docs.select("doc_id")).mapInPandas(
         _synth_afp_wav_batches(), schema="doc_id long, payload binary"
     )
 
 
-def _synth_afp_sigs(docs: DataFrame) -> DataFrame:
-    """WAV synthesis and energy fingerprinting fused into ONE
-    ``mapInPandas`` stage (guide §4): chaining ``_synth_afp_wavs`` into
-    ``audio_energy_sig`` as two Arrow stages round-trips every payload
-    Python→JVM→Python even though no shuffle sits between them. Same
-    bytes synthesized, same decode exercised, half the boundary
-    crossings — identical ``(doc_id, sig, b0..b3)`` output."""
-    from quickstart_streaming_agents_spark.operators.afp import sig_batch_fn
-
-    synth = _synth_afp_wav_batches()
-    sig = sig_batch_fn("doc_id", "payload", 256, 8, "null")
-    return spread_scan(docs.select("doc_id")).mapInPandas(
-        lambda batches: sig(synth(batches)),
-        schema=("doc_id long, sig string, b0 string, b1 string, "
-                "b2 string, b3 string"),
+def _fused_energy_sigs(
+    ids: DataFrame, synth, window_samples: int = 256
+) -> DataFrame:
+    """Payload synthesis (``synth``: doc_id batches → (doc_id, payload)
+    batches) and energy fingerprinting fused into ONE ``mapInPandas``
+    stage (guide §4): chaining the synth into ``audio_energy_sig`` as
+    two Arrow stages round-trips every payload Python→JVM→Python even
+    though no shuffle sits between them. Same bytes synthesized, same
+    decode exercised, half the boundary crossings — identical
+    ``(doc_id, sig, b0..b3)`` output."""
+    from quickstart_streaming_agents_spark.operators.afp import (
+        SIG_FIELDS,
+        energy_sig_rows,
     )
+    from quickstart_streaming_agents_spark.operators.payload import (
+        payload_ddl,
+        payload_rows,
+    )
+
+    sig = payload_rows(lambda p: energy_sig_rows(p, window_samples),
+                       SIG_FIELDS, fail_row=[None] * 5)
+    return ids.mapInPandas(
+        lambda batches: sig(synth(batches)),
+        schema=f"doc_id long, {payload_ddl(SIG_FIELDS)}",
+    )
+
+
+def _synth_afp_sigs(docs: DataFrame) -> DataFrame:
+    """``_synth_afp_wavs`` fused with the energy fingerprint."""
+    return _fused_energy_sigs(spread_scan(docs.select("doc_id")),
+                              _synth_afp_wav_batches())
 
 
 @query("audio_energy_sig", oracle=_AUDIO_SIG_ORACLE)
@@ -9309,7 +9324,7 @@ def audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # channel-0 extraction), odd chunk layouts every 5th doc. Channel-0
 # amplitudes reuse the AFP closed form under the 'm4a:' namespace so
 # DuckDB replays the signatures exactly; every 23rd payload is garbage
-# (NULL row, the on_error path). Compressed codecs (AAC/ALAC) remain
+# (NULL row, the quarantine path). Compressed codecs (AAC/ALAC) remain
 # the documented container-limited stub — PCM is the stdlib-feasible
 # decode slice.
 # ---------------------------------------------------------------------------
@@ -9322,7 +9337,7 @@ SELECT doc_id, NULL, NULL, NULL, NULL, NULL FROM d WHERE doc_id % 23 = 0
 
 def _synth_afp_mp4_batches():
     """The per-batch stereo PCM-16 MP4 synthesis body (see block
-    comment); every 23rd payload is garbage for the on_error path.
+    comment); every 23rd payload is garbage for the quarantine path.
     Returned as a batch generator so the query fuses it with the
     fingerprint computation in one Python stage."""
     import hashlib
@@ -9376,16 +9391,9 @@ def mp4_pcm_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint in operators/afp.py (map-only, zero shuffle;
     synth+fingerprint fused into one Python stage like
     ``_synth_afp_sigs``)."""
-    from quickstart_streaming_agents_spark.operators.afp import sig_batch_fn
-
     docs = load_table(spark, sf_dir, "documents")
-    synth = _synth_afp_mp4_batches()
-    sig = sig_batch_fn("doc_id", "payload", 256, 8, "null")
-    return spread_scan(docs.select("doc_id")).mapInPandas(
-        lambda batches: sig(synth(batches)),
-        schema=("doc_id long, sig string, b0 string, b1 string, "
-                "b2 string, b3 string"),
-    )
+    return _fused_energy_sigs(spread_scan(docs.select("doc_id")),
+                              _synth_afp_mp4_batches())
 
 
 # ---------------------------------------------------------------------------
@@ -9432,7 +9440,6 @@ def adpcm_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from quickstart_streaming_agents_spark.operators.afp import sig_batch_fn
     from quickstart_streaming_agents_spark.operators.multimodal import (
         make_wav_ima_adpcm,
     )
@@ -9469,12 +9476,7 @@ def adpcm_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
-    sig = sig_batch_fn("doc_id", "payload", 9, 8, "null")
-    return docs.mapInPandas(
-        lambda batches: sig(synth(batches)),
-        schema=("doc_id long, sig string, b0 string, b1 string, "
-                "b2 string, b3 string"),
-    )
+    return _fused_energy_sigs(docs, synth, window_samples=9)
 
 
 # ---------------------------------------------------------------------------
@@ -9650,7 +9652,7 @@ def mp3_id3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             payloads = []
             for i in ids:
                 if i % 23 == 0:
-                    # torn ID3 header (< 10 bytes): the on_error class —
+                    # torn ID3 header (< 10 bytes): the quarantine class —
                     # arbitrary non-ID3 bytes are NOT an error for a
                     # header-transparency probe (they're has_id3=false)
                     payloads.append(b"ID3\x04bad")
@@ -9725,6 +9727,12 @@ def webdataset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from quickstart_streaming_agents_spark.operators.multimodal import (
         make_jpeg,
     )
+    from quickstart_streaming_agents_spark.operators.payload import (
+        map_payloads,
+    )
+    from quickstart_streaming_agents_spark.operators.tar import (
+        tar_member_table,
+    )
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
     ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
@@ -9774,55 +9782,41 @@ def webdataset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
 
-    def decode(batches):
+    def walk(p: bytes) -> list[list]:
         from quickstart_streaming_agents_spark.operators.multimodal import (
             _decode_jpeg,
         )
-        from quickstart_streaming_agents_spark.operators.tar import (
-            tar_member_table,
-        )
 
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["doc_id"], pdf["payload"]):
+        samples: dict[str, dict] = {}
+        for m in tar_member_table(p):
+            key, _, ext = m["name"].partition(".")
+            body = p[m["content_offset"]:m["content_offset"] + m["size"]]
+            samples.setdefault(key, {})[ext] = body
+        rows = []
+        for key in sorted(samples):
+            parts = samples[key]
+            cap = parts.get("txt")
+            jpg = parts.get("jpg")
+            w = h = None
+            if jpg is not None:
                 try:
-                    p = bytes(payload or b"")
-                    tab = tar_member_table(p)
+                    meta, _ = _decode_jpeg(jpg)
+                    w, h = meta["width"], meta["height"]
                 except Exception:
-                    continue  # unwalkable shard: the on_error contract
-                samples: dict[str, dict] = {}
-                for m in tab:
-                    key, _, ext = m["name"].partition(".")
-                    body = p[m["content_offset"]:
-                             m["content_offset"] + m["size"]]
-                    samples.setdefault(key, {})[ext] = body
-                for key in sorted(samples):
-                    parts = samples[key]
-                    cap = parts.get("txt")
-                    jpg = parts.get("jpg")
-                    w = h = None
-                    if jpg is not None:
-                        try:
-                            meta, _ = _decode_jpeg(jpg)
-                            w, h = meta["width"], meta["height"]
-                        except Exception:
-                            jpg = None
-                    rows.append([
-                        i, key,
-                        hashlib.md5(cap).hexdigest() if cap is not None
-                        else None,
-                        jpg is not None, w, h,
-                    ])
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "sample_key", "caption_md5",
-                         "complete", "img_width", "img_height"],
-            )
+                    jpg = None
+            rows.append([
+                key,
+                hashlib.md5(cap).hexdigest() if cap is not None else None,
+                jpg is not None, w, h,
+            ])
+        return rows
 
-    return synth_df.mapInPandas(
-        decode,
-        schema=("doc_id long, sample_key string, caption_md5 string, "
-                "complete boolean, img_width int, img_height int"),
+    # an unwalkable shard emits no samples (the 1→N quarantine)
+    return map_payloads(
+        synth_df, walk,
+        [("sample_key", "string"), ("caption_md5", "string"),
+         ("complete", "boolean"), ("img_width", "int"),
+         ("img_height", "int")],
     )
 
 
@@ -9835,7 +9829,7 @@ def webdataset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # writer); the oracle replays names, sizes and the 30+len(name) local-
 # header prefix-sum offsets analytically. Per doc: 1 + doc_id%4 STORED
 # members with closed-form contents; every 23rd payload garbage
-# (skipped, the on_error path). Map-only 1→N.
+# (skipped, the quarantine path). Map-only 1→N.
 # ---------------------------------------------------------------------------
 _ZIP_ORACLE = r"""
 WITH d AS (
@@ -9924,7 +9918,7 @@ def zip_member_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # analytically. Per doc: 1 + doc_id%4 WebDataset samples × 2 members
 # (s{k}.txt payload + s{k}.cls label, the img2dataset layout), text
 # sizes up to ~1 KB so multi-block rounding is exercised; every 23rd
-# payload garbage (skipped, the on_error path). Map-only 1→N.
+# payload garbage (skipped, the quarantine path). Map-only 1→N.
 # ---------------------------------------------------------------------------
 _TAR_ORACLE = r"""
 WITH d AS (
@@ -10148,7 +10142,6 @@ def g711_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pandas as pd
 
-    from quickstart_streaming_agents_spark.operators.afp import sig_batch_fn
     from quickstart_streaming_agents_spark.operators.multimodal import (
         make_wav_g711,
     )
@@ -10175,12 +10168,7 @@ def g711_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ))
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
-    sig = sig_batch_fn("doc_id", "payload", 256, 8, "null")
-    return docs.mapInPandas(
-        lambda batches: sig(synth(batches)),
-        schema=("doc_id long, sig string, b0 string, b1 string, "
-                "b2 string, b3 string"),
-    )
+    return _fused_energy_sigs(docs, synth)
 
 
 # ---------------------------------------------------------------------------
@@ -10192,7 +10180,7 @@ def g711_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 # STRINGS and prefix-summing their lengths (ASCII content, so chars ==
 # bytes) — a walker bug cannot hide behind its own synthesizer.
 # Per doc: 1 + doc_id%4 records, md5-derived payload pads, every 23rd
-# payload garbage (skipped rows, the on_error path). Map-only 1→N.
+# payload garbage (skipped rows, the quarantine path). Map-only 1→N.
 # ---------------------------------------------------------------------------
 _WARC_ORACLE = r"""
 WITH d AS (
@@ -10435,7 +10423,7 @@ def exif_display_dims_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # extra bytes, 40 ms cadence; odd doc_ids split samples across two
 # chunks (exercising the stsc/stco run logic — offsets differ but the
 # contiguous layout keeps the SQL prefix-sum-free); every 23rd payload
-# is garbage and demuxes to nothing (the on_error "null" path).
+# is garbage and demuxes to nothing (the 1→N quarantine).
 # ---------------------------------------------------------------------------
 _MP4_DEMUX_ORACLE = r"""
 WITH d AS (
@@ -10511,7 +10499,7 @@ def mp4_demux_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 # docs with doc_id%3 != 0 get ONE pixel perturbed by (doc_id%5)*37 at
 # (doc_id%8, doc_id%9) — a single pixel flips <= 2 dHash bits, so
 # same-base pairs span hamming 0..4, straddling the <= 3 threshold;
-# every 23rd payload is garbage (NULL bands, kept — the on_error
+# every 23rd payload is garbage (NULL bands, kept — the quarantine
 # contract). DuckDB replays pixels, bits, band packing, the banded
 # self-join (with the hot-bucket cap), bit_count(xor) Hamming, and the
 # min-id keeper rule integer-for-integer.
@@ -10622,7 +10610,7 @@ def _synth_phash_bmp_batches():
 
 def _synth_phash_bmps(docs: DataFrame) -> DataFrame:
     """doc_id -> deterministic 8x9 gray BMP payload (see block comment);
-    every 23rd payload is garbage for the on_error path."""
+    every 23rd payload is garbage for the quarantine path."""
     return docs.select("doc_id").mapInPandas(
         _synth_phash_bmp_batches(), schema="doc_id long, payload binary"
     )
@@ -10640,18 +10628,23 @@ def _synth_phash_hashes(docs: DataFrame, spread: bool = True) -> DataFrame:
     consumer jobs measured ~25% SLOWER than the single-task fill
     (interleaved A/B 3.07 vs 2.46 s; the audio tier measures the
     OPPOSITE because its per-clip python work dominates)."""
+    from quickstart_streaming_agents_spark.operators.payload import (
+        payload_ddl,
+        payload_rows,
+    )
     from quickstart_streaming_agents_spark.operators.phash import (
-        dhash_batch_fn,
+        DHASH_FIELDS,
+        dhash_rows,
     )
 
     synth = _synth_phash_bmp_batches()
-    dhash = dhash_batch_fn("doc_id", "payload", "null")
+    dhash = payload_rows(dhash_rows, DHASH_FIELDS, fail_row=[None] * 4)
     ids = docs.select("doc_id")
     if spread:
         ids = spread_scan(ids)
     return ids.mapInPandas(
         lambda batches: dhash(synth(batches)),
-        schema="doc_id long, b0 long, b1 long, b2 long, b3 long",
+        schema=f"doc_id long, {payload_ddl(DHASH_FIELDS)}",
     )
 
 
@@ -14385,138 +14378,16 @@ def ivf_index_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Driver-verification rotation (round 11). The correctness harness
-# oracle-checks the FIRST 50 registry entries each round. Round 10's
-# rotation was accidentally left at the r9 list, so its window (and
-# CORRECTNESS_r10.json) byte-matched r9's — which also proved the r10
-# bare-unnest oracle restructure did NOT cure the classifier pair.
-# This window leads with (a) the classifier bisect instruments + the
-# 4-rounds-red pair itself (r11 change: every aggregate reaching a
-# result schema is CAST to BIGINT — DuckDB sum(BIGINT) silently widens
-# to HUGEINT, the one result-type difference left vs the green family;
-# quality_classifier_digest_only adds a VARCHAR-only axis — see its
-# block comment for the decision table), then (b) every query that has
-# NEVER had a driver row (the round-10 additions), then (c) the 17
-# rows whose last driver check is round 6 (VERDICT r9 "What's wrong"
-# #3), then (d) the seven round-11 additions (waiting_suppliers — the most
-# change-isolated pure-JVM stale row, parity-pinned in-repo every run —
-# plus topk_per_group_salted and series_correlation yield their slots
-# to the crawl-frontier capstone, the anchor-text index and the dedup
-# savings report; those three stale rows lead the r12 refresh list).
-#
-# r12 window (THIS round, executed as documented by the r11 queue):
-# (a) the three r6-vintage rows that yielded their r11 slots
-# (waiting_suppliers, topk_per_group_salted, series_correlation),
-# then (b) the 14 round-11b additions awaiting their FIRST official
-# driver row (all already driver-contract-verified at sf0.01 via the
-# /verify simulator in r11 and re-swept this round — VERIFY_r12.log),
-# then (c) 33 of the 42 r7-vintage rows — including the flagship
-# training_data_pipeline and the two redesigned-in-r12 entries
-# pca_project / anomaly_detect_ar (now hash-checkable; VERDICT r11
-# "What's wrong" #3). The 9 r7 rows deferred to r13 are the most
-# change-isolated pure-TPC-H SQL rows (filter_project,
-# important_parts, nation_market_share, nation_profit,
-# nation_trade_volume, part_supplier_variety, small_quantity_revenue,
-# excess_quota_suppliers, dormant_customer_balance — no custom
-# operator in any of their plans, parity-pinned in-repo every run);
-# they lead the r13 refresh queue, followed by script_sql_chain (added
-# late in r12 — never driver-checked, simulator-verified in
-# VERIFY_r12.log's addendum) and the 44 r8-vintage rows.
-#
-# r13 window (THIS round, executed as documented by the r12 queue):
-# (a) the 9 deferred pure-TPC-H r7 rows, then (b) the three entries
-# awaiting their FIRST official driver row — script_sql_chain (r12) and
-# the two r13 lab walkthrough chains lab3_chain/lab4_chain (which take
-# two of the 44 planned r8 slots; all three driver-contract-verified at
-# sf0.01 via the /verify simulator this round), then (c) 38 of the 44
-# r8-vintage rows. The 6 r8 rows deferred to r14 are named in the (c)
-# comment below. This retires all r7 rows and all but 6 r8 rows; with
-# the 50-slot window and 204 registered queries, staleness floor is now
-# r8 for exactly those 6.
-#
-# r14 queue (documented ahead, the standing convention): (a) the 6
-# deferred r8 rows above, (b) the two queries registered late in r13 and
-# never driver-sampled — ml_predict_cached (the cached-inference
-# operator) and ivf_index_upsert (the ANN-freshness monitor), both
-# simulator-verified at sf0.001/0.01/0.1 and in VERIFY_r13.log's final
-# 206-query sweep — then (c) the r10-vintage rows, oldest first.
-#
-# r14 window (THIS round, executed below as _R14_CHECK_FIRST, exactly as
-# the r13 queue documented): (a) the 6 deferred r8 TPC-H rows, (b) first
-# official driver rows for ml_predict_cached / ivf_index_upsert, (c) 42
-# of the 48 r10-vintage rows in registry order — biased to include every
-# r10-vintage row whose plan the r14 optimization round touched (the
-# spread_scan ids-spread sites and the dedup/retrieval rework). The 6
-# r10 rows deferred to r15 are the change-isolated pure-JVM event-window
-# set (tumble_5m_agg, session_window_agg, sliding_window_agg,
-# surge_enriched, scd2_merge, investigation_queue — no r14-touched
-# operator in any of their plans); they lead the r15 refresh queue,
-# followed by the r11-vintage rows oldest-first.
+# Driver-verification rotation. The external correctness driver
+# oracle-checks only the FIRST 50 registry entries each round, so the
+# registry is reordered to lead with the rows whose last driver check is
+# oldest. The current window (r15): (a) the 6 r10 rows deferred by the
+# previous window, then (b) 44 of the 50 r11-vintage rows in registry
+# order. The 6 r11 rows left out are change-isolated pure-JVM
+# agg/window/sampling rows (stratified_sample, value_percentiles,
+# gap_fill_locf, props_json_agg, events_rollup, dataset_split); they
+# lead the next window, followed by the r12-vintage rows oldest-first.
 # ---------------------------------------------------------------------------
-_R13_CHECK_FIRST = [
-    # (a) the 9 deferred pure-TPC-H r7 rows (see comment above)
-    "filter_project",
-    "important_parts",
-    "nation_market_share",
-    "nation_profit",
-    "nation_trade_volume",
-    "part_supplier_variety",
-    "small_quantity_revenue",
-    "excess_quota_suppliers",
-    "dormant_customer_balance",
-    # (b) first official driver rows: the r12 script-surface capstone and
-    # the two r13 lab walkthrough chains
-    "script_sql_chain",
-    "lab3_chain",
-    "lab4_chain",
-    # (c) 38 of the 44 r8-vintage rows; the 6 deferred to r14 are the most
-    # change-isolated pure-SQL TPC-H rows (large_volume_orders,
-    # late_shipment_priority, local_supplier_volume, min_cost_supplier,
-    # promo_revenue_share, returned_item_customers — no custom operator in
-    # any of their plans, parity-pinned in-repo every run); they lead the
-    # r14 refresh queue.
-    "ann_pq_adc_topk",
-    "ann_sq8_topk",
-    "bigram_backoff_score",
-    "bloom_decontamination",
-    "bm25_search",
-    "cms_heavy_hitters",
-    "cumulate_agg",
-    "curation_funnel",
-    "data_quality_report",
-    "edit_distance_dedup",
-    "event_funnel",
-    "events_cube",
-    "events_pivot",
-    "exact_k_per_stratum",
-    "forecast_revenue_change",
-    "image_dhash",
-    "image_phash_dedup",
-    "label_centroids",
-    "link_pagerank",
-    "media_probe_meta",
-    "mp4_demux_samples",
-    "multimodal_gif_meta",
-    "multimodal_jpeg_meta",
-    "pca_moments",
-    "pricing_summary",
-    "rag_pipeline",
-    "rolling_active_users",
-    "semantic_dedup",
-    "semi_anti_customers",
-    "shipping_priority",
-    "temperature_mix",
-    "token_entropy_score",
-    "trending_per_window",
-    "url_canonical_dedup",
-    "user_set_ops",
-    "value_histogram",
-    "verdict_parse",
-    "zorder_key",
-]
-
-
-
 def _rotate(reg: dict, front: list[str]) -> dict:
     # a stale rotation name must fail loudly at import, not silently shrink
     # the driver-checked window (since r12 every entry has an oracle, so
@@ -14530,74 +14401,6 @@ def _rotate(reg: dict, front: list[str]) -> dict:
     return out
 
 
-_R14_CHECK_FIRST = [
-    # (a) the 6 r8 TPC-H rows deferred by the r13 rotation
-    "large_volume_orders",
-    "late_shipment_priority",
-    "local_supplier_volume",
-    "min_cost_supplier",
-    "promo_revenue_share",
-    "returned_item_customers",
-    # (b) first official driver rows for the two late-r13 registrations
-    "ml_predict_cached",
-    "ivf_index_upsert",
-    # (c) 42 of the 48 r10-vintage rows, registry order (the 6 deferred
-    # to r15 are named in the queue comment above)
-    "enriched_orders",
-    "anomaly_detect_ar2",
-    "agent_price_match",
-    "dedup_exact",
-    "ngram_jaccard_dedup",
-    "dedup_components",
-    "minhash_lsh_dedup",
-    "simhash_dedup",
-    "line_dedup_clean",
-    "hard_negative_mining",
-    "embedding_topk_pairs",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "lang_id_ngram",
-    "curation_pipeline",
-    "sequence_packing",
-    "packing_efficiency",
-    "rag_ingest",
-    "repetition_filter",
-    "pii_redaction",
-    "decontamination",
-    "contamination_fraction",
-    "script_detect_profile",
-    "pii_credit_card_audit",
-    "multimodal_meta",
-    "multimodal_features",
-    "multimodal_real_meta",
-    "video_frame_sample",
-    "counts_dashboard",
-    "hll_distinct_sketch",
-    "incremental_ingest_dedup",
-    "gzip_text_ingest",
-    "badwords_filter",
-    "unicode_normalize_clean",
-    "mp3_demux_frames",
-    "audio_energy_sig",
-    "audio_near_dup",
-    "mp4_pcm_energy_sig",
-    "warc_record_index",
-    "jpeg_exif_meta",
-    "span_corruption_pairs",
-    "ann_ivfpq_topk",
-]
-
-# r15 window (THIS round, executed below as _R15_CHECK_FIRST, exactly as
-# the r14 queue documented): (a) the 6 r10 rows deferred by the r14
-# rotation (the change-isolated pure-JVM event-window set), then (b) 44
-# of the 50 r11-vintage rows in registry order — biased to include every
-# r11-vintage row whose plan this round touched (the dedup/prefix/
-# containment tier and the Python-boundary families). The 6 r11 rows
-# deferred to r16 are the change-isolated pure-JVM agg/window/sampling
-# set (stratified_sample, value_percentiles, gap_fill_locf,
-# props_json_agg, events_rollup, dataset_split — no r15-touched operator
-# in any of their plans); they lead the r16 refresh queue, followed by
-# the r12-vintage rows oldest-first.
 _R15_CHECK_FIRST = [
     # (a) the 6 r10 rows deferred by the r14 rotation
     "tumble_5m_agg",

@@ -9,6 +9,7 @@ from quickstart_streaming_agents_spark.operators.afp import (
     audio_dedup,
     audio_energy_sig,
     audio_near_dup_pairs,
+    energy_sig_rows,
     energy_signature_py,
 )
 from quickstart_streaming_agents_spark.operators.multimodal import make_wav
@@ -40,8 +41,8 @@ def test_audio_sig_spark_and_error_tolerance(spark):
     assert got[1] == ":".join(["28"] * 8)
     assert got[2] == ":".join(["0"] * 8)
     assert got[3] is None
-    with pytest.raises(Exception):
-        audio_energy_sig(df, on_error="raise").collect()
+    with pytest.raises(ValueError, match="RIFF/WAVE"):
+        energy_sig_rows(b"not a wav")
     with pytest.raises(ValueError, match="n_windows"):
         audio_energy_sig(df, n_windows=6)
 

@@ -68,10 +68,6 @@ def test_exif_meta_spark_surface(spark):
             got[1].has_exif) == (6, "A", "B", True)
     assert got[2].has_exif is False and got[2].orientation is None
     assert got[3].has_exif is None  # quarantine row
-    with pytest.raises(Exception):
-        exif_meta(df, on_error="raise").collect()
-    with pytest.raises(ValueError, match="on_error"):
-        exif_meta(df, on_error="bad")
 
 
 def test_exif_display_dims_orientation_swap(spark):

@@ -6,7 +6,7 @@ hand-assembled hex payloads (not produced by the sibling encoders), then
 round-trip the ``make_bmp``/``make_wav`` encoders through the decoders,
 check ``_real_features`` on analytically-known inputs, and drive the
 ``decoder="real"`` mapInPandas path end to end — including the per-row
-``on_error="null"`` tolerance (one corrupt asset must NOT fail the job).
+NULL-row quarantine (one corrupt asset must NOT fail the job).
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from quickstart_streaming_agents_spark.operators.multimodal import (
     _decode_bmp,
     _decode_png,
     _decode_wav,
+    _real_decode,
     _real_features,
     extract_media_features,
     make_bmp,
@@ -163,8 +164,7 @@ def test_decoder_real_spark_end_to_end_with_error_tolerance(spark):
     assert out[1].f0 is None and out[2].f0 is None
 
     with pytest.raises(Exception, match="BMP"):
-        extract_media_features(df, "payload", media_type="image",
-                               decoder="real", on_error="raise").collect()
+        _real_decode(b"corrupt payload", "image")
 
 
 def test_decoder_real_audio_spark(spark):
@@ -372,7 +372,7 @@ def test_decoder_real_video_gif_spark(spark):
     """media_type='video' + animated GIF through the production
     mapInPandas path: real n_frames/duration decode, histogram features
     over the first frame, non-GIF video payload lands on the
-    NotImplementedError → on_error='null' tolerance path."""
+    NotImplementedError → NULL-row quarantine."""
     from quickstart_streaming_agents_spark.operators.multimodal import (
         extract_media_features,
         make_gif,
@@ -398,9 +398,10 @@ def test_decoder_real_video_gif_spark(spark):
 
 def test_sample_frames_real_gif(spark):
     """Real frame sampling: every_nth GIF frames re-encoded as standalone
-    PNGs (each decodable by the image path), torn payloads dropped by
-    on_error='null', propagated by on_error='raise'."""
+    PNGs (each decodable by the image path); a torn payload, whose GIF
+    decode raises, emits no frame rows."""
     from quickstart_streaming_agents_spark.operators.multimodal import (
+        _decode_gif,
         _decode_png,
         make_gif,
         sample_frames,
@@ -419,8 +420,7 @@ def test_sample_frames_real_gif(spark):
         assert (arr == frames[r.frame_idx]).all()
 
     with pytest.raises(Exception):
-        sample_frames(df, "payload", every_nth=2, decoder="real",
-                      on_error="raise").collect()
+        _decode_gif(good[:15], media_type="video", collect_all=True)
 
 
 def test_sample_frame_features_matches_chained_operators(spark):
@@ -464,8 +464,8 @@ def test_sample_frame_features_matches_chained_operators(spark):
     for (_, _, f_feats), (_, _, c_feats) in zip(fused, chained_rows):
         assert c_feats == f_feats
 
-    # torn payload: the body raises; sample_frames' on_error policy
-    # is the caller's job (the query drops the doc)
+    # torn payload: the body raises; quarantining it is the caller's
+    # job (the query drops the doc, as sample_frames does)
     with pytest.raises(Exception):
         sample_frame_features(good[:15], every_nth=2)
 
@@ -691,8 +691,6 @@ def test_probe_media_spark_mixed_corpus(spark):
     assert out[2].container == "mp3" and out[2].media_meta.n_frames == 6
     assert out[3].container == "mp4" and out[3].media_meta.duration_ms == 1500
     assert out[4].container is None and out[4].media_meta is None
-    with pytest.raises(Exception):
-        probe_media(df, "payload", on_error="raise").collect()
 
 
 def test_jpeg_fill_bytes_before_marker():
@@ -778,15 +776,18 @@ def test_demux_mp4_samples_spark(spark):
     from quickstart_streaming_agents_spark.operators.multimodal import (
         demux_mp4_samples,
         make_mp4,
+        mp4_sample_table,
     )
     from quickstart_streaming_agents_spark.session import ship_package
 
     ship_package(spark)
+    three = make_mp4(16, 9, 120, samples=[b"aa", b"bbb", b"c"])
     rows = [
-        (1, bytearray(make_mp4(16, 9, 120, samples=[b"aa", b"bbb", b"c"]))),
+        (1, bytearray(three)),
         (2, bytearray(make_mp4(16, 9, 80, samples=[b"dd", b"e"],
                                two_chunks=True))),
         (3, b"not an mp4"),
+        (4, bytearray(three[:-1])),  # last sample's range runs past EOF
     ]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {(r.doc_id, r.sample_idx): (r.dts_ms, r.sample_size, r.sample_md5)
@@ -798,12 +799,15 @@ def test_demux_mp4_samples_spark(spark):
         (1, 2): (80, 1, hashlib.md5(b"c").hexdigest()),
         (2, 0): (0, 2, hashlib.md5(b"dd").hexdigest()),
         (2, 1): (40, 1, hashlib.md5(b"e").hexdigest()),
+        (4, 0): (0, 2, hashlib.md5(b"aa").hexdigest()),
+        (4, 1): (40, 3, hashlib.md5(b"bbb").hexdigest()),
     }
-    assert got == want  # doc 3 demuxes to nothing (on_error="null")
-    # every_nth skips; on_error="raise" propagates
-    assert demux_mp4_samples(df, every_nth=2).count() == 3
-    with pytest.raises(Exception):
-        demux_mp4_samples(df, on_error="raise").collect()
+    # doc 3 demuxes to nothing (its walk raises); doc 4 loses only the
+    # past-EOF sample
+    assert got == want
+    assert demux_mp4_samples(df, every_nth=2).count() == 4
+    with pytest.raises(ValueError):
+        mp4_sample_table(b"not an mp4")
     with pytest.raises(ValueError, match="every_nth"):
         demux_mp4_samples(df, every_nth=0)
 
@@ -989,6 +993,7 @@ def test_decompress_text_roundtrip_zlib_and_unicode(spark):
     from pyspark.sql import Row
 
     from quickstart_streaming_agents_spark.operators.compress import (
+        _bounded_inflate,
         decompress_text,
         gzip_compress,
     )
@@ -1012,22 +1017,23 @@ def test_decompress_text_roundtrip_zlib_and_unicode(spark):
     assert got[5].text is None
     # determinism of the synth side: pinned mtime -> identical bytes
     assert gzip_compress("x") == gzip_compress("x")
-    import pytest
-
-    with pytest.raises(Exception):  # torn member -> job failure
-        decompress_text(df, on_error="raise").collect()
+    with pytest.raises(Exception):  # torn member: the decode raises
+        _bounded_inflate(gzip_compress("torn")[:8], 16 + zlib.MAX_WBITS,
+                         1 << 20)
 
 
 def test_decompress_text_bounds_decompression_bombs(spark):
     """ADVICE r8: the gzip tier fronts UNTRUSTED web payloads — a
-    64 MB-of-zeros member (≈64 KB compressed) must quarantine through
-    the on_error path at a bounded memory cost, never inflate fully.
+    64 MB-of-zeros member (≈64 KB compressed) must quarantine its row
+    at a bounded memory cost, never inflate fully.
     Multi-member concatenation draws on the same per-row budget."""
     import gzip as _gzip
+    import zlib
 
     from pyspark.sql import Row
 
     from quickstart_streaming_agents_spark.operators.compress import (
+        _bounded_inflate,
         decompress_text,
         gzip_compress,
     )
@@ -1051,8 +1057,8 @@ def test_decompress_text_bounds_decompression_bombs(spark):
 
     import pytest
 
-    with pytest.raises(Exception):
-        decompress_text(df, max_bytes=1000, on_error="raise").collect()
+    with pytest.raises(ValueError, match="exceeds cap"):
+        _bounded_inflate(bomb, 16 + zlib.MAX_WBITS, 1000)
     with pytest.raises(ValueError, match="max_bytes"):
         decompress_text(df, max_bytes=0)
 
@@ -1188,6 +1194,7 @@ def test_id3_meta_spark_surface(spark):
 
     from quickstart_streaming_agents_spark.operators.multimodal import (
         id3_meta,
+        id3_tags,
         make_id3v2,
         make_mp3,
     )
@@ -1204,10 +1211,8 @@ def test_id3_meta_spark_surface(spark):
     assert got[1].id3_version == 4
     assert got[2].has_id3 is False and got[2].title is None
     assert got[3].has_id3 is None
-    import pytest
-
-    with pytest.raises(Exception):
-        id3_meta(spark.createDataFrame(rows), on_error="raise").collect()
+    with pytest.raises(ValueError):
+        id3_tags(b"ID3\x04bad")
 
 
 def test_id3v2_extended_header_skipped():
@@ -1260,6 +1265,7 @@ def test_sniff_decompress_text_all_codecs(spark):
     from pyspark.sql import Row
 
     from quickstart_streaming_agents_spark.operators.compress import (
+        _bounded_stdlib_inflate,
         gzip_compress,
         sniff_decompress_text,
     )
@@ -1283,13 +1289,9 @@ def test_sniff_decompress_text_all_codecs(spark):
     assert (got[4].codec, got[4].text) == ("plain", t)
     assert got[5].codec == "bz2" and got[5].text is None
     assert got[6].codec == "plain" and got[6].text is None
-    import pytest
-
-    with pytest.raises(Exception):
-        sniff_decompress_text(
-            spark.createDataFrame(rows), on_error="raise").collect()
-    with pytest.raises(ValueError, match="on_error"):
-        sniff_decompress_text(spark.createDataFrame(rows), on_error="x")
+    with pytest.raises(OSError):  # the torn bzip2 member's decode
+        _bounded_stdlib_inflate(bz2.BZ2Decompressor(),
+                                b"BZh9torn-bzip-member", 1 << 20)
 
 
 def test_sniff_decompress_bombs_bounded_every_codec(spark):

@@ -1,0 +1,82 @@
+"""The payload-walker boundary (operators/payload.py): quarantine of a
+failing walk, id-type round-trip, and NULL-payload handling."""
+
+from __future__ import annotations
+
+import pandas as pd
+
+from quickstart_streaming_agents_spark.operators.payload import (
+    map_payloads,
+    payload_rows,
+)
+
+FIELDS = [("n", "bigint"), ("text", "string")]
+BIG = 1 << 62  # past float64's exact-integer range
+
+
+def _walk(p: bytes) -> list[list]:
+    if p == b"bad":
+        raise ValueError("corrupt payload")
+    return [[BIG + len(p), p.decode()]]
+
+
+def test_failing_walk_quarantines_only_its_payload(spark):
+    df = spark.createDataFrame(
+        [("a", b"xy"), ("b", b"bad"), ("c", b"z")],
+        "doc_id string, payload binary",
+    )
+    one_to_one = map_payloads(df, _walk, FIELDS, fail_row=[None, None])
+    assert one_to_one.schema["doc_id"].dataType.simpleString() == "string"
+    assert sorted(one_to_one.collect()) == [
+        ("a", BIG + 2, "xy"), ("b", None, None), ("c", BIG + 1, "z"),
+    ]
+    one_to_n = map_payloads(df, _walk, FIELDS)
+    assert sorted(one_to_n.collect()) == [
+        ("a", BIG + 2, "xy"), ("c", BIG + 1, "z"),
+    ]
+
+
+def test_null_payload_walks_as_empty_bytes_unless_null_fails():
+    seen = []
+
+    def walk(p: bytes) -> list[list]:
+        seen.append(p)
+        return [[len(p), "x"]]
+
+    pdf = pd.DataFrame({"doc_id": [1, 2], "payload": [None, b"ab"]})
+    [out] = payload_rows(walk, FIELDS, fail_row=[None, None])(iter([pdf]))
+    assert seen == [b"", b"ab"]
+    assert out["n"].tolist() == [0, 2]
+
+    seen.clear()
+    [out] = payload_rows(walk, FIELDS, fail_row=[None, None],
+                         null_fails=True)(iter([pdf]))
+    assert seen == [b"ab"]
+    assert out["n"].isna().tolist() == [True, False]
+
+
+def test_operators_keep_their_null_payload_result(spark):
+    from quickstart_streaming_agents_spark.operators.compress import (
+        decompress_text,
+        sniff_decompress_text,
+    )
+    from quickstart_streaming_agents_spark.operators.flac import (
+        flac_stream_meta,
+    )
+    from quickstart_streaming_agents_spark.operators.multimodal import (
+        id3_meta,
+    )
+    from quickstart_streaming_agents_spark.operators.warc import warc_records
+
+    df = spark.createDataFrame([(1, None)], "doc_id long, payload binary")
+    # walked as b"": an asset with no ID3 tag
+    [r] = id3_meta(df).collect()
+    assert (r.has_id3, r.title) == (False, None)
+    # quarantined: b"" would decode as an empty plain-text payload
+    [r] = sniff_decompress_text(df).collect()
+    assert (r.codec, r.text, r.n_bytes) == (None, None, None)
+    [r] = decompress_text(df).collect()
+    assert (r.text, r.digest) == (None, None)
+    [r] = flac_stream_meta(df).collect()
+    assert (r.is_flac, r.sample_rate) == (False, None)
+    assert warc_records(df).count() == 0

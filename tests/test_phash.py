@@ -22,6 +22,7 @@ from quickstart_streaming_agents_spark.operators.phash import (
     dhash_bands_py,
     dhash_grid,
     dhash_images,
+    dhash_rows,
     phash_dedup,
     phash_near_dup_pairs,
 )
@@ -85,9 +86,9 @@ def test_dhash_cross_container_invariant(spark):
     got = {r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
            for r in dhash_images(df).collect()}
     assert got[0] == got[1] == got[2]
-    assert got[3] == (None, None, None, None)  # on_error="null"
-    with pytest.raises(Exception):
-        dhash_images(df, on_error="raise").collect()
+    assert got[3] == (None, None, None, None)  # quarantine row
+    with pytest.raises(ValueError):
+        dhash_rows(b"not an image")
 
 
 def _hash_df(spark, rows):
@@ -147,6 +148,6 @@ def test_dhash_handles_images_smaller_than_grid(spark):
     rows = [(1, make_bmp(tiny)), (2, make_bmp(np.full((2, 3, 3), 9, np.uint8)))]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
     got = {r.doc_id: (r.b0, r.b1, r.b2, r.b3)
-           for r in dhash_images(df, on_error="raise").collect()}
+           for r in dhash_images(df).collect()}
     assert None not in got[1] and None not in got[2]
     assert got[2] == (0, 0, 0, 0)  # constant image -> no gradients

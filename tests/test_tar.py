@@ -103,7 +103,3 @@ def test_spark_surface_and_on_error(spark):
     ]
     md5s = {r.name: r.content_md5 for r in got}
     assert md5s["s0.txt"] == hashlib.md5(b"payload").hexdigest()
-    with pytest.raises(Exception):
-        tar_members(df, on_error="raise").collect()
-    with pytest.raises(ValueError, match="on_error"):
-        tar_members(df, on_error="bogus")

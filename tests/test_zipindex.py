@@ -127,14 +127,12 @@ def test_spark_surface_and_on_error(spark):
     md5s = {r.name: r.content_md5 for r in got}
     assert md5s["s0.txt"] == hashlib.md5(b"payload").hexdigest()
     assert all(r.crc_ok for r in got)
-    with pytest.raises(Exception):
-        zip_members(df, on_error="raise").collect()
 
 
 def test_zip64_sentinels_quarantine():
     """EOCD ZIP64 sentinel fields (entry count 0xFFFF, cd offset/size
     0xFFFFFFFF) mean the real values live in the unparsed ZIP64 EOCD —
-    the walk must raise (→ on_error quarantine), not misparse
+    the walk must raise (→ payload quarantine), not misparse
     (ADVICE r10)."""
     p = _make([("a.txt", b"q" * 64)])
     eocd = p.rfind(b"PK\x05\x06")

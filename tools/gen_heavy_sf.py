@@ -107,6 +107,26 @@ def _permute_text(texts: list[str], r: int, vocab: list[str]) -> list[str]:
     return out
 
 
+def _check_renaming(vocab: list[str], replicas: int) -> None:
+    """Raise ``ValueError`` if the suffix renaming would merge two
+    distinct tokens: a replica's renamed token equal to a source token
+    (``ab`` in replica 1 becomes ``ab1``, already a source token) or to
+    another replica's renamed token. A merge would silently add
+    cross-token shingle matches the sf0.1 structure does not have."""
+    owner = dict.fromkeys(vocab, "the source vocabulary")
+    for r in range(1, replicas):
+        for t in vocab:
+            if t in _FIXED_TOKENS:
+                continue
+            renamed = f"{t}{r}"
+            if renamed in owner:
+                raise ValueError(
+                    f"replica {r} renames {t!r} to {renamed!r}, which is "
+                    f"already a token of {owner[renamed]}"
+                )
+            owner[renamed] = f"replica {r}"
+
+
 def _transform_embeddings(mat: np.ndarray, r: int) -> np.ndarray:
     """Per-replica isometry: dim permutation + sign flips (float32-exact)."""
     d = mat.shape[1]
@@ -138,6 +158,7 @@ def generate(src: str, out: str, replicas: int) -> None:
                 seen.add(tok)
                 vocab.append(tok)
     vocab.sort()
+    _check_renaming(vocab, replicas)
 
     for name, keys in _KEY_DOMAINS.items():
         t = pq.read_table(os.path.join(src, f"{name}.parquet"))
