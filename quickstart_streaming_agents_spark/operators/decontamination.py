@@ -22,7 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-
 def _norm_shingle_hashes(
     df: DataFrame,
     id_col: str,
@@ -57,6 +56,23 @@ def _norm_shingle_hashes(
     return d.select("doc_id", *extra, F.explode(grams).alias("h"))
 
 
+def _bench_shingle_set(benchmark: DataFrame, text_col: str, n: int) -> DataFrame:
+    """The benchmark side of every decontamination rule: the DISTINCT
+    ``h`` set of all benchmark texts' shingles, pooled under one id."""
+    return (
+        _norm_shingle_hashes(
+            benchmark.select(
+                F.lit(0).alias("__bid"), F.col(text_col).alias("__btext")
+            ),
+            "__bid",
+            "__btext",
+            n,
+        )
+        .select("h")
+        .distinct()
+    )
+
+
 def contamination_flags(
     df: DataFrame,
     benchmark: DataFrame,
@@ -73,19 +89,7 @@ def contamination_flags(
     tokens emit no shingles and can never match — the standard contract.
     """
     corp = _norm_shingle_hashes(df, id_col, text_col, n)
-    bench = (
-        _norm_shingle_hashes(
-            benchmark.select(
-                F.lit(0).alias("__bid"),
-                F.col(bench_text_col or text_col).alias("__btext"),
-            ),
-            "__bid",
-            "__btext",
-            n,
-        )
-        .select("h")
-        .distinct()
-    )
+    bench = _bench_shingle_set(benchmark, bench_text_col or text_col, n)
     if broadcast_benchmark:
         bench = F.broadcast(bench)
     # _norm_shingle_hashes emits DISTINCT hashes per doc, so a plain count
@@ -143,20 +147,9 @@ def contamination_fraction(
     if not 0 <= threshold_pct <= 100:
         raise ValueError(f"threshold_pct must be 0..100, got {threshold_pct}")
     corp = _norm_shingle_hashes(df, id_col, text_col, n)
-    bench = (
-        _norm_shingle_hashes(
-            benchmark.select(
-                F.lit(0).alias("__bid"),
-                F.col(bench_text_col or text_col).alias("__btext"),
-            ),
-            "__bid",
-            "__btext",
-            n,
-        )
-        .select("h")
-        .distinct()
-        .withColumn("__m", F.lit(1))
-    )
+    bench = _bench_shingle_set(
+        benchmark, bench_text_col or text_col, n
+    ).withColumn("__m", F.lit(1))
     if broadcast_benchmark:
         bench = F.broadcast(bench)
     per_doc = (
@@ -311,19 +304,7 @@ def bloom_contamination_flags(
     |true hits| + FPR·|corpus shingles|.
     """
     corp = _norm_shingle_hashes(df, id_col, text_col, n)
-    bench = (
-        _norm_shingle_hashes(
-            benchmark.select(
-                F.lit(0).alias("__bid"),
-                F.col(bench_text_col or text_col).alias("__btext"),
-            ),
-            "__bid",
-            "__btext",
-            n,
-        )
-        .select("h")
-        .distinct()
-    )
+    bench = _bench_shingle_set(benchmark, bench_text_col or text_col, n)
     words = bloom_bitset(bench, "h", m_bits=m_bits, k=k)
     spark = df.sparkSession
     bloom_df = spark.createDataFrame([(words,)], "bloom: array<bigint>")

@@ -6,12 +6,19 @@ read as a table (LAB1-Walkthrough.md:122-131, LAB3-Walkthrough.md:147 in
 /root/reference; observable contract per testing/helpers/kafka_helper.py:
 88-166 — results are consumed from topics, never from statement results).
 
-Here the same contract is file-backed: each named stream is a parquet
-directory ("topic") plus a schema; ``create_table_as`` starts a
-``writeStream`` into the directory and re-registers the name so later
-pipelines ``read_stream`` it. On a real deployment the ``format("kafka")``
-branch swaps in transparently (same API, ``kafka.bootstrap.servers`` set) —
-parquet-dir topics are the hermetic local/test transport.
+Here the same contract is file-backed, and only file-backed: each named
+stream is a parquet directory ("topic") plus a schema; ``create_table_as``
+starts a ``writeStream`` into the directory and re-registers the name so
+later pipelines ``read_stream`` it. The catalog has no Kafka branch —
+Kafka topic I/O is ``sources/kafka.py`` (``read_topic``/``write_topic``),
+gated on ``kafka_available`` because no connector jar or broker ships
+here.
+
+All three CTAS flavours (file sink, ``foreachBatch``, changelog) start
+through one path: stop a live query of the same name, checkpoint beside
+the topic (``<topic>_ckpt``), seed an empty ``foreachBatch`` topic only
+when no checkpoint exists (a restart resumes and must keep its rows),
+then pick the trigger (``availableNow`` or processing-time).
 
 Scale note: a topic-directory written by N executors produces N files per
 micro-batch; downstream readers scan in parallel with normal file-source
@@ -27,6 +34,7 @@ from pathlib import Path
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
@@ -136,39 +144,20 @@ class StreamCatalog:
         one sink row per result row, no retractions, which is what keeps
         agent stages from re-firing.
         """
-        existing = self.tables.get(name)
-        if existing is not None and existing.query is not None \
-                and existing.query.isActive:
-            # re-registering a live table: stop the old query first, or
-            # its handle is orphaned and the checkpoint dir collides
-            existing.query.stop()
-        if not df.isStreaming:
-            # batch CTAS (S4 INSERT VALUES / snapshot queries)
-            path = str(self._dir(name))
-            w = df.write.mode("overwrite")
-            if key:
-                # ST5: the PRIMARY KEY maps to the file-sink partition key
-                # so downstream per-key reads prune directories
-                w = w.partitionBy(key)
-            w.parquet(path)
-            t = StreamTable(name=name, path=path, schema=df.schema, key=key)
-            self.tables[name] = t
-            return t
-        path = self._dir(name)
-        writer = (df.writeStream.format("parquet")
-                  .outputMode(mode)
-                  .option("path", str(path))
-                  .option("checkpointLocation", str(path) + "_ckpt")
-                  .queryName(name))
+        if df.isStreaming:
+            return self._start(name, df, df.schema, mode=mode, key=key,
+                               available_now=available_now,
+                               processing_time=processing_time)
+        # batch CTAS (S4 INSERT VALUES / snapshot queries)
+        self._stop(name)
+        path = str(self._dir(name))
+        w = df.write.mode("overwrite")
         if key:
-            writer = writer.partitionBy(key)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        q = writer.start()
-        t = StreamTable(name=name, path=str(path), schema=df.schema,
-                        key=key, query=q)
+            # ST5: the PRIMARY KEY maps to the file-sink partition key
+            # so downstream per-key reads prune directories
+            w = w.partitionBy(key)
+        w.parquet(path)
+        t = StreamTable(name=name, path=path, schema=df.schema, key=key)
         self.tables[name] = t
         return t
 
@@ -177,34 +166,8 @@ class StreamCatalog:
                                    available_now: bool = False) -> StreamTable:
         """CTAS where each micro-batch is post-processed driver-side
         (streaming LIMIT, agent stages with side effects)."""
-        existing = self.tables.get(name)
-        if existing is not None and existing.query is not None \
-                and existing.query.isActive:
-            existing.query.stop()
-        path = self._dir(name)
-        path.mkdir(parents=True, exist_ok=True)
-        # Seed an empty file so read_batch never fails on an empty topic —
-        # but ONLY on a fresh start: with an existing checkpoint the
-        # restarted query resumes from committed offsets and will not
-        # re-emit rows, so wiping the data dir would lose them forever.
-        if not Path(str(path) + "_ckpt").exists():
-            empty = self.spark.createDataFrame([], schema)
-            empty.write.mode("overwrite").parquet(str(path))
-
-        def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-            out = batch_fn(batch_df, epoch_id)
-            if out is not None:
-                out.write.mode("append").parquet(str(path))
-
-        writer = (df.writeStream.foreachBatch(_sink)
-                  .option("checkpointLocation", str(path) + "_ckpt")
-                  .queryName(name))
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        q = writer.start()
-        t = StreamTable(name=name, path=str(path), schema=schema, query=q)
-        self.tables[name] = t
-        return t
+        return self._start(name, df, schema, batch_fn=batch_fn,
+                           available_now=available_now)
 
     def create_table_changelog(self, name: str, df: DataFrame,
                                available_now: bool = False,
@@ -231,37 +194,58 @@ class StreamCatalog:
         state as append mode — no extra state — and each batch's sink
         write is proportional to *changed* keys, not total state.
         """
-        from pyspark.sql import functions as F
-
-        existing = self.tables.get(name)
-        if existing is not None and existing.query is not None \
-                and existing.query.isActive:
-            existing.query.stop()
-        path = self._dir(name)
-        path.mkdir(parents=True, exist_ok=True)
         out_schema = T.StructType(
             list(df.schema.fields)
             + [T.StructField("__epoch", T.LongType(), False)]
         )
-        # seed only on fresh start (same rationale as create_table_foreach_batch)
-        if not Path(str(path) + "_ckpt").exists():
-            self.spark.createDataFrame([], out_schema) \
-                .write.mode("overwrite").parquet(str(path))
+        return self._start(
+            name, df, out_schema, mode="update",
+            batch_fn=lambda b, epoch_id: b.withColumn(
+                "__epoch", F.lit(int(epoch_id))),
+            available_now=available_now, processing_time=processing_time,
+        )
 
-        def _sink(batch_df: DataFrame, epoch_id: int) -> None:
-            batch_df.withColumn("__epoch", F.lit(int(epoch_id))) \
-                .write.mode("append").parquet(str(path))
+    def _start(self, name: str, df: DataFrame, schema: T.StructType, *,
+               mode: str = "append", key: str | None = None, batch_fn=None,
+               available_now: bool = False,
+               processing_time: str | None = None) -> StreamTable:
+        """The one streaming CTAS start: stop a live query of the same
+        name, open the sink (the parquet file sink, or ``batch_fn``'s
+        output appended per micro-batch), checkpoint beside the topic,
+        pick the trigger, register the table."""
+        # re-registering a live table: stop the old query first, or its
+        # handle is orphaned and the checkpoint dir collides
+        self._stop(name)
+        path = str(self._dir(name))
+        ckpt = path + "_ckpt"
+        if batch_fn is None:
+            writer = (df.writeStream.format("parquet").outputMode(mode)
+                      .option("path", path))
+            if key:
+                writer = writer.partitionBy(key)
+        else:
+            # Seed an empty topic so read_batch never fails before the
+            # first batch lands — but ONLY on a fresh start: with an
+            # existing checkpoint the restarted query resumes from
+            # committed offsets and will not re-emit rows, so wiping the
+            # data dir would lose them forever.
+            if not Path(ckpt).exists():
+                self.spark.createDataFrame([], schema) \
+                    .write.mode("overwrite").parquet(path)
 
-        writer = (df.writeStream.outputMode("update").foreachBatch(_sink)
-                  .option("checkpointLocation", str(path) + "_ckpt")
-                  .queryName(name))
+            def _sink(batch_df: DataFrame, epoch_id: int) -> None:
+                out = batch_fn(batch_df, epoch_id)
+                if out is not None:
+                    out.write.mode("append").parquet(path)
+
+            writer = df.writeStream.outputMode(mode).foreachBatch(_sink)
+        writer = writer.option("checkpointLocation", ckpt).queryName(name)
         if available_now:
             writer = writer.trigger(availableNow=True)
         elif processing_time:
             writer = writer.trigger(processingTime=processing_time)
-        q = writer.start()
-        t = StreamTable(name=name, path=str(path), schema=out_schema,
-                        query=q)
+        t = StreamTable(name=name, path=path, schema=schema, key=key,
+                        query=writer.start())
         self.tables[name] = t
         return t
 
@@ -272,8 +256,6 @@ class StreamCatalog:
         ``__epoch`` sequence number (update mode emits at most one row per
         key per batch, so the max is unique); hot keys collapse map-side,
         never a per-key window sort."""
-        from pyspark.sql import functions as F
-
         df = self.read_batch(name)
         vals = [c for c in df.columns if c not in keys and c != "__epoch"]
         return df.groupBy(*keys).agg(
@@ -301,20 +283,23 @@ class StreamCatalog:
             if timeout is None or terminated:
                 t.query = None
 
+    def _stop(self, name: str) -> None:
+        t = self.tables.get(name)
+        if t is not None and t.query is not None and t.query.isActive:
+            t.query.stop()
+            t.query = None
+
     def stop_all(self) -> None:
-        for t in self.tables.values():
-            if t.query is not None and t.query.isActive:
-                t.query.stop()
-                t.query = None
+        for name in self.tables:
+            self._stop(name)
 
     def drop_table(self, name: str, delete_data: bool = False) -> None:
         """S12 DROP TABLE: stop the standing query, unregister, and
         optionally remove the topic directory + checkpoint."""
+        self._stop(name)
         t = self.tables.pop(name, None)
         if t is None:
             return
-        if t.query is not None and t.query.isActive:
-            t.query.stop()
         if delete_data:
             import shutil
 

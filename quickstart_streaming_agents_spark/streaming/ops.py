@@ -16,6 +16,20 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.anomaly import ANOMALY_RESULT_TYPE, _z_for_confidence, ar_one_step
 
+_ARRIVAL_EPOCH_US = 1_700_000_000_000_000
+_ARRIVAL_STEP_US = {"s": 1_000_000, "ms": 1_000}
+
+
+def arrival_ts(ids: Column | str, step: str = "s") -> Column:
+    """Synthetic arrival time of a raw-topic row: a fixed epoch plus one
+    ``step`` (``"s"`` or ``"ms"``) per id. The fixtures carry no
+    ingestion time, so this stands in for the Kafka timestamp a live
+    feed stamps — arrival order is id order, identical on every run."""
+    ids = F.col(ids) if isinstance(ids, str) else ids
+    return F.timestamp_micros(
+        F.lit(_ARRIVAL_EPOCH_US) + ids.cast("long") * _ARRIVAL_STEP_US[step]
+    )
+
 
 # ---------------------------------------------------------------------------
 # W1 streaming: ml_detect_anomalies over an unbounded keyed stream

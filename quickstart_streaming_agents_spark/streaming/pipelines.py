@@ -20,12 +20,37 @@ triggers and all stages are live concurrently.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import functions as F
 
 from ..operators.dedup import cap_hot_buckets, explode_bands
 from ..operators.windows import tumble
+from ..runtime import persist_scope_mark, release_tracked_persists, track_persist
 from .catalog import StreamCatalog
-from .ops import StreamingLimit, interval_join_stream, ml_detect_anomalies_stream
+from .ops import (
+    StreamingLimit,
+    arrival_ts,
+    interval_join_stream,
+    ml_detect_anomalies_stream,
+)
+
+
+def _releases_frozen_profiles(pipeline):
+    """Lifetime of a profile-then-stream pipeline's frozen profiles: every
+    frame it persists is registered with ``runtime.track_persist`` and
+    released when the pipeline returns OR raises — a failed stage must
+    not leave the profile cached for the rest of the session."""
+
+    @functools.wraps(pipeline)
+    def run(*args, **kwargs):
+        mark = persist_scope_mark()
+        try:
+            return pipeline(*args, **kwargs)
+        finally:
+            release_tracked_persists(since=mark)
+
+    return run
 
 
 def surge_pipeline(
@@ -301,12 +326,7 @@ def curation_stream_pipeline(
 
     spark = catalog.spark
     docs = spark.read.parquet(documents_path)
-    stamped = docs.select(
-        "doc_id", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
+    stamped = docs.select("doc_id", "text", arrival_ts("doc_id").alias("ts"))
     catalog.create_table_as("raw_docs", stamped)
 
     scored = catalog.read_stream("raw_docs").select(
@@ -370,6 +390,7 @@ def keyword_search_stream_pipeline(
     return catalog
 
 
+@_releases_frozen_profiles
 def tfidf_stream_pipeline(
     catalog: StreamCatalog,
     documents_path: str,
@@ -397,16 +418,15 @@ def tfidf_stream_pipeline(
     docs = spark.read.parquet(documents_path).select("doc_id", "text")
 
     post = postings(docs)
-    dfreq = post.groupBy("term").agg(F.count("*").alias("df")).persist()
-    stats = post.agg(F.countDistinct("doc_id").alias("n_docs")).persist()
+    dfreq = track_persist(
+        post.groupBy("term").agg(F.count("*").alias("df")).persist()
+    )
+    stats = track_persist(
+        post.agg(F.countDistinct("doc_id").alias("n_docs")).persist()
+    )
     dfreq.count(), stats.count()  # materialize the frozen vocabulary once
 
-    stamped = docs.withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ),
-    )
+    stamped = docs.withColumn("ts", arrival_ts("doc_id"))
     catalog.create_table_as("tfidf_raw_docs", stamped)
 
     def score(batch_df: DataFrame, epoch_id: int) -> DataFrame:
@@ -425,8 +445,6 @@ def tfidf_stream_pipeline(
         "tfidf_top_terms", stream, score, schema=schema, available_now=True
     )
     catalog.await_all()
-    dfreq.unpersist()
-    stats.unpersist()
     return catalog
 
 
@@ -466,27 +484,13 @@ def decontamination_stream_pipeline(
     """
     spark = catalog.spark
     docs = spark.read.parquet(documents_path)
-    stamped = docs.select(
-        "doc_id", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
+    stamped = docs.select("doc_id", "text", arrival_ts("doc_id").alias("ts"))
     catalog.create_table_as("decon_raw_docs", stamped)
 
-    from ..operators.decontamination import _norm_shingle_hashes
+    from ..operators.decontamination import _bench_shingle_set, _norm_shingle_hashes
 
-    bench = (
-        _norm_shingle_hashes(
-            docs.filter(F.col("doc_id") % bench_mod == 0).select(
-                F.lit(0).alias("__bid"), F.col("text").alias("__btext")
-            ),
-            "__bid",
-            "__btext",
-            n,
-        )
-        .select("h")
-        .distinct()
+    bench = _bench_shingle_set(
+        docs.filter(F.col("doc_id") % bench_mod == 0), "text", n
     )
 
     stream = catalog.read_stream("decon_raw_docs", watermark=("ts", watermark))
@@ -551,29 +555,14 @@ def contamination_fraction_stream_pipeline(
         raise ValueError(f"threshold_pct must be 0..100, got {threshold_pct}")
     spark = catalog.spark
     docs = spark.read.parquet(documents_path)
-    stamped = docs.select(
-        "doc_id", "lang", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
+    stamped = docs.select("doc_id", "lang", "text", arrival_ts("doc_id").alias("ts"))
     catalog.create_table_as("cfrac_raw_docs", stamped)
 
-    from ..operators.decontamination import _norm_shingle_hashes
+    from ..operators.decontamination import _bench_shingle_set, _norm_shingle_hashes
 
-    bench = (
-        _norm_shingle_hashes(
-            docs.filter(F.col("doc_id") % bench_mod == 0).select(
-                F.lit(0).alias("__bid"), F.col("text").alias("__btext")
-            ),
-            "__bid",
-            "__btext",
-            n,
-        )
-        .select("h")
-        .distinct()
-        .withColumn("__m", F.lit(1))
-    )
+    bench = _bench_shingle_set(
+        docs.filter(F.col("doc_id") % bench_mod == 0), "text", n
+    ).withColumn("__m", F.lit(1))
 
     stream = catalog.read_stream("cfrac_raw_docs", watermark=("ts", watermark))
     shingled = _norm_shingle_hashes(
@@ -633,9 +622,7 @@ def token_mix_stream_pipeline(
 
     stamped = spark.read.parquet(documents_path).select(
         "doc_id", "source", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
+        arrival_ts("doc_id").alias("ts"),
     )
     catalog.create_table_as("mix_raw_docs", stamped)
 
@@ -685,12 +672,7 @@ def line_dedup_stream_pipeline(
     docs = spark.read.parquet(documents_path).filter(
         F.trim(F.col("text")) != ""
     )
-    stamped = docs.select(
-        "doc_id", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
+    stamped = docs.select("doc_id", "text", arrival_ts("doc_id").alias("ts"))
     # Watermark-advancing sentinel: append mode only emits a reassembly
     # window once the watermark passes its end; a far-future row (unique
     # line, filtered back out below) closes every real window when the
@@ -699,9 +681,7 @@ def line_dedup_stream_pipeline(
     sentinel = docs.limit(1).select(
         F.lit(-1).cast(docs.schema["doc_id"].dataType).alias("doc_id"),
         F.lit("__watermark_sentinel__").alias("text"),
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.lit(30) * 86_400_000_000
-        ).alias("ts"),
+        arrival_ts(F.lit(30 * 86_400)).alias("ts"),  # 30 days out
     )
     catalog.create_table_as("line_raw_docs", stamped.unionByName(sentinel))
 
@@ -781,9 +761,7 @@ def dsir_stream_pipeline(
 
     stamped = profile.select(
         "doc_id", "source", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
+        arrival_ts("doc_id").alias("ts"),
     )
     catalog.create_table_as("dsir_raw_docs", stamped)
 
@@ -824,12 +802,7 @@ def denoising_builder_stream_pipeline(
 
     spark = catalog.spark
     docs = spark.read.parquet(documents_path).select("doc_id", "text")
-    stamped = docs.withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ),
-    )
+    stamped = docs.withColumn("ts", arrival_ts("doc_id"))
     catalog.create_table_as("denoise_raw_docs", stamped)
 
     stream = catalog.read_stream("denoise_raw_docs").select("doc_id", "text")
@@ -868,12 +841,7 @@ def gzip_ingest_stream_pipeline(
             yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": out})
 
     payloads = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    stamped = payloads.withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ),
-    )
+    stamped = payloads.withColumn("ts", arrival_ts("doc_id"))
     catalog.create_table_as("gz_raw_payloads", stamped)
 
     # decode ONCE into an intermediate topic; both routes are then
@@ -929,12 +897,7 @@ def pca_stream_pipeline(
     emb = spark.read.parquet(embeddings_path)
     mean, comps, _evals = pca_fit(emb, "embedding", k)
 
-    stamped = emb.select(
-        "vec_id", "embedding",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("vec_id") * 1_000_000
-        ).alias("ts"),
-    )
+    stamped = emb.select("vec_id", "embedding", arrival_ts("vec_id").alias("ts"))
     catalog.create_table_as("pca_raw_vecs", stamped)
 
     stream = catalog.read_stream("pca_raw_vecs")
@@ -957,17 +920,18 @@ def temperature_mix_stream_pipeline(
     from a bounded profile corpus (operators/sampling.
     temperature_allocation at alpha=0.5 — exact integer targets), the
     per-language keep-rate ``least(1, target_tokens/lang_tokens)`` is
-    baked into the stream plan as a literal map, and every arriving doc
-    passes a MAP-ONLY deterministic-hash gate (`hash_unit` — same doc
-    kept on every run/restart/partitioning). No state, no shuffle, no
-    Python. A language absent from the profile defaults to keep-rate 1
-    (never silently drop a novel stratum — quarantine-by-keeping).
+    baked into the stream plan as literals, and every arriving doc
+    passes a MAP-ONLY deterministic-hash gate (operators/sampling.
+    stratified_sample — same doc kept on every run/restart/
+    partitioning). No state, no shuffle, no Python. A language absent
+    from the profile, or NULL, defaults to keep-rate 1 (never silently
+    drop a novel stratum — quarantine-by-keeping).
 
     Parity contract: kept set is EXACTLY the batch rule's output when
     the profile is the corpus (pinned in tests/test_streaming.py).
     """
     from ..functions.text import token_count
-    from ..operators.sampling import hash_unit, temperature_allocation
+    from ..operators.sampling import stratified_sample, temperature_allocation
 
     spark = catalog.spark
     profile = spark.read.parquet(documents_path)
@@ -984,23 +948,16 @@ def temperature_mix_stream_pipeline(
         for r in alloc
         if r["n_tokens"]
     }
-    rate_map = F.map_from_arrays(
-        F.array(*[F.lit(k) for k in sorted(rates)]),
-        F.array(*[F.lit(rates[k]) for k in sorted(rates)]),
-    )
 
     stamped = profile.select(
         "doc_id", "lang", "source",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
+        arrival_ts("doc_id").alias("ts"),
     )
     catalog.create_table_as("tmix_raw_docs", stamped)
 
     stream = catalog.read_stream("tmix_raw_docs")
-    kept = stream.filter(
-        hash_unit(["doc_id"], salt="temp-mix")
-        < F.coalesce(F.element_at(rate_map, F.col("lang")), F.lit(1.0))
+    kept = stratified_sample(
+        stream, "lang", rates, id_cols=["doc_id"], default=1.0, salt="temp-mix"
     ).select("doc_id", "lang", "source")
     catalog.create_table_as("tmix_sampled_docs", kept, available_now=True)
     catalog.await_all()
@@ -1028,12 +985,7 @@ def quality_filter_stream_pipeline(
 
     spark = catalog.spark
     docs = spark.read.parquet(documents_path)
-    stamped = docs.select(
-        "doc_id", "source", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
+    stamped = docs.select("doc_id", "source", "text", arrival_ts("doc_id").alias("ts"))
     catalog.create_table_as("qc_raw_docs", stamped)
 
     stream = catalog.read_stream("qc_raw_docs")
@@ -1091,9 +1043,7 @@ def text_gate_stream_pipeline(
     spark = catalog.spark
     docs = spark.read.parquet(documents_path).select(
         "doc_id", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
+        arrival_ts("doc_id").alias("ts"),
     )
     catalog.create_table_as("tg_raw_docs", docs)
 
@@ -1160,9 +1110,7 @@ def hll_sketch_stream_pipeline(
     ev = spark.read.parquet(events_path).select(
         "event_type",
         F.col("event_id").cast("string").alias("v"),
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("event_id") * 1_000
-        ).alias("ts"),
+        arrival_ts("event_id", "ms").alias("ts"),
     )
     catalog.create_table_as("hll_raw_events", ev)
 
@@ -1220,9 +1168,7 @@ def webdataset_stream_pipeline(
 
     stamped = docs.select(
         "doc_id", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
+        arrival_ts("doc_id").alias("ts"),
     ).mapInPandas(synth, schema="doc_id long, payload binary, ts timestamp")
     catalog.create_table_as("wds_raw_shards", stamped)
 
@@ -1253,9 +1199,7 @@ def kmins_sketch_stream_pipeline(
     ev = spark.read.parquet(events_path).select(
         "event_type",
         F.col("event_id").cast("string").alias("v"),
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("event_id") * 1_000
-        ).alias("ts"),
+        arrival_ts("event_id", "ms").alias("ts"),
     )
     catalog.create_table_as("kmins_raw_events", ev)
 
@@ -1302,9 +1246,7 @@ def url_dedup_stream_pipeline(
     )
     pages = spark.read.parquet(documents_path).select(
         "doc_id", url.alias("url"),
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
+        arrival_ts("doc_id").alias("ts"),
     )
     catalog.create_table_as("url_raw_pages", pages)
 
@@ -1421,12 +1363,7 @@ def ccnet_stream_pipeline(
             ]),
         )
 
-    stamped = profile.select(
-        "doc_id", "lang", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
+    stamped = profile.select("doc_id", "lang", "text", arrival_ts("doc_id").alias("ts"))
     catalog.create_table_as("ccnet_raw_docs", stamped)
 
     stream = catalog.read_stream("ccnet_raw_docs")
@@ -1465,6 +1402,7 @@ def ccnet_stream_pipeline(
     return catalog
 
 
+@_releases_frozen_profiles
 def media_dedup_stream_pipeline(
     catalog: StreamCatalog,
     documents_path: str,
@@ -1499,12 +1437,7 @@ def media_dedup_stream_pipeline(
     from ..queries import _synth_phash_bmps  # one synth definition
 
     assets = _synth_phash_bmps(docs)
-    stamped = assets.withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ),
-    )
+    stamped = assets.withColumn("ts", arrival_ts("doc_id"))
     catalog.create_table_as("pdup_raw_imgs", stamped)
 
     # frozen reference: band-exploded dHash index of the profile
@@ -1519,13 +1452,13 @@ def media_dedup_stream_pipeline(
     # drops from batch candidate generation — both for parity of the
     # kept flags and because an uncapped bucket fans the per-batch join
     # out quadratically
-    ref_bands = cap_hot_buckets(
+    ref_bands = track_persist(cap_hot_buckets(
         explode_bands(
             ref_hashes, "ref_id", [f"r{j}" for j in range(4)],
             keep_cols=[f"r{j}" for j in range(4)],
         ),
         max_bucket,
-    ).persist()
+    ).persist())
     ref_bands.count()  # materialize the frozen index once
 
     ham = sum(
@@ -1569,10 +1502,10 @@ def media_dedup_stream_pipeline(
         "pdup_gated", stream, gate, schema=schema, available_now=True
     )
     catalog.await_all()
-    ref_bands.unpersist()
     return catalog
 
 
+@_releases_frozen_profiles
 def audio_dedup_stream_pipeline(
     catalog: StreamCatalog,
     documents_path: str,
@@ -1598,12 +1531,7 @@ def audio_dedup_stream_pipeline(
     docs = spark.read.parquet(documents_path).select("doc_id")
     from ..queries import _synth_afp_wavs  # one synth definition
 
-    stamped = _synth_afp_wavs(docs).withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ),
-    )
+    stamped = _synth_afp_wavs(docs).withColumn("ts", arrival_ts("doc_id"))
     catalog.create_table_as("adup_raw_clips", stamped)
 
     ref_sigs = (
@@ -1619,13 +1547,13 @@ def audio_dedup_stream_pipeline(
     )
     # same hot-bucket cap as batch audio_near_dup (all-silent clips
     # collapse to one digest — the degenerate bucket the cap exists for)
-    ref_bands = cap_hot_buckets(
+    ref_bands = track_persist(cap_hot_buckets(
         explode_bands(
             ref_sigs, "ref_id", [f"b{j}" for j in range(4)],
             keep_cols=["ref_sig"],
         ),
         max_bucket,
-    ).persist()
+    ).persist())
     ref_bands.count()  # materialize the frozen index once
 
     n_diff = F.aggregate(
@@ -1663,7 +1591,6 @@ def audio_dedup_stream_pipeline(
         "adup_gated", stream, gate, schema=schema, available_now=True
     )
     catalog.await_all()
-    ref_bands.unpersist()
     return catalog
 
 
@@ -1756,12 +1683,7 @@ def media_triage_stream_pipeline(
             yield pd.DataFrame({"doc_id": ids, "payload": payloads})
 
     assets = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    stamped = assets.withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ),
-    )
+    stamped = assets.withColumn("ts", arrival_ts("doc_id"))
     catalog.create_table_as("media_raw_assets", stamped)
 
     stream = catalog.read_stream("media_raw_assets")
@@ -1820,9 +1742,7 @@ def crawl_frontier_stream_pipeline(
             F.lit("/p/"), (d % 4),
             F.when(d % 2 == 0, F.lit("/pub/x")).otherwise(F.lit("/y")),
         ).alias("path"),
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + d * 1_000_000
-        ).alias("ts"),
+        arrival_ts(d).alias("ts"),
     )
     catalog.create_table_as("frontier_raw_urls", urls)
 
@@ -1906,12 +1826,7 @@ def readability_gate_stream_pipeline(
 
     spark = catalog.spark
     docs = spark.read.parquet(documents_path)
-    stamped = docs.select(
-        "doc_id", "source", "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
+    stamped = docs.select("doc_id", "source", "text", arrival_ts("doc_id").alias("ts"))
     catalog.create_table_as("rg_raw_docs", stamped)
 
     stream = catalog.read_stream("rg_raw_docs")
@@ -1939,6 +1854,7 @@ def readability_gate_stream_pipeline(
     return catalog
 
 
+@_releases_frozen_profiles
 def bitext_stream_pipeline(
     catalog: StreamCatalog,
     embeddings_path: str,
@@ -1994,14 +1910,12 @@ def bitext_stream_pipeline(
         tgt.select(F.col("vec_id").alias("tgt_id"), "embedding"),
         src, "embedding", k=k,
     )
-    abwd = bwd.select("tgt_id", _avgk().alias("abwd")).persist()
+    abwd = track_persist(bwd.select("tgt_id", _avgk().alias("abwd")).persist())
     abwd.count()
 
     stamped = src.select(
         F.col("vec_id").alias("src_id"), "embedding",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("vec_id") * 1_000_000
-        ).alias("ts"),
+        arrival_ts("vec_id").alias("ts"),
     )
     catalog.create_table_as("bitext_raw_src", stamped)
 
@@ -2052,7 +1966,6 @@ def bitext_stream_pipeline(
         "bitext_verdicts", stream, score, schema=schema, available_now=True
     )
     catalog.await_all()
-    abwd.unpersist()
     return catalog
 
 
@@ -2081,12 +1994,7 @@ def charset_gate_stream_pipeline(
 
     spark = catalog.spark
     docs = spark.read.parquet(documents_path).select("doc_id")
-    stamped = synth_charset_payloads(docs).withColumn(
-        "ts",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ),
-    )
+    stamped = synth_charset_payloads(docs).withColumn("ts", arrival_ts("doc_id"))
     catalog.create_table_as("cs_raw_payloads", stamped)
 
     stream = catalog.read_stream("cs_raw_payloads")
@@ -2109,6 +2017,7 @@ def charset_gate_stream_pipeline(
     return catalog
 
 
+@_releases_frozen_profiles
 def inference_cache_stream_pipeline(
     catalog: StreamCatalog,
     events_path: str,
@@ -2131,7 +2040,6 @@ def inference_cache_stream_pipeline(
 
     from ..functions.ml import ml_predict, ml_predict_cached
     from ..registries import DEFAULT_CATALOG
-    from ..runtime import persist_scope_mark, release_tracked_persists
 
     spark = catalog.spark
     model = DEFAULT_CATALOG.models["fake_textgen"]
@@ -2148,19 +2056,19 @@ def inference_cache_stream_pipeline(
     seed = (
         prompts.filter(F.col("cohort") % 3 == 0).select("prompt").distinct()
     )
-    cache = seed.select(
+    cache = track_persist(seed.select(
         F.md5("prompt").alias("prompt_hash"),
         ml_predict(model, "prompt").alias("response"),
-    ).persist()
+    ).persist())
     cache.count()  # freeze the snapshot once
 
     catalog.create_table_as(
         "ic_raw_prompts", prompts.select("event_id", "prompt", "ts")
     )
 
-    # scope mark: release ONLY persists this pipeline's batches register
-    # (everything after this point), never a concurrent ml_predict_cached
-    # caller's pending delta in the same session (ADVICE r13)
+    # scope mark taken AFTER the cache is frozen: the per-batch release
+    # drops only this pipeline's batch deltas, never the cache nor a
+    # concurrent ml_predict_cached caller's pending delta (ADVICE r13)
     scope = persist_scope_mark()
 
     def score(batch_df: DataFrame, epoch_id: int) -> DataFrame:
@@ -2184,11 +2092,10 @@ def inference_cache_stream_pipeline(
         "ic_responses", stream, score, schema=schema, available_now=True
     )
     catalog.await_all()
-    release_tracked_persists(since=scope)  # final batch's delta
-    cache.unpersist()
     return catalog
 
 
+@_releases_frozen_profiles
 def ivf_upsert_stream_pipeline(
     catalog: StreamCatalog,
     embeddings_path: str,
@@ -2224,7 +2131,7 @@ def ivf_upsert_stream_pipeline(
         train.filter(F.col("embedding").isNotNull()), "embedding",
         n_centroids, 20_000, 5, 42, init="hash", id_col="vec_id",
     )
-    refs = (
+    refs = track_persist(
         assign_align_e6(ref.filter(F.col("embedding").isNotNull()),
                         "vec_id", "embedding", cents)
         .groupBy("cell")
@@ -2235,9 +2142,7 @@ def ivf_upsert_stream_pipeline(
 
     stamped = new.filter(F.col("embedding").isNotNull()).select(
         "vec_id", "embedding",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("vec_id") * 1_000_000
-        ).alias("ts"),
+        arrival_ts("vec_id").alias("ts"),
     )
     catalog.create_table_as("iu_raw_vectors", stamped)
 
@@ -2267,5 +2172,4 @@ def ivf_upsert_stream_pipeline(
         .select(*cell_verdict_select(drift_margin_e6))
     )
     catalog.create_table_as("iu_verdicts", verdicts)
-    refs.unpersist()
     return catalog

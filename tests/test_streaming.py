@@ -577,13 +577,13 @@ def test_streaming_packing_matches_batch(spark, catalog):
     state is one offset scalar per bucket."""
     from quickstart_streaming_agents_spark.operators.packing import pack_sequences
     from quickstart_streaming_agents_spark.sources.parquet import load_table
-    from quickstart_streaming_agents_spark.streaming.ops import pack_sequences_stream
+    from quickstart_streaming_agents_spark.streaming.ops import (
+        arrival_ts,
+        pack_sequences_stream,
+    )
 
     docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    stamped = docs.withColumn(
-        "ts",
-        F.timestamp_micros(F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000),
-    )
+    stamped = docs.withColumn("ts", arrival_ts("doc_id", "ms"))
     catalog.create_table_as("pack_raw_docs", stamped)
     packed = pack_sequences_stream(
         catalog.read_stream("pack_raw_docs"), seq_len=64, num_buckets=4
@@ -1943,3 +1943,106 @@ def test_ivf_upsert_stream_matches_batch_bit_exact(spark, catalog):
         key = (r["__epoch"], r.cell)
         per_epoch[key] = per_epoch.get(key, 0) + 1
     assert all(v == 1 for v in per_epoch.values())
+
+
+def test_foreach_batch_topic_survives_restart(spark, catalog, tmp_path):
+    """A ``foreachBatch`` topic is seeded empty only on a FRESH start: a
+    restart from the checkpoint resumes from committed offsets and never
+    re-emits, so re-seeding would wipe the first run's rows for good.
+    Two availableNow runs over the two halves of a source, one
+    checkpoint — the topic must hold the rows of both runs."""
+    src = tmp_path / "fb_src"
+    rows = spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 7).alias("v")
+    )
+
+    def run():
+        stream = spark.readStream.schema(rows.schema).parquet(str(src))
+        catalog.create_table_foreach_batch(
+            "fb_topic", stream, lambda b, _epoch: b, schema=rows.schema,
+            available_now=True,
+        )
+        catalog.await_all()
+
+    rows.filter("k < 20").coalesce(1).write.mode("append").parquet(str(src))
+    run()
+    assert sorted(r.k for r in catalog.read_batch("fb_topic").collect()) \
+        == list(range(20))
+    rows.filter("k >= 20").coalesce(1).write.mode("append").parquet(str(src))
+    run()  # restart: same checkpoint, second half only
+    got = sorted(tuple(r) for r in catalog.read_batch("fb_topic").collect())
+    assert got == sorted(tuple(r) for r in rows.collect())
+
+
+def test_frozen_profile_scope_releases_on_raise(spark):
+    """Frames tracked inside a pipeline's frozen-profile scope are
+    unpersisted when its body raises, the exception propagates, and a
+    persist tracked BEFORE the scope opened is left alone."""
+    from pyspark import StorageLevel
+
+    from quickstart_streaming_agents_spark.runtime import (
+        persist_scope_mark,
+        release_tracked_persists,
+        track_persist,
+    )
+    from quickstart_streaming_agents_spark.streaming.pipelines import (
+        _releases_frozen_profiles,
+    )
+
+    mark = persist_scope_mark()
+    outer = track_persist(spark.range(5).persist())
+    inner = []
+
+    @_releases_frozen_profiles
+    def body():
+        df = track_persist(spark.range(10).persist())
+        df.count()
+        inner.append(df)
+        assert df.storageLevel != StorageLevel.NONE
+        raise RuntimeError("stage failed")
+
+    try:
+        with pytest.raises(RuntimeError, match="stage failed"):
+            body()
+        assert inner[0].storageLevel == StorageLevel.NONE
+        assert outer.storageLevel != StorageLevel.NONE
+    finally:
+        release_tracked_persists(since=mark)
+
+
+@pytest.mark.parametrize("pipeline,n_frozen", [
+    ("tfidf_stream_pipeline", 2),
+    ("inference_cache_stream_pipeline", 1),
+])
+def test_frozen_profiles_released_when_a_stage_raises(
+    spark, catalog, monkeypatch, pipeline, n_frozen
+):
+    """A profile-then-stream pipeline whose ``await_all`` raises must
+    still release its frozen profile (tfidf's vocabulary, the inference
+    cache) instead of leaving it cached for the session's life."""
+    from pyspark import StorageLevel
+
+    from quickstart_streaming_agents_spark.streaming import pipelines
+
+    frozen = []
+    track = pipelines.track_persist
+
+    def spy(df):
+        frozen.append(df)
+        return track(df)
+
+    wait = catalog.await_all
+
+    def failing_wait(timeout=None):
+        wait(timeout)
+        raise RuntimeError("stage failed")
+
+    monkeypatch.setattr(pipelines, "track_persist", spy)
+    monkeypatch.setattr(catalog, "await_all", failing_wait)
+    path = f"{SF_DIR}/documents.parquet"
+    kwargs = ({"documents_path": path} if pipeline.startswith("tfidf")
+              else {"events_path": EVENTS})
+    with pytest.raises(RuntimeError, match="stage failed"):
+        getattr(pipelines, pipeline)(catalog, **kwargs)
+    assert len(frozen) == n_frozen
+    assert all(df.storageLevel == StorageLevel.NONE for df in frozen)

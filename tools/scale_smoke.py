@@ -256,7 +256,8 @@ def main() -> None:
     # m/64 longs however big the benchmark, and the prefilter must prune
     # the exact-confirm join's input to a sliver of the corpus shingles.
     from quickstart_streaming_agents_spark.operators.decontamination import (
-        _norm_shingles,
+        _bench_shingle_set,
+        _norm_shingle_hashes,
         bloom_bitset,
         bloom_member,
     )
@@ -264,16 +265,9 @@ def main() -> None:
     if not only or "bloom" in only:
         t0 = time.perf_counter()
         m_bits, kk = 1 << 22, 3
-        corp_sh = _norm_shingles(docs, "doc_id", "text", 13).select(
-            "doc_id", F.xxhash64("shingle").alias("h")
-        )
-        bench_sh = (
-            _norm_shingles(
-                docs.filter(F.col("doc_id") % 1000 == 0).select(
-                    F.lit(0).alias("__bid"), F.col("text").alias("__btext")
-                ),
-                "__bid", "__btext", 13,
-            ).select(F.xxhash64("shingle").alias("h")).distinct()
+        corp_sh = _norm_shingle_hashes(docs, "doc_id", "text", 13)
+        bench_sh = _bench_shingle_set(
+            docs.filter(F.col("doc_id") % 1000 == 0), "text", 13
         )
         words = bloom_bitset(bench_sh, "h", m_bits=m_bits, k=kk)
         assert len(words) == m_bits // 64

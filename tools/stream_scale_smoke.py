@@ -446,9 +446,11 @@ def smoke_contamination_fraction(spark, docs: int, workdir: str) -> None:
     from pyspark.sql import functions as F
 
     from quickstart_streaming_agents_spark.operators.decontamination import (
-        _norm_shingles,
+        _bench_shingle_set,
+        _norm_shingle_hashes,
     )
     from quickstart_streaming_agents_spark.sources.synthetic import register
+    from quickstart_streaming_agents_spark.streaming.ops import arrival_ts
 
     register(spark)
     src = f"{workdir}/cfrac_src"
@@ -459,9 +461,7 @@ def smoke_contamination_fraction(spark, docs: int, workdir: str) -> None:
         .load()
         .select(
             "doc_id", "text",
-            F.timestamp_micros(
-                F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000
-            ).alias("ts"),
+            arrival_ts("doc_id", "ms").alias("ts"),
         )
         .withColumn("slc", F.least(
             F.lit(SLICES - 1),
@@ -470,15 +470,9 @@ def smoke_contamination_fraction(spark, docs: int, workdir: str) -> None:
     )
     write_slices(gen, "doc_id", F.col("slc"), src, files=16)
 
-    bench = (
-        _norm_shingles(
-            spark.read.parquet(src).filter(F.col("doc_id") % 1009 == 0)
-            .select(F.lit(0).alias("__bid"), F.col("text").alias("__btext")),
-            "__bid", "__btext", 8,
-        )
-        .select(F.xxhash64("shingle").alias("h")).distinct()
-        .withColumn("__m", F.lit(1))
-    )
+    bench = _bench_shingle_set(
+        spark.read.parquet(src).filter(F.col("doc_id") % 1009 == 0), "text", 8
+    ).withColumn("__m", F.lit(1))
 
     schema = spark.read.parquet(src).schema
     stream = (
@@ -486,9 +480,9 @@ def smoke_contamination_fraction(spark, docs: int, workdir: str) -> None:
         .option("maxFilesPerTrigger", "16").load(src)
         .withWatermark("ts", "1 second")
     )
-    shingled = _norm_shingles(
+    shingled = _norm_shingle_hashes(
         stream, "doc_id", "text", 8, keep_cols=["ts"]
-    ).select("doc_id", "ts", F.xxhash64("shingle").alias("h"))
+    ).select("doc_id", "ts", "h")
     per = (
         shingled.join(F.broadcast(bench), "h", "left")
         .groupBy("doc_id", "ts")
@@ -527,6 +521,7 @@ def smoke_crawl_frontier(spark, docs: int, workdir: str) -> None:
         robots_rules_table,
     )
     from quickstart_streaming_agents_spark.sources.synthetic import register
+    from quickstart_streaming_agents_spark.streaming.ops import arrival_ts
 
     register(spark)
     src = f"{workdir}/frontier_src"
@@ -542,9 +537,7 @@ def smoke_crawl_frontier(spark, docs: int, workdir: str) -> None:
             F.concat(F.lit("/p/"), F.col("doc_id") % 13,
                      F.when(F.col("doc_id") % 2 == 0, F.lit("/pub/x"))
                      .otherwise(F.lit("/y"))).alias("path"),
-            F.timestamp_micros(
-                F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000
-            ).alias("ts"),
+            arrival_ts("doc_id", "ms").alias("ts"),
         )
         .withColumn("slc", F.least(
             F.lit(SLICES - 1),
