@@ -1,30 +1,44 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-JSON lines {"metric", "value", "unit", "queries", "sf"} — the LAST line
-printed is always the most complete result.
+"""Registry sweep: time every registered query at $SPARK_GRAFT_SF_DIR
+(default: the sf0.1 fixtures) on local[$SPARK_GRAFT_CPUS].
 
-Timing is end-to-end per query (plan + execute + noop sink — no driver
-collect in the timed path). One warm-up action first so JVM/Arrow JIT cost
-isn't attributed to the first query.
+    python bench.py
 
-Wall-clock discipline (VERDICT r13 #1 — the r13 driver bench was killed at
-rc=124 with zero output because this file buffered everything to the end):
+There is one path. ``sorted(QUERIES)`` is cut into chunks of ``CHUNK``
+names, and each chunk runs in a fresh subprocess, so in a fresh JVM: in
+one long-lived JVM the late sweep positions inherit the heap and JIT
+state of every query before them and read up to 4x slow, and
+``spark.stop()`` keeps the JVM. Inside a chunk, one warm-up action per
+table runs first; then each query is timed end to end (plan, execute,
+noop sink, nothing collected) as the min of 2 runs, with the cache and
+the tracked broadcasts and persists released after every run.
 
-- The compact tail line and BENCH_FULL.json are rewritten after EVERY
-  completed query (atomic tmp+rename for the file), so a kill at any
-  instant still leaves parseable data; lines carry "partial": true until
-  the bench completes.
-- ``BENCH_BUDGET_S`` (env, default 1500) is a total wall-clock budget.
-  Under pressure the bench degrades gracefully: first the isolated-fork
-  pass shrinks (1 fork instead of 3) then is skipped, then remaining
-  sweep chunks run in-process without fresh JVMs, and finally unrun
-  queries are recorded as ``SKIPPED(budget)`` in "errors" rather than
-  silently vanishing.
-- The isolated pass forks only queries that need adjudication: the
-  standing watchlist plus queries whose in-sequence figure drifted >30%
-  round-over-round or stands >2x of the BENCH_r01 anchor — not every
-  query over 3 s (the r13 rule that spawned ~60 JVM cold-starts and blew
-  the driver's wall clock).
+- A query that raises is recorded in ``errors`` and the chunk goes on.
+- A chunk subprocess that dies records its in-flight query as an error,
+  and a fresh subprocess runs the rest of that chunk.
+- ``BENCH_BUDGET_S`` (default 1500) is one wall-clock deadline. The
+  running chunk is killed when it passes, and every name not yet timed
+  is recorded as ``SKIPPED(budget)``.
+
+After every query the full record is rewritten atomically to
+``BENCH_FULL.json`` (``BENCH_FULL_c{N}.json`` when $SPARK_GRAFT_CPUS is
+below the machine's core count) and a compact copy is printed as one
+JSON line, so the last stdout line is always the freshest result, even
+after a kill. The record's keys:
+
+- ``metric``, ``unit``, ``sf``, ``cpus``;
+- ``value``: the sum of the per-query seconds;
+- ``queries``: {name: seconds};
+- ``errors``: {name: message}, present only when a query failed;
+- ``partial``: true until the sweep ends, then absent;
+- ``elapsed_s`` and ``load_avg_1m`` {start, end}.
+
+The compact line (see ``tail_line``) adds ``full`` (the file name) and
+``total_queries``, and keeps only the costliest per-query entries, so
+that it fits a 2000-byte tail capture.
+
+``python bench.py --chunk START END`` is the chunk subprocess: it prints
+one ``QRESULT {json}`` line per query as it completes, then
+``CHUNKDONE``.
 """
 
 from __future__ import annotations
@@ -32,7 +46,9 @@ from __future__ import annotations
 import json
 import os
 import re
+import subprocess
 import sys
+import threading
 import time
 from pathlib import Path
 
@@ -40,255 +56,23 @@ REPO = Path(__file__).resolve().parent
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-# Headline set: every operator family — joins, windowed aggs, interval join,
-# anomaly (JVM + pandas), AI functions, dedup (exact/JVM-jaccard/minhash),
-# vector search, text analysis, multimodal plumbing.
-HEADLINE = [
-    "enriched_orders",
-    "pricing_summary",
-    "tumble_5m_agg",
-    "tumble_6h_avg",
-    "interval_join",
-    "topk_per_group",
-    "anomaly_zscore",
-    "anomaly_detect_ar",
-    "ml_predict_textgen",
-    "ml_predict_embedding",
-    "ml_predict_cached",
-    "vector_search_topk",
-    "embedding_topk_pairs",
-    "dedup_exact",
-    "ngram_jaccard_dedup",
-    "minhash_lsh_dedup",
-    "simhash_dedup",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "curation_pipeline",
-    "events_rollup",
-    "text_analysis",
-    "multimodal_features",
-    "rag_pipeline",
-    "agent_price_match",
-    "session_window_agg",
-    "sliding_window_agg",
-    "surge_enriched",
-    "investigation_queue",
-    "verdict_parse",
-    "counts_dashboard",
-    "tool_invoke",
-    "embedding_near_dup",
-    "dedup_components",
-    "lang_id_ngram",
-    "multimodal_meta",
-    "asof_attribution",
-    "stratified_sample",
-    "domain_mix",
-    "doc_chunks",
-    "repetition_filter",
-    "pii_redaction",
-    "decontamination",
-    "dataset_split",
-    "props_json_agg",
-    "rag_ingest",
-    "gap_fill_locf",
-    "value_percentiles",
-    "anomaly_detect_ar1",
-    "bm25_search",
-    "vocab_top_terms",
-    "event_funnel",
-    "cohort_retention",
-    "semi_anti_customers",
-    "events_cube",
-    "shipping_priority",
-    "local_supplier_volume",
-    "cumulate_agg",
-    "unigram_logprob_score",
-    "rolling_active_users",
-    "training_data_pipeline",
-    "latest_state_upsert",
-    "data_quality_report",
-    "exact_k_per_stratum",
-    "trending_per_window",
-    "value_histogram",
-    "sequence_packing",
-    "returned_item_customers",
-    "large_volume_orders",
-    "late_shipment_priority",
-    "snapshot_diff",
-    "duplicate_spans",
-    "substring_dedup_clean",
-    "packed_training_shards",
-    "events_pivot",
-    "user_set_ops",
-    "column_profile",
-    "label_centroids",
-    "bpe_pair_freqs",
-    "forecast_revenue_change",
-    "promo_revenue_share",
-    "filter_project",
-    "scalar_funcs",
-    "window_functions_suite",
-    "multimodal_real_meta",
-    "anomaly_detect_ar2",
-    "bpe_encode",
-    "line_dedup_clean",
-    "token_budget_mix",
-    "scd2_merge",
-    "hard_negative_mining",
-    "waiting_suppliers",
-    "video_frame_sample",
-    "topk_per_group_salted",
-    "series_correlation",
-    "curation_funnel",
-    "incremental_ingest_dedup",
-    "multimodal_png_meta",
-    "min_cost_supplier",
-    "excess_quota_suppliers",
-    "gopher_quality_flags",
-    "dsir_importance_weights",
-    "semantic_dedup",
-    "small_quantity_revenue",
-    "dormant_customer_balance",
-    "important_parts",
-    "multimodal_gif_meta",
-    "video_frame_sample_real",
-    "customer_order_distribution",
-    "disjunctive_revenue",
-    "part_supplier_variety",
-    "nation_trade_volume",
-    "multimodal_jpeg_meta",
-    "quality_classifier_score",
-    "pca_project",
-    "media_probe_meta",
-    "winnowing_dedup_pairs",
-    "nation_market_share",
-    "nation_profit",
-    "key_skew_histogram",
-    "chat_template_render",
-    "ann_pq_adc_topk",
-    "ccnet_ppl_buckets",
-    "quality_classifier_digest",
-    "quality_classifier_digest_only",
-    "prefix_filter_dedup",
-    "containment_dedup",
-    "codec_sniff_ingest",
-    "weighted_sample_topk",
-    "html_link_extract",
-    "robots_gate",
-    "crawl_frontier_pipeline",
-    "anchor_text_index",
-    "dedup_savings_report",
-    "order_priority_check",
-    "top_supplier_revenue",
-    "flac_stream_meta",
-    "ogg_page_index",
-    "readability_scores",
-    "tfidf_top_terms",
-    "hits_scores",
-    "parquet_footer_index",
-    "avro_ocf_block_index",
-    "jsonl_ingest",
-    "preference_pairs",
-    "crawl_politeness_gate",
-    "bitext_mining_margin",
-    "charset_sniff",
-    "pca_moments",
-    "image_dhash",
-    "image_phash_dedup",
-    "mp4_demux_samples",
-    "audio_energy_sig",
-    "audio_near_dup",
-    "mp3_demux_frames",
-    "link_pagerank",
-    "zorder_key",
-    "cms_heavy_hitters",
-    "bloom_decontamination",
-    "temperature_mix",
-    "ann_sq8_topk",
-    "bigram_backoff_score",
-    "edit_distance_dedup",
-    "token_entropy_score",
-    "url_canonical_dedup",
-    "gzip_text_ingest",
-    "packing_efficiency",
-    "unicode_normalize_clean",
-    "span_corruption_pairs",
-    "badwords_filter",
-    # round 9
-    "mp4_pcm_energy_sig",
-    "hll_distinct_sketch",
-    "warc_record_index",
-    "jpeg_exif_meta",
-    "contamination_fraction",
-    "script_detect_profile",
-    "ann_ivfpq_topk",
-    "pii_credit_card_audit",
-    "html_text_extract",
-    # round 10
-    "adpcm_energy_sig",
-    "tar_member_index",
-    "webdataset_samples",
-    "kmins_token_sketch",
-    "kmins_distinct_estimate",
-    "corpus_overlap_minhash",
-    "pii_iban_audit",
-    "zip_member_index",
-    "mp3_id3_meta",
-    "mojibake_repair",
-    "token_diversity",
-    "g711_energy_sig",
-    "pii_pseudonymize",
-    "oov_rate",
-    "webdataset_decode",
-    "phrase_search",
-    "leakage_safe_split",
-    "lang_label_audit",
-    "exif_display_dims",
-    "markdown_strip",
-    "code_detect",
-    "minhash_calibration",
-    "quality_classifier_stage_checksums",
-    # round 12
-    "script_sql_chain",
-    # round 13
-    "lab3_chain",
-    "lab4_chain",
-    "ivf_index_upsert",
-]
+CHUNK = 50  # queries per fresh-JVM chunk subprocess
+TAIL_BUDGET = 1800  # bytes of the compact line, under the 2000-byte tail
 
 
-# Heavy tier (VERDICT r14 next-round #1): the queries that cost >=~3 s at
-# sf0.1 — the only ones whose parallel behavior a larger fixture can
-# expose. Timed at $SPARK_GRAFT_HEAVY_DIR (see tools/gen_heavy_sf.py /
-# tools/bench_heavy.py) with the sf0.1 methodology.
-HEAVY_TIER = [
-    "training_data_pipeline",
-    "packed_training_shards",
-    "curation_funnel",
-    "dedup_savings_report",
-    "incremental_ingest_dedup",
-    "prefix_filter_dedup",
-    "containment_dedup",
-    "ngram_jaccard_dedup",
-    "winnowing_dedup_pairs",
-    "edit_distance_dedup",
-    "minhash_calibration",
-    "semantic_dedup",
-    "dedup_components",
-    "bm25_search",
-    "bigram_backoff_score",
-    "audio_near_dup",
-    "ann_sq8_topk",
-    "ann_ivfpq_topk",
-]
+def _sweep_names() -> list[str]:
+    """The names the sweep times, in sweep order. Sorted, because the
+    check-first rotation in queries.py reorders QUERIES, and chunk
+    membership should not move with it."""
+    from quickstart_streaming_agents_spark.queries import QUERIES
+
+    return sorted(QUERIES)
 
 
 def _release_broadcasts() -> None:
     """Free per-query tracked broadcasts (vector_search corpus matrices,
-    pq_adc ADC LUTs, LSH planes, …) between queries — ADVICE r8: one
-    long-lived JVM running all 145 queries otherwise accumulates every
-    query's artifacts on driver + executors, the suspected source of
-    the r8 embedding_topk_pairs in-sequence drift."""
+    pq_adc ADC LUTs, LSH planes, …) and persists between queries, so no
+    query runs with the previous ones' artifacts still resident."""
     from quickstart_streaming_agents_spark.runtime import (
         release_tracked_broadcasts,
         release_tracked_persists,
@@ -298,110 +82,10 @@ def _release_broadcasts() -> None:
     release_tracked_persists()
 
 
-def _isolated_one(name: str) -> None:
-    """Run ONE query in this (fresh) process and print a JSON line.
-
-    Forked by main() for the heavy queries: in-sequence timing of
-    flagship-class queries can be distorted 1.6x by GC pressure from
-    the 100+ queries before them (the r7 87s-vs-138s flagship
-    discrepancy), so the bench contract records a fresh-JVM figure
-    alongside the in-sequence one. Timing starts after session+warmup,
-    so JVM startup is not attributed to the query."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from quickstart_streaming_agents_spark.queries import QUERIES
-    from quickstart_streaming_agents_spark.session import get_spark, ship_package
-    from quickstart_streaming_agents_spark.sources.parquet import load_tables
-
-    spark = get_spark(f"bench-iso-{name}")
-    ship_package(spark)
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        best = min(best, time.perf_counter() - t0)
-        spark.catalog.clearCache()
-        _release_broadcasts()
-    spark.stop()
-    print(json.dumps({"query": name, "sec": round(best, 3),
-                      "load": round(os.getloadavg()[0], 2)}), flush=True)
-
-
-def _run_chunk_inprocess(names: list[str], spark=None, on_query=None,
-                         deadline=None) -> tuple[dict, dict]:
-    """Run ``names`` in-sequence in THIS process (one session, shared
-    warmup) and return (timings, errors). The unit of JVM recycling:
-    main() forks one subprocess per ~50-query chunk so late sweep
-    positions stop inheriting 150 queries' worth of heap/JIT pressure
-    (VERDICT r11 "What's wrong" #1 — the r11 in-sequence figures for
-    late-position queries were inflated up to 4x by accumulated JVM
-    state, and recycling inside one process does not help: spark.stop()
-    keeps the same JVM alive for the next context).
-
-    ``spark``: reuse an existing session (budget-pressure fallback path)
-    instead of building one. ``on_query(name, sec_or_None, err_or_None)``
-    fires after every query so the caller can persist partial results.
-    ``deadline``: a time.monotonic() stamp after which remaining names
-    are recorded as SKIPPED(budget) instead of run."""
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-    from quickstart_streaming_agents_spark.queries import QUERIES
-    from quickstart_streaming_agents_spark.session import get_spark, ship_package
-    from quickstart_streaming_agents_spark.sources.parquet import load_tables
-
-    own_session = spark is None
-    if own_session:
-        spark = get_spark("bench-chunk")
-        ship_package(spark)
-    # warm-up: touch every table + exercise codegen/Arrow once (per
-    # chunk, excluded from every timing)
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).count()
-
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for name in names:
-        if deadline is not None and time.monotonic() > deadline:
-            errors[name] = "SKIPPED(budget)"
-            if on_query:
-                on_query(name, None, errors[name])
-            continue
-        best = float("inf")
-        # min of 2 runs: first run includes plan compilation + codegen for
-        # this query shape; min filters transient host noise out of the
-        # recorded figure. Cache cleared so one query's leftover blocks
-        # can't distort the next. One failing query is recorded and skipped
-        # rather than sinking the whole bench line.
-        try:
-            fn = QUERIES[name]  # inside try: a stale HEADLINE name is
-            # recorded as an error, not a whole-bench crash
-            for _ in range(2):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                best = min(best, time.perf_counter() - t0)
-                spark.catalog.clearCache()
-                _release_broadcasts()
-            timings[name] = round(best, 3)
-            if on_query:
-                on_query(name, timings[name], None)
-        except Exception as e:  # noqa: BLE001 — report, don't die
-            msg = str(e).splitlines() or [type(e).__name__]
-            errors[name] = msg[0][:200]
-            spark.catalog.clearCache()
-            _release_broadcasts()
-            if on_query:
-                on_query(name, None, errors[name])
-    if own_session:
-        spark.stop()
-    return timings, errors
-
-
 def _chunk_main(start: int, end: int) -> None:
-    """Subprocess body for one sweep chunk: stream one ``QRESULT`` JSON
-    line per completed query (the parent persists partial output after
-    each, so a wall-clock kill loses at most the in-flight query), then a
-    ``CHUNKDONE`` sentinel."""
+    """Chunk subprocess body: time sweep positions [start, end)."""
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
     def _report(name, sec, err):
         rec = {"q": name}
         if sec is not None:
@@ -410,87 +94,128 @@ def _chunk_main(start: int, end: int) -> None:
             rec["err"] = err
         print("QRESULT " + json.dumps(rec), flush=True)
 
-    _run_chunk_inprocess(HEADLINE[start:end], on_query=_report)
+    _run_chunk_inprocess(_sweep_names()[start:end], sf_dir, on_query=_report)
     print("CHUNKDONE", flush=True)
 
 
-CHUNK = 50  # queries per fresh-JVM sweep chunk
+def _run_chunk_inprocess(names: list[str], sf_dir: str, spark=None,
+                         on_query=None) -> tuple[dict, dict]:
+    """Time ``names`` in sequence in this process at ``sf_dir`` and return
+    (timings, errors). Runs on ``spark`` when given, else on a session of
+    its own that it stops at the end. A query that raises, an unknown
+    name included, is recorded in errors and the run goes on.
+    ``on_query(name, sec_or_None, err_or_None)`` fires after every query."""
+    from quickstart_streaming_agents_spark.queries import QUERIES
+    from quickstart_streaming_agents_spark.session import get_spark, ship_package
+    from quickstart_streaming_agents_spark.sources.parquet import load_tables
+
+    own_session = spark is None
+    if own_session:
+        spark = get_spark("bench-chunk")
+        ship_package(spark)
+    # warm-up: touch every table once, outside every timing
+    for df in load_tables(spark, sf_dir).values():
+        df.limit(1).count()
+
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for name in names:
+        sec = err = None
+        try:
+            fn = QUERIES[name]
+            best = float("inf")
+            # min of 2 runs: the first pays plan compilation and codegen
+            # for this query shape, and the min filters host noise
+            for _ in range(2):
+                t0 = time.perf_counter()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                best = min(best, time.perf_counter() - t0)
+                spark.catalog.clearCache()
+                _release_broadcasts()
+            sec = timings[name] = round(best, 3)
+        except Exception as e:  # noqa: BLE001 — report, don't die
+            msg = str(e).splitlines() or [type(e).__name__]
+            err = errors[name] = msg[0][:200]
+            spark.catalog.clearCache()
+            _release_broadcasts()
+        if on_query:
+            on_query(name, sec, err)
+    if own_session:
+        spark.stop()
+    return timings, errors
 
 
-def _stream_chunk(start: int, end: int, deadline: float, on_result) -> bool:
-    """Fork one sweep chunk and forward its per-query QRESULT records to
-    ``on_result(rec)`` as they arrive. Returns True when the chunk
-    finished cleanly (CHUNKDONE seen), False when it died or was killed
-    at ``deadline`` (time.monotonic())."""
-    import queue as _queue
-    import subprocess
-    import threading
-
+def _stream_chunk(start: int, end: int, deadline: float, on_result) -> int:
+    """Run sweep positions [start, end) in a chunk subprocess, passing each
+    of its QRESULT records to ``on_result(rec)`` as it arrives. The
+    subprocess is killed at ``deadline`` (a time.monotonic() stamp).
+    Returns its exit code."""
     proc = subprocess.Popen(
         [sys.executable, __file__, "--chunk", str(start), str(end)],
         stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
     )
-    lines: _queue.Queue = _queue.Queue()
 
     def _reader() -> None:
         for ln in proc.stdout:  # type: ignore[union-attr]
-            lines.put(ln)
-        lines.put(None)
+            if ln.startswith("QRESULT "):
+                try:
+                    rec = json.loads(ln[len("QRESULT "):])
+                except ValueError:  # a line torn by a kill
+                    continue
+                on_result(rec)
 
-    threading.Thread(target=_reader, daemon=True).start()
-    done = False
-    while True:
-        try:
-            ln = lines.get(timeout=5.0)
-        except _queue.Empty:
-            if time.monotonic() > deadline:
-                proc.kill()
-                break
-            continue
-        if ln is None:
-            break
-        if ln.startswith("QRESULT "):
-            try:
-                on_result(json.loads(ln[len("QRESULT "):]))
-            except Exception:  # noqa: BLE001 — a torn line is not fatal
-                pass
-        elif ln.startswith("CHUNKDONE"):
-            done = True
-        if time.monotonic() > deadline and not done:
-            proc.kill()
-            break
+    reader = threading.Thread(target=_reader, daemon=True)
+    reader.start()
     try:
-        proc.wait(timeout=30)
-    except Exception:  # noqa: BLE001
+        proc.wait(timeout=max(0.0, deadline - time.monotonic()))
+    except subprocess.TimeoutExpired:
         proc.kill()
-    return done
+        proc.wait()
+    # the chunk's JVM inherits the pipe and closes it only when it exits,
+    # so the drain is bounded; every QRESULT line is already in the pipe
+    reader.join(timeout=30)
+    return proc.returncode
+
+
+def tail_line(out: dict, total_queries: int, full_name: str) -> str:
+    """The compact form of the record ``out`` for the last stdout line.
+
+    The total stays exact. Per-query entries are rounded to 2 decimals and
+    kept costliest first (ties broken by name) while the line fits in
+    TAIL_BUDGET bytes; the dropped ones are counted in queries_omitted, so
+    that len(queries) + queries_omitted + len(errors) == total_queries
+    once the sweep is complete. Only when the errors alone overflow the
+    budget are they cut to the first 5, at 40 characters each."""
+    compact = dict(out, full=full_name, total_queries=total_queries)
+    ranked = sorted(out["queries"].items(), key=lambda kv: (-kv[1], kv[0]))
+    for keep in range(len(ranked), -1, -1):
+        compact["queries"] = {k: round(v, 2) for k, v in ranked[:keep]}
+        if keep < len(ranked):
+            compact["queries_omitted"] = len(ranked) - keep
+        line = json.dumps(compact, separators=(",", ":"))
+        if len(line) <= TAIL_BUDGET:
+            return line
+    if "errors" in out:
+        compact["errors"] = {k: v[:40] for k, v in list(out["errors"].items())[:5]}
+    return json.dumps(compact, separators=(",", ":"))
 
 
 def main() -> None:
     t_start = time.monotonic()
-    budget = float(os.environ.get("BENCH_BUDGET_S", "1500"))
-
-    def remaining() -> float:
-        return budget - (time.monotonic() - t_start)
+    deadline = t_start + float(os.environ.get("BENCH_BUDGET_S", "1500"))
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     load_at_start = os.getloadavg()[0]
 
-    # Per-cpu-count artifact routing (VERDICT r14 "What's wrong" #2): the
-    # r14 8-core scaling run rotated BENCH_FULL.json -> .prev at its end,
-    # clobbering both the 32-core map and the drift anchor (so the next
-    # round's >30% drift detection would compare 32c numbers against 8c
-    # ones and fork a phantom cohort). Now: a run at fewer cores than the
-    # machine has writes BENCH_FULL_c{N}.json and never touches
-    # BENCH_FULL.json / .prev; only the main (full-core) run keeps the
-    # legacy filenames and rotates the drift anchor. Drift comparison
-    # additionally requires matching "cpus" in the .prev record.
+    # a run at fewer cores than the machine has writes its own file, so a
+    # scaling run never overwrites the full-core record
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    is_main_run = cpus >= (os.cpu_count() or cpus)
-    full_name = "BENCH_FULL.json" if is_main_run else f"BENCH_FULL_c{cpus}.json"
+    full_name = ("BENCH_FULL.json" if cpus >= (os.cpu_count() or cpus)
+                 else f"BENCH_FULL_c{cpus}.json")
 
+    names = _sweep_names()
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
     out: dict = {
@@ -503,65 +228,24 @@ def main() -> None:
     }
 
     def emit(partial: bool) -> None:
-        """Rewrite BENCH_FULL.json (atomic) and print the compact tail
-        line reflecting the CURRENT state. Called after every completed
-        query/fork — the last line on stdout is always the freshest
-        parseable result, so a kill at any point still leaves data."""
+        """Rewrite the full record (atomically) and print the compact
+        line, both reflecting the current state."""
         out["value"] = round(sum(timings.values()), 3)
         if errors:
             out["errors"] = errors
+        if partial:
+            out["partial"] = True
         else:
-            out.pop("errors", None)
-        out["partial"] = partial
-        if not partial:
             out.pop("partial", None)
         out["elapsed_s"] = round(time.monotonic() - t_start, 1)
         out["load_avg_1m"] = {
             "start": round(load_at_start, 2),
             "end": round(os.getloadavg()[0], 2),
         }
-        # Full-precision record for the judge (the driver's stdout tail
-        # capture is 2000 bytes — the complete per-query map does not fit).
         tmp = REPO / (full_name + ".tmp")
         tmp.write_text(json.dumps(out, indent=1) + "\n")
         tmp.replace(REPO / full_name)
-
-        # Compact line: same schema, sized to survive the 2000-byte tail
-        # intact. Keep the total exact; include per-query times
-        # (2-decimal) in descending-cost order (deterministic: ties broken
-        # by name) until the byte budget is reached, recording how many
-        # small queries were elided and where the full detail lives.
-        # total_queries pins the contract: len(queries) + queries_omitted
-        # + len(errors) == total_queries (once complete), so
-        # round-over-round comparisons never silently lose the tail.
-        tail_budget = 1800
-        compact = dict(out)
-        compact["full"] = full_name
-        compact["total_queries"] = len(HEADLINE)
-        # per-fork detail and raw pre-substitution figures live in
-        # BENCH_FULL.json; dropping them from the tail line leaves budget
-        # for more per-query entries
-        for k in ("isolated_forks", "in_sequence_raw"):
-            compact.pop(k, None)
-        # heavy-tier detail lives in BENCH_FULL.json; the tail line keeps
-        # only its total so the sf0.1 per-query entries are not crowded out
-        if "heavy" in compact:
-            compact["heavy_total"] = compact.pop("heavy").get("total")
-        ranked = sorted(timings.items(), key=lambda kv: (-kv[1], kv[0]))
-        for keep in range(len(ranked), -1, -1):
-            compact["queries"] = {k: round(v, 2) for k, v in ranked[:keep]}
-            omitted = len(ranked) - keep
-            if omitted:
-                compact["queries_omitted"] = omitted
-            else:
-                compact.pop("queries_omitted", None)
-            line = json.dumps(compact, separators=(",", ":"))
-            if len(line) <= tail_budget:
-                break
-        if len(line) > tail_budget and "errors" in compact:
-            compact["errors"] = {k: v[:40] for k, v in list(errors.items())[:5]}
-            line = json.dumps(compact, separators=(",", ":"))
-        print(line, flush=True)
+        print(tail_line(out, len(names), full_name), flush=True)
 
     def record(rec: dict) -> None:
         if "sec" in rec:
@@ -570,205 +254,24 @@ def main() -> None:
             errors[rec["q"]] = rec.get("err", "?")
         emit(partial=True)
 
-    # ----- in-sequence sweep: fresh-JVM chunks while budget allows -----
-    # Reserve headroom for the isolated pass + final write; once the
-    # sweep has eaten past SWEEP_FRAC of the budget, remaining chunks run
-    # in-process on ONE shared session (no more JVM cold-starts), and
-    # past the hard deadline remaining queries are recorded as skipped.
-    sweep_deadline = t_start + 0.80 * budget
-    hard_deadline = t_start + budget - 20.0
-    chunked = os.environ.get("SPARK_GRAFT_CHUNKED", "1") != "0"
-    shared_spark = None
-    pos = 0
-    while pos < len(HEADLINE):
-        names = HEADLINE[pos:pos + CHUNK]
-        use_fork = (chunked and shared_spark is None
-                    and time.monotonic() < sweep_deadline)
-        if use_fork:
-            ok = _stream_chunk(pos, pos + CHUNK, hard_deadline, record)
-            missing = [n for n in names
-                       if n not in timings and n not in errors]
-            if not ok and missing:
-                # subprocess died (OOM-killed / deadline): finish this
-                # chunk in-process so the bench line is never missing rows
-                if time.monotonic() < hard_deadline:
-                    from quickstart_streaming_agents_spark.session import (
-                        get_spark, ship_package)
-                    shared_spark = get_spark("bench-fallback")
-                    ship_package(shared_spark)
-                    _run_chunk_inprocess(
-                        missing, spark=shared_spark,
-                        on_query=lambda n, s, e: record(
-                            {"q": n, "sec": s} if s is not None
-                            else {"q": n, "err": e}),
-                        deadline=hard_deadline)
-                else:
-                    for n in missing:
-                        record({"q": n, "err": "SKIPPED(budget)"})
-        else:
-            if shared_spark is None:
-                from quickstart_streaming_agents_spark.session import (
-                    get_spark, ship_package)
-                shared_spark = get_spark("bench-fallback")
-                ship_package(shared_spark)
-            _run_chunk_inprocess(
-                names, spark=shared_spark,
-                on_query=lambda n, s, e: record(
-                    {"q": n, "sec": s} if s is not None
-                    else {"q": n, "err": e}),
-                deadline=hard_deadline)
-        pos += CHUNK
-    if shared_spark is not None:
-        shared_spark.stop()
-
-    # ----- isolated-fork pass: adjudication only, budget-aware -----
-    # Fresh-JVM forks ONLY for queries that need a second opinion:
-    # (a) the standing watchlist — embedding_topk_pairs (the broadcast-
-    #     accumulation sentinel, VERDICT r8 #4) plus the three r13 >2x-of-
-    #     r1 drifters text_analysis / verdict_parse / counts_dashboard
-    #     (VERDICT r13 #3: sub-1.3 s, plans unchanged, load 12 at sweep
-    #     end — fork medians adjudicate environment vs regression);
-    # (b) queries whose in-sequence figure drifted >30% vs the previous
-    #     BENCH_FULL record at the same SF;
-    # (c) queries >2x of their BENCH_r01 anchor figure.
-    # 3 forks each (median) while the budget holds, degrading to 1 fork,
-    # then to none. SPARK_GRAFT_ISOLATE=0 skips the pass entirely.
-    if os.environ.get("SPARK_GRAFT_ISOLATE", "1") != "0" and remaining() > 90:
-        import statistics
-        import subprocess
-
-        standing = {"embedding_topk_pairs", "text_analysis", "verdict_parse",
-                    "counts_dashboard"}
-        watch = set(standing)
-        try:
-            prev = json.loads((REPO / "BENCH_FULL.json.prev").read_text())
-            # cross-SF or cross-core-count deltas are meaningless (the r14
-            # scaling run poisoned the anchor with 8-core numbers; a .prev
-            # written before the "cpus" key existed is assumed main-run)
-            if prev.get("sf") == sf and prev.get("cpus", cpus) == cpus:
-                for n, t in timings.items():
-                    p = prev.get("queries", {}).get(n)
-                    if p and min(t, p) > 0.2 and max(t / p, p / t) > 1.3:
-                        watch.add(n)
-        except Exception:  # noqa: BLE001 — no prior record to drift from
-            pass
-        # VERDICT r14 "What's wrong" #3: drift- and r1-ratio-selected forks
-        # let a top-cost query that drifts slowly escape adjudication
-        # forever (training_data_pipeline was never forked in r14). The
-        # top-5 in-sequence costs always earn at least one fork.
-        for n in sorted(timings, key=lambda n: -timings[n])[:5]:
-            watch.add(n)
-        try:
-            r1 = json.loads((REPO / "BENCH_r01.json").read_text())
-            r1q = (r1.get("parsed") or {}).get("queries", {})
-            for n, t in timings.items():
-                p = r1q.get(n)
-                if p and p > 0.2 and t / p > 2.0:
-                    watch.add(n)
-        except Exception:  # noqa: BLE001
-            pass
-
-        isolated: dict[str, float] = {}
-        iso_forks: dict[str, list[list[float]]] = {}
-        # standing-watchlist members fork FIRST: they carry official
-        # adjudication duties (the r13 >2x-of-r1 drifters), and sorting
-        # purely by cost let a large drift cohort starve them of budget
-        # (observed in the r14 final run)
-        for name in sorted((n for n in watch if n in timings),
-                           key=lambda n: (n not in standing, -timings[n])):
-            if remaining() < 60:
-                break
-            # cold-JVM forks on this sandbox showed ±4x run-to-run
-            # variance (VERDICT r11 #2b) — median of 3 when budget
-            # allows, a single fork under pressure beats no evidence
-            n_forks = 3 if remaining() > 360 else 1
-            runs: list[float] = []
-            loads: list[float] = []
-            for _ in range(n_forks):
-                if remaining() < 45:
-                    break
-                try:
-                    res = subprocess.run(
-                        [sys.executable, __file__, "--isolated-one", name],
-                        capture_output=True, text=True,
-                        timeout=max(45.0, min(900.0, remaining() - 10)),
-                    )
-                    for ln in reversed(res.stdout.splitlines()):
-                        if ln.startswith('{"query"'):
-                            rec = json.loads(ln)
-                            runs.append(rec["sec"])
-                            loads.append(rec.get("load", -1.0))
-                            break
-                except Exception:  # noqa: BLE001 — isolation is best-effort
-                    pass
-            if runs:
-                isolated[name] = round(statistics.median(runs), 3)
-                # per-fork (sec, 1-min load at fork exit): a slow fork
-                # under high load is environmental evidence, not a
-                # regression signal
-                iso_forks[name] = [[sec, ld] for sec, ld in zip(runs, loads)]
-                out["isolated"] = isolated
-                out["isolated_forks"] = iso_forks
-                emit(partial=True)
-        if isolated:
-            # VERDICT r12 "What's wrong" #1: in a 200-query sweep the
-            # in-sequence figure for a late-chunk query can carry a
-            # contention phantom. When the in-sequence/isolated-median
-            # ratio exceeds 2x, the in-sequence number is measuring the
-            # sweep, not the query: substitute the isolated median into
-            # the headline sum and keep the raw figure alongside.
-            subst: dict[str, float] = {}
-            for n, iso in isolated.items():
-                t = timings.get(n)
-                if t and iso > 0 and t / iso > 2.0:
-                    subst[n] = t
-                    timings[n] = iso  # out["queries"] aliases timings
-            if subst:
-                out["in_sequence_raw"] = subst
-                out["substituted_from_isolated"] = sorted(subst)
-
-    # ----- optional heavy-tier pass (VERDICT r14 next-round #1) -----
-    # At sf0.1 the bench cannot measure parallel speedup (8 cores beat 32
-    # in r14: per-query cost is fixed overhead + tiny-partition
-    # contention). When $SPARK_GRAFT_HEAVY_DIR points at a larger
-    # deterministic fixture set (tools/gen_heavy_sf.py), the ~15 heaviest
-    # queries are re-timed there with the SAME methodology and recorded
-    # under a separate "heavy" key — additions-only: the sf0.1 headline
-    # map, total, and tail-line schema are untouched, and the driver
-    # (which does not set the env var) sees identical behavior.
-    heavy_dir = os.environ.get("SPARK_GRAFT_HEAVY_DIR", "")
-    if heavy_dir and os.path.isdir(heavy_dir) and remaining() > 120:
-        os.environ["SPARK_GRAFT_SF_DIR"] = heavy_dir
-        try:
-            h_timings, h_errors = _run_chunk_inprocess(
-                HEAVY_TIER, deadline=t_start + budget - 15.0)
-            out["heavy"] = {
-                "dir": heavy_dir,
-                "cpus": cpus,
-                "total": round(sum(h_timings.values()), 3),
-                "queries": h_timings,
-            }
-            if h_errors:
-                out["heavy"]["errors"] = h_errors
-        finally:
-            os.environ["SPARK_GRAFT_SF_DIR"] = sf_dir
-
+    pos = 0  # the first sweep position with no result yet
+    while pos < len(names) and time.monotonic() < deadline:
+        end = min(pos - pos % CHUNK + CHUNK, len(names))
+        rc = _stream_chunk(pos, end, deadline, record)
+        # a chunk reports in sweep order, so its first unrecorded name is
+        # the one it was running when it died or was killed
+        pos = next((i for i in range(pos, end)
+                    if names[i] not in timings and names[i] not in errors), end)
+        if pos < end and time.monotonic() < deadline:
+            record({"q": names[pos], "err": f"chunk process died (exit {rc})"})
+            pos += 1
+    for name in names[pos:]:
+        errors[name] = "SKIPPED(budget)"
     emit(partial=False)
-    # preserve this run as next round's drift anchor (BENCH_FULL.json is
-    # rewritten in place by every run, incl. partial ones) — MAIN runs
-    # only: a low-core scaling run must not clobber the full-core anchor
-    if is_main_run:
-        try:
-            (REPO / "BENCH_FULL.json.prev").write_text(
-                (REPO / "BENCH_FULL.json").read_text())
-        except Exception:  # noqa: BLE001
-            pass
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 2 and sys.argv[1] == "--isolated-one":
-        _isolated_one(sys.argv[2])
-    elif len(sys.argv) > 3 and sys.argv[1] == "--chunk":
+    if len(sys.argv) > 3 and sys.argv[1] == "--chunk":
         _chunk_main(int(sys.argv[2]), int(sys.argv[3]))
     else:
         main()

@@ -151,7 +151,7 @@ def main() -> None:
         f"**{unchanged} queries plan-unchanged** (exchanges/broadcasts/"
         f"python identical to the previous PLANS.md). A bench timing "
         f"delta on a plan-unchanged query is environmental, not a "
-        f"regression — read BENCH's `isolated` median + `load_avg_1m` "
+        f"regression — read BENCH's `load_avg_1m` and re-time the query "
         f"before concluding anything.",
     ]
     for n in changed:
@@ -193,10 +193,8 @@ def main() -> None:
         "id masks) and never freed them; by the time the bench sequence "
         "reached this query, dozens of queries' broadcasts were resident. "
         "All per-call broadcasts now register with runtime.track_broadcast "
-        "and bench.py releases them between queries; the query also sits "
-        "on bench.py's standing `isolated` watchlist (plus any query "
-        "whose round-over-round delta exceeds 30%), so the fresh-JVM "
-        "figure is recorded every round.",
+        "and bench.py releases them between queries, inside a fresh JVM "
+        "for every 50-query chunk of the sweep.",
         "",
         "## Oracle portability lint",
         "",
