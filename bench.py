@@ -182,10 +182,11 @@ def tail_line(out: dict, total_queries: int, full_name: str) -> str:
 
     The total stays exact. Per-query entries are rounded to 2 decimals and
     kept costliest first (ties broken by name) while the line fits in
-    TAIL_BUDGET bytes; the dropped ones are counted in queries_omitted, so
-    that len(queries) + queries_omitted + len(errors) == total_queries
-    once the sweep is complete. Only when the errors alone overflow the
-    budget are they cut to the first 5, at 40 characters each."""
+    TAIL_BUDGET bytes; the dropped ones are counted in queries_omitted.
+    Only when the errors alone overflow the budget are they cut to the
+    first 5, at 40 characters each, and the rest counted in
+    errors_omitted. So len(queries) + queries_omitted + len(errors) +
+    errors_omitted == total_queries once the sweep is complete."""
     compact = dict(out, full=full_name, total_queries=total_queries)
     ranked = sorted(out["queries"].items(), key=lambda kv: (-kv[1], kv[0]))
     for keep in range(len(ranked), -1, -1):
@@ -197,6 +198,7 @@ def tail_line(out: dict, total_queries: int, full_name: str) -> str:
             return line
     if "errors" in out:
         compact["errors"] = {k: v[:40] for k, v in list(out["errors"].items())[:5]}
+        compact["errors_omitted"] = len(out["errors"]) - len(compact["errors"])
     return json.dumps(compact, separators=(",", ":"))
 
 

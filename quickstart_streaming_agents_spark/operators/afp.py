@@ -28,15 +28,15 @@ count (a JVM zip_with fold over the bucket arrays) filters candidates.
 hot bands (silence-only clips all hashing alike) capped at
 ``max_bucket`` like the hot-shingle / phash-band caps.
 
-Scale knob (round-9 smoke finding): bit_length buckets span only ~41
+Scale knob: bit_length buckets span only ~41
 values, so a quarter digest over ``n_windows/4`` windows has
 ``~41^(n_windows/4)`` possible values. The fixture default
 ``n_windows=8`` (2 windows/quarter, ~1.7k combos) SATURATES the band
 space past ~100k clips — every band goes hot and candidate generation
 within buckets turns quadratic until ``max_bucket`` starts dropping
 them (recall loss). At corpus scale raise ``n_windows`` (32 → 41^8
-quarter combos keeps bands sparse at any size); tools/scale_smoke.py
-runs the 32-window shape at millions of clips.
+quarter combos keeps bands sparse at any size). The heavy tier
+(tools/bench_heavy.py) times the ``audio_near_dup`` query at sf1.
 """
 
 from __future__ import annotations

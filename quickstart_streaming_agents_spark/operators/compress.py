@@ -32,6 +32,26 @@ def gzip_compress(text: str, level: int = 6) -> bytes:
     return gzip.compress(text.encode("utf-8"), compresslevel=level, mtime=0)
 
 
+def synth_gzip_payloads(docs: DataFrame) -> DataFrame:
+    """Deterministic gzip corpus: given a DataFrame with ``doc_id`` and
+    ``text``, synthesize (doc_id, payload binary) rows holding each
+    text's :func:`gzip_compress` member, torn to its first 10 bytes on
+    every 23rd doc_id. Shared by the batch ``gzip_text_ingest`` query and
+    its streaming twin so both sides decode the SAME bytes. Map-only."""
+
+    def synth(batches):
+        for pdf in batches:
+            out = []
+            for i, t in zip(pdf["doc_id"], pdf["text"]):
+                p = gzip_compress(t)
+                out.append(p[:10] if i % 23 == 0 else p)  # torn member
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": out})
+
+    return docs.select("doc_id", "text").mapInPandas(
+        synth, schema="doc_id long, payload binary"
+    )
+
+
 def _bounded_inflate(p: bytes, wbits: int, cap: int) -> bytes:
     """Inflate at most ``cap`` bytes total; a payload with more output
     left once the budget is spent is a decompression bomb and raises.

@@ -12,8 +12,8 @@ hashed to ``xxhash64`` 8-byte keys directly from the token slices), and
 **broadcast the benchmark's shingle set** — eval benchmarks are MBs, so
 at 100 TB the corpus streams map-only through a broadcast-hash semi-join:
 zero shuffle of corpus text, one tiny per-doc count aggregate keyed by
-doc id. ``broadcast_benchmark=False`` switches to a shuffle hash join for
-abnormally large benchmark sets.
+doc id. A benchmark too big to broadcast goes through the Bloom tier
+(``bloom_bitset``/``bloom_member``) instead.
 """
 
 from __future__ import annotations
@@ -80,7 +80,6 @@ def contamination_flags(
     text_col: str = "text",
     bench_text_col: str | None = None,
     n: int = 13,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """``df`` + ``n_contaminated_ngrams`` + ``contaminated`` per row.
 
@@ -89,9 +88,7 @@ def contamination_flags(
     tokens emit no shingles and can never match — the standard contract.
     """
     corp = _norm_shingle_hashes(df, id_col, text_col, n)
-    bench = _bench_shingle_set(benchmark, bench_text_col or text_col, n)
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    bench = F.broadcast(_bench_shingle_set(benchmark, bench_text_col or text_col, n))
     # _norm_shingle_hashes emits DISTINCT hashes per doc, so a plain count
     # equals countDistinct without its extra (doc_id, h) exchange; only
     # matched rows reach this aggregate.
@@ -101,11 +98,9 @@ def contamination_flags(
         .agg(F.count("*").alias("n_contaminated_ngrams"))
         .withColumnRenamed("doc_id", "__hit_id")
     )
-    if broadcast_benchmark:
-        # contaminated docs are rare by construction (they overlap the
-        # benchmark) — broadcast the flags so the corpus never shuffles
-        hits = F.broadcast(hits)
-    joined = df.join(hits, df[id_col] == F.col("__hit_id"), "left")
+    # contaminated docs are rare by construction (they overlap the
+    # benchmark) — broadcast the flags so the corpus never shuffles
+    joined = df.join(F.broadcast(hits), df[id_col] == F.col("__hit_id"), "left")
     return joined.select(
         *[df[c] for c in df.columns],
         F.coalesce("n_contaminated_ngrams", F.lit(0).cast("long")).alias(
@@ -125,7 +120,6 @@ def contamination_fraction(
     bench_text_col: str | None = None,
     n: int = 8,
     threshold_pct: int = 70,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Graded contamination: per-doc FRACTION of distinct ``n``-grams
     shared with the benchmark, plus the threshold verdict — the PaLM
@@ -147,11 +141,9 @@ def contamination_fraction(
     if not 0 <= threshold_pct <= 100:
         raise ValueError(f"threshold_pct must be 0..100, got {threshold_pct}")
     corp = _norm_shingle_hashes(df, id_col, text_col, n)
-    bench = _bench_shingle_set(
+    bench = F.broadcast(_bench_shingle_set(
         benchmark, bench_text_col or text_col, n
-    ).withColumn("__m", F.lit(1))
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
+    ).withColumn("__m", F.lit(1)))
     per_doc = (
         corp.join(bench, "h", "left")
         .groupBy("doc_id")
@@ -167,8 +159,8 @@ def contamination_fraction(
     # (broadcasting it would collect a corpus-sized aggregate onto the
     # driver and every executor at web scale). per_doc leaves its
     # groupBy already hash-partitioned on the id, so the join adds only
-    # the df-side exchange. broadcast_benchmark governs ONLY the
-    # benchmark hash set, which is legitimately small.
+    # the df-side exchange. Only the benchmark hash set, which is
+    # legitimately small, is broadcast.
     joined = df.join(per_doc, df[id_col] == F.col("__hit_id"), "left")
     total = F.coalesce("n_ngrams", F.lit(0).cast("long"))
     hits = F.coalesce("n_hits", F.lit(0).cast("long"))
@@ -195,11 +187,10 @@ def decontaminate(
     text_col: str = "text",
     bench_text_col: str | None = None,
     n: int = 13,
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """The filtering form: rows of ``df`` with zero benchmark overlap."""
     flagged = contamination_flags(
-        df, benchmark, id_col, text_col, bench_text_col, n, broadcast_benchmark
+        df, benchmark, id_col, text_col, bench_text_col, n
     )
     return flagged.filter(~F.col("contaminated")).drop(
         "n_contaminated_ngrams", "contaminated"

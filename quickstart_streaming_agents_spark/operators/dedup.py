@@ -582,8 +582,8 @@ def word_window_lines(text_col, n: int = 3, joiner: str = " "):
     """Chunk whitespace words into fixed-``n``-word "lines" (an
     array<string> Column) — the fixture corpus has no newlines, so the
     line-dedup surfaces derive lines this way. ONE definition shared by
-    the batch query, the streaming twin, and the scale smoke, so the
-    chunk rule cannot drift between them (the oracle replays it in SQL).
+    the batch query and the streaming twin, so the chunk rule cannot
+    drift between them (the oracle replays it in SQL).
     """
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     words = F.split(F.trim(c), r"\s+")
@@ -749,9 +749,8 @@ def winnowing_fingerprints(
     run of ≥ window+gram_words−1 tokens share ≥1 fingerprint, at
     ~2/(window+1) the density of the full shingle set.
 
-    ONE definition shared by queries.winnowing_dedup_pairs and the
-    scale smoke, so the gram/window rule cannot drift between them
-    (the oracle replays it in SQL).
+    The gram/window rule used by queries.winnowing_dedup_pairs; the
+    oracle replays it in SQL.
 
     Plan notes (both lessons are load-bearing at scale): grams build
     via shifted-slice ``zip_with`` — ``element_at`` inside a transform

@@ -6655,28 +6655,14 @@ def unigram_logprob_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def gzip_text_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decompress a synthesized gzip corpus (every 23rd payload torn)
     and emit integrity metadata per row."""
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.compress import (
         decompress_text,
-        gzip_compress,
+        synth_gzip_payloads,
     )
 
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"))
-
-    def synth(batches):
-        for pdf in batches:
-            out = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                if i % 23 == 0:
-                    out.append(gzip_compress(t)[:10])  # torn member
-                else:
-                    out.append(gzip_compress(t))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": out})
-
-    payloads = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    dec = decompress_text(payloads)
+    dec = decompress_text(synth_gzip_payloads(docs))
     return dec.select(
         "doc_id",
         "n_bytes",
@@ -7264,21 +7250,19 @@ UNION ALL SELECT 'e_near_deduped', CAST(count(*) AS BIGINT) FROM kept3
 def build_training_pipeline(
     docs: DataFrame,
     stages: dict | None = None,
-    persist: bool = True,
     observations: dict | None = None,
 ) -> DataFrame:
     """Docs-DataFrame entry point for the flagship pipeline — shared by the
-    training_data_pipeline query (fixture parquet) and tools/scale_smoke.py
-    (synthetic corpora at 1–4M docs), so the scale probe exercises the
-    exact production plan, not a copy.
+    training_data_pipeline, packed_training_shards and curation_funnel
+    queries, so each runs the one production plan, not a copy.
 
     Pass a dict as ``stages`` to receive the intermediate stage
     DataFrames (gated / exact-deduped / decontaminated / near-deduped) —
     the curation_funnel observability query counts them without
     re-deriving (and therefore never drifting from) the stage logic.
-    ``persist=False`` skips caching the decontaminated set — right for
-    one-pass diagnostic consumers (the funnel) that would otherwise leave
-    an extra cached copy resident per invocation.
+    The decontaminated set is always persisted (it feeds two branches);
+    a caller that needs the cache released unpersists
+    ``stages["decontaminated"]``, as the funnel does.
 
     Pass a dict as ``observations`` to have each stage wrapped in a
     ``df.observe`` row counter (keys ``a_input``/``b_gated``/
@@ -7343,8 +7327,7 @@ def build_training_pipeline(
         .filter(~F.col("contaminated"))
         .select("doc_id", "text", "lang_pred", "quality", "n_tokens")
     ))
-    if persist:
-        kept2 = kept2.persist()
+    kept2 = kept2.persist()
     pairs = ngram_jaccard_pairs(kept2, "doc_id", "text", n=3, threshold=0.5)
     noncanon = dedup_clusters(pairs).filter(~F.col("is_canonical")).select(
         F.col("id").alias("doc_id")
@@ -7380,8 +7363,7 @@ def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     stages: dict = {}
     observations: dict = {}
-    build_training_pipeline(docs, stages=stages, persist=True,
-                            observations=observations)
+    build_training_pipeline(docs, stages=stages, observations=observations)
     try:
         # the one action: fires every observe counter below it
         n_final = stages["near_deduped"].count()
@@ -9418,7 +9400,7 @@ _ADPCM_SIG_ORACLE = (
     # sequential Python nibble walk prices each sample, so the fixture
     # keeps blocks minimal — big-signal decode coverage lives in
     # tests/test_afp.py (3k-sample sine/noise/stereo vs the independent
-    # reference) and the 1/16-slice scale smoke measures the real rate
+    # reference)
     .replace("amp * amp * 256", "amp * amp * 9")
     + """
 SELECT doc_id, sig, b0, b1, b2, b3 FROM wide
@@ -10728,9 +10710,8 @@ GROUP BY 1, 2 HAVING count(*) >= 2
 def winnowing_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing (MOSS) fingerprint near-dup candidates — see block
     comment for the algorithm; the fingerprint fold lives in
-    operators/dedup.winnowing_fingerprints (ONE definition shared with
-    the scale smoke, incl. both documented cross-lambda-CSE plan
-    lessons)."""
+    operators/dedup.winnowing_fingerprints (incl. both documented
+    cross-lambda-CSE plan lessons)."""
     from quickstart_streaming_agents_spark.operators.dedup import (
         winnowing_fingerprints,
     )

@@ -824,24 +824,13 @@ def gzip_ingest_stream_pipeline(
     trivially restartable), decodable texts land on ``ingested_texts``
     with their integrity metadata, torn/non-compressed payloads land on
     ``ingest_quarantine`` (the media-triage routing contract). Parity
-    with the batch decode is exact — same operator, same rows."""
-    import pandas as pd
-
-    from ..operators.compress import decompress_text, gzip_compress
+    with the batch decode is exact — same operator, same synth
+    (operators/compress.synth_gzip_payloads), same rows."""
+    from ..operators.compress import decompress_text, synth_gzip_payloads
 
     spark = catalog.spark
-    docs = spark.read.parquet(documents_path).select("doc_id", "text")
-
-    def synth(batches):
-        for pdf in batches:
-            out = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                p = gzip_compress(t)
-                out.append(p[:10] if i % 23 == 0 else p)  # torn member
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": out})
-
-    payloads = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    stamped = payloads.withColumn("ts", arrival_ts("doc_id"))
+    docs = spark.read.parquet(documents_path)
+    stamped = synth_gzip_payloads(docs).withColumn("ts", arrival_ts("doc_id"))
     catalog.create_table_as("gz_raw_payloads", stamped)
 
     # decode ONCE into an intermediate topic; both routes are then

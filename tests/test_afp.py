@@ -275,3 +275,22 @@ def test_g711_container_and_encode_roundtrip():
 
     with pytest.raises(ValueError, match="law must be"):
         make_wav_g711(b"\x00", law="pcm")
+
+
+def test_audio_near_dup_exchange_budget(spark):
+    """The banded audio dedup keeps its plan budget, the same as the
+    banded image dedup's: at most 4 keyed exchanges, so a corpus-sized
+    reshuffle creeping into candidate generation fails here. The ids-only
+    round-robin spread of the fixture scan shows once per consumer
+    subtree in the initial plan."""
+    from quickstart_streaming_agents_spark.plans import (
+        count_keyed_exchanges,
+        count_roundrobin_exchanges,
+    )
+    from quickstart_streaming_agents_spark.queries import QUERIES
+
+    from .conftest import SF_DIR
+
+    df = QUERIES["audio_near_dup"](spark, SF_DIR)
+    assert count_keyed_exchanges(df) <= 4
+    assert count_roundrobin_exchanges(df) <= 5

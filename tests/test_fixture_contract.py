@@ -140,7 +140,9 @@ def test_no_config_mutation_for_us_fixture(spark):
 def test_bench_headline_covers_the_whole_registry():
     """The sweep's last stdout line is what a 2000-byte tail capture
     keeps: it must parse, fit, and account for every registered query —
-    len(queries) + queries_omitted + len(errors) == total_queries."""
+    len(queries) + queries_omitted + len(errors) + errors_omitted ==
+    total_queries — also after a budget stop, when the errors alone
+    overflow the line."""
     import json
 
     import bench
@@ -156,10 +158,22 @@ def test_bench_headline_covers_the_whole_registry():
            "queries": timings, "sf": 0.1, "cpus": 4, "errors": errors,
            "elapsed_s": 812.4, "load_avg_1m": {"start": 0.5, "end": 3.9}}
 
+    def accounted(tail):
+        return (len(tail["queries"]) + tail.get("queries_omitted", 0)
+                + len(tail["errors"]) + tail.get("errors_omitted", 0))
+
     line = bench.tail_line(out, len(names), "BENCH_FULL.json")
 
     assert len(line) <= 1800
     tail = json.loads(line)
     assert tail["total_queries"] == len(QUERIES)
-    assert (len(tail["queries"]) + tail.get("queries_omitted", 0)
-            + len(tail["errors"])) == tail["total_queries"]
+    assert accounted(tail) == tail["total_queries"]
+
+    # budget stop: 5 timings, every other name SKIPPED(budget)
+    stopped = dict(out, queries={n: 1.5 for n in names[:5]},
+                   errors={n: "SKIPPED(budget)" for n in names[5:]})
+    line = bench.tail_line(stopped, len(names), "BENCH_FULL.json")
+    assert len(line) <= 2000
+    tail = json.loads(line)
+    assert len(stopped["errors"]) == 201
+    assert accounted(tail) == tail["total_queries"] == len(QUERIES)

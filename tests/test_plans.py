@@ -401,7 +401,7 @@ def test_round11_query_plan_budgets_pinned(spark):
     # shape: verification now explodes candidate LEGS and groupBy-s
     # (id_a, id_b) — one extra NARROW exchange of candidate-pair rows
     # in exchange for dropping both wide-__terms-array sort-merge
-    # join-backs (measured faster; see OPTIMIZATION_r14.md §11)
+    # join-backs (the narrow exchange shuffles pair ids, not term arrays)
     assert count_exchanges(_q(spark, "prefix_filter_dedup")) <= 17
     assert count_exchanges(_q(spark, "containment_dedup")) <= 6
     # capstone: map-only extract/canonicalize + broadcast rules join,

@@ -39,7 +39,7 @@ Scale-up design (R replicas, default 10 — "sf1"):
 - Output parquet is written with **many row groups** (~32+ for the big
   tables) so scan parallelism is real — the single-row-group layout of
   the sf0.1 fixtures is precisely what capped map-stage parallelism at
-  one task (OPTIMIZATION_r14 section 2).
+  one task (a row group is the smallest scan split).
 
 Usage: python tools/gen_heavy_sf.py [--src /root/testdata/sf0.1]
        [--out /tmp/qssa_heavy_sf1] [--replicas 10]
