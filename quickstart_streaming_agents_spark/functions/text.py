@@ -853,31 +853,20 @@ def synth_charset_payloads(docs):
     UTF-8 default). Shared by the batch ``charset_sniff`` query and its
     streaming gate twin so both sides sniff the SAME bytes; keyed only
     by doc_id, so replay is bit-identical. Map-only (one Arrow pass)."""
-    import pandas as pd
+    from ..operators.payload import synth_payloads
 
     boms = [b"\xef\xbb\xbf", b"\xff\xfe", b"\xfe\xff",
             b"\xff\xfe\x00\x00", b"\x00\x00\xfe\xff", b"", b""]
     labels = ["windows-1252", "iso-8859-1", "shift_jis", "gb2312", "utf-8"]
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 29 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                meta = (
-                    f'<meta charset="{labels[i % 5]}">'.encode()
-                    if i % 3 == 0 else b""
-                )
-                payloads.append(
-                    boms[i % 7] + b"<html><head>" + meta
-                    + b"</head><body>doc " + str(i).encode()
-                    + b"</body></html>"
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i: int) -> bytes:
+        if i % 29 == 0:
+            return b"garbage:" + str(i).encode()
+        meta = (
+            f'<meta charset="{labels[i % 5]}">'.encode()
+            if i % 3 == 0 else b""
+        )
+        return (boms[i % 7] + b"<html><head>" + meta
+                + b"</head><body>doc " + str(i).encode() + b"</body></html>")
 
-    return docs.select("doc_id").mapInPandas(
-        synth, schema="doc_id long, payload binary"
-    )
+    return synth_payloads(docs, make)

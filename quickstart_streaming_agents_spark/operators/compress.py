@@ -23,7 +23,7 @@ import zlib
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from .payload import map_payloads
+from .payload import map_payloads, synth_payloads
 
 
 def gzip_compress(text: str, level: int = 6) -> bytes:
@@ -39,17 +39,11 @@ def synth_gzip_payloads(docs: DataFrame) -> DataFrame:
     every 23rd doc_id. Shared by the batch ``gzip_text_ingest`` query and
     its streaming twin so both sides decode the SAME bytes. Map-only."""
 
-    def synth(batches):
-        for pdf in batches:
-            out = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                p = gzip_compress(t)
-                out.append(p[:10] if i % 23 == 0 else p)  # torn member
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": out})
+    def make(i: int, t: str) -> bytes:
+        p = gzip_compress(t)
+        return p[:10] if i % 23 == 0 else p  # torn member
 
-    return docs.select("doc_id", "text").mapInPandas(
-        synth, schema="doc_id long, payload binary"
-    )
+    return synth_payloads(docs, make, ("doc_id", "text"))
 
 
 def _bounded_inflate(p: bytes, wbits: int, cap: int) -> bytes:

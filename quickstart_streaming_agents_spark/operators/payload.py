@@ -1,10 +1,22 @@
-"""The (id, payload) walker boundary: the one place where an operator
-that turns each binary payload into typed rows crosses the JVM↔Python
-boundary (one Arrow-batched ``mapInPandas`` per call).
+"""The (id, payload) boundary: the one place where binary payloads
+cross the JVM↔Python boundary, one Arrow-batched ``mapInPandas`` per
+call. Two halves share it:
 
-Contract, shared by every payload walker (warc/tar/zip/ogg/flac/avro/
-parquet/exif/id3/mp3/mp4 demuxes, the compress decoders, dHash and the
-audio energy signature):
+* synthesis (``synth_rows`` / ``synth_payloads``): a per-id maker
+  ``make(*row) -> bytes`` builds each row's payload from its ``cols``
+  values. A maker is deterministic per id and never raises; a
+  deliberately corrupt asset is just bytes it returns.
+* walking (``payload_rows`` / ``map_payloads``): a walker turns each
+  payload into typed rows — the warc/tar/zip/ogg/flac/avro/parquet/
+  exif/id3/mp3/mp4 demuxes, the compress decoders, dHash and the audio
+  energy signature.
+
+A fused stage composes the two inside one ``mapInPandas``,
+``payload_rows(walk, …)(synth_rows(make)(batches))``, so the payload
+bytes never cross the boundary; its rows are those of the two-stage
+``map_payloads(synth_payloads(…), walk, …)``.
+
+Walking quarantines:
 
 * ``walk(p: bytes)`` returns the output rows of one payload, each a
   list of values in ``fields`` order; the id column is prepended here.
@@ -30,6 +42,7 @@ from collections.abc import Callable, Iterator, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 
+Make = Callable[..., bytes]
 Walk = Callable[[bytes], list]
 Fields = Sequence[tuple[str, str]]
 
@@ -42,6 +55,37 @@ def payload_ddl(fields: Fields) -> str:
     return ", ".join(f"{name} {typ}" for name, typ in fields)
 
 
+def synth_rows(
+    make: Make, cols: Sequence[str] = ("doc_id",)
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The pandas batch body of ``synth_payloads``: batches holding
+    ``cols`` (``doc_id`` among them) in, ``(doc_id, payload)`` batches
+    out, with one ``make(*row)`` call per input row, in input order.
+    Fused stages compose it in front of ``payload_rows``."""
+
+    def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = zip(*(pdf[c].tolist() for c in cols), strict=True)
+            yield pd.DataFrame({
+                "doc_id": pdf["doc_id"].to_numpy(),
+                "payload": [make(*row) for row in rows],
+            })
+
+    return body
+
+
+def synth_payloads(
+    df: DataFrame, make: Make, cols: Sequence[str] = ("doc_id",)
+) -> DataFrame:
+    """One map-only ``mapInPandas`` over ``df``'s ``cols``: a
+    ``(doc_id long, payload binary)`` row per input row, per the module
+    contract. It never spreads; callers that want the Python work fanned
+    out hand it a ``spread_scan``-ed frame."""
+    return df.select(*cols).mapInPandas(
+        synth_rows(make, cols), schema="doc_id long, payload binary"
+    )
+
+
 def payload_rows(
     walk: Walk,
     fields: Fields,
@@ -52,8 +96,7 @@ def payload_rows(
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """The pandas batch body of ``map_payloads``: ``(id, payload)``
     batches in, ``(id, *fields)`` batches out, per the module contract.
-    Fused stages compose it behind a Python payload producer inside one
-    ``mapInPandas`` — the payload bytes then never cross the boundary."""
+    Fused stages compose it behind ``synth_rows``."""
     failed = [] if fail_row is None else [list(fail_row)]
 
     def body(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -22,9 +22,9 @@ member ends the walk gracefully; a payload with no valid member raises
 — quarantined by the payload walker (operators/payload.py).
 
 Correctness stance: tests walk archives produced by the stdlib
-``tarfile`` module (an INDEPENDENT writer — no self-consistency trap),
-and the registered query's DuckDB oracle replays names, sizes and
-512-block prefix-sum offsets analytically.
+``tarfile`` module (an INDEPENDENT writer — no self-consistency trap;
+``make_tar`` is that writer), and the registered query's DuckDB oracle
+replays names, sizes and 512-block prefix-sum offsets analytically.
 
 Spark-first shape: map-only ``mapInPandas`` over payload bytes — the
 walk fuses into the scan, zero shuffle at any corpus size; downstream
@@ -35,12 +35,29 @@ WebDataset readers do.
 from __future__ import annotations
 
 import hashlib
+import io
+import tarfile
 
 from pyspark.sql import DataFrame
 
 from .payload import map_payloads
 
 _BLOCK = 512
+
+
+def make_tar(members: list[tuple[str, bytes]]) -> bytes:
+    """A ustar archive of ``(name, content)`` members, in order, written
+    by the stdlib ``tarfile`` module with mtime pinned to 0 (fixture
+    determinism, the ``make_warc`` convention)."""
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w",
+                      format=tarfile.USTAR_FORMAT) as tf:
+        for name, content in members:
+            ti = tarfile.TarInfo(name)
+            ti.size = len(content)
+            ti.mtime = 0
+            tf.addfile(ti, io.BytesIO(content))
+    return buf.getvalue()
 
 
 def _octal(field: bytes) -> int:

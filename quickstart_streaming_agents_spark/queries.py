@@ -26,6 +26,7 @@ from quickstart_streaming_agents_spark.operators.anomaly import (
     ml_detect_anomalies,
     norm_ppf,
 )
+from quickstart_streaming_agents_spark.operators.payload import synth_payloads
 from quickstart_streaming_agents_spark.operators.windows import tumble
 from quickstart_streaming_agents_spark.registries import DEFAULT_CATALOG, Agent, Tool
 from quickstart_streaming_agents_spark.sources.parquet import load_table, spread_scan
@@ -2315,14 +2316,10 @@ def lang_id_ngram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # Trigram scoring is the most compute-heavy map in the suite
-    # (interpreted higher-order funcs). A single-split scan (the fixture)
-    # serializes it on one core, so fan out — but only then: at real scale
-    # the scan already yields many splits and an unconditional repartition
-    # would be a full shuffle of the text column for nothing.
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    parallelism = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < parallelism:
-        docs = docs.repartition(parallelism)
+    # (interpreted higher-order funcs): spread the single-split fixture
+    # scan across the cores.
+    docs = spread_scan(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text"))
     # Clean and slice in SEPARATE projections so each stays a materialized
     # attribute: inlining the regex clean into the trigram lambda would
     # re-run it per array element (O(n²)/row — 48 s vs <1 s at sf0.1).
@@ -4486,7 +4483,6 @@ def multimodal_png_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     color types, plus deliberate truncation every ~19th row (see the
     oracle comment above for the per-row synthesis rules)."""
     import numpy as np
-    import pandas as pd
 
     from quickstart_streaming_agents_spark.operators.multimodal import (
         extract_media_features,
@@ -4495,23 +4491,17 @@ def multimodal_png_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                w, h, v = 1 + i % 6, 1 + i % 4, i % 256
-                p = make_png(
-                    np.full((h, w, 3), v, dtype=np.uint8),
-                    color_type=(0, 2, 4, 6)[i % 4],
-                    filter_type=i % 5,
-                )
-                # torn mid-IHDR: signature intact, chunk truncated
-                payloads.append(p[:25] if i % 19 == 0 else p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        w, h, v = 1 + i % 6, 1 + i % 4, i % 256
+        p = make_png(
+            np.full((h, w, 3), v, dtype=np.uint8),
+            color_type=(0, 2, 4, 6)[i % 4],
+            filter_type=i % 5,
+        )
+        # torn mid-IHDR: signature intact, chunk truncated
+        return p[:25] if i % 19 == 0 else p
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    decoded = extract_media_features(synth_df, "payload",
+    decoded = extract_media_features(synth_payloads(docs, make), "payload",
                                      media_type="image", decoder="real")
     return decoded.select(
         "doc_id",
@@ -6704,8 +6694,6 @@ def codec_sniff_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import bz2
     import lzma
 
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.compress import (
         gzip_compress,
         sniff_decompress_text,
@@ -6714,25 +6702,19 @@ def codec_sniff_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_scan(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
-    def synth(batches):
-        for pdf in batches:
-            out = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                raw = t.encode("utf-8")
-                if i % 23 == 0:
-                    out.append(b"\x1f\x8b" + b"torn")  # sniffs gzip, dies
-                elif i % 4 == 0:
-                    out.append(gzip_compress(t))
-                elif i % 4 == 1:
-                    out.append(bz2.compress(raw, 9))
-                elif i % 4 == 2:
-                    out.append(lzma.compress(raw, format=lzma.FORMAT_XZ))
-                else:
-                    out.append(raw)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": out})
+    def make(i, t):
+        raw = t.encode("utf-8")
+        if i % 23 == 0:
+            return b"\x1f\x8b" + b"torn"  # sniffs gzip, dies
+        if i % 4 == 0:
+            return gzip_compress(t)
+        if i % 4 == 1:
+            return bz2.compress(raw, 9)
+        if i % 4 == 2:
+            return lzma.compress(raw, format=lzma.FORMAT_XZ)
+        return raw
 
-    payloads = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    dec = sniff_decompress_text(payloads)
+    dec = sniff_decompress_text(synth_payloads(docs, make, ("doc_id", "text")))
     return dec.select(
         "doc_id",
         "codec",
@@ -8059,7 +8041,6 @@ def multimodal_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus deliberate truncation every ~23rd row (synthesis rules in the
     oracle comment above)."""
     import numpy as np
-    import pandas as pd
 
     from quickstart_streaming_agents_spark.operators.multimodal import (
         extract_media_features,
@@ -8068,23 +8049,17 @@ def multimodal_gif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                w, h, nf = 1 + i % 5, 1 + i % 3, 1 + i % 3
-                frames = [
-                    np.full((h, w, 3), (i + 17 * f) % 256, dtype=np.uint8)
-                    for f in range(nf)
-                ]
-                p = make_gif(frames, delay_cs=1 + i % 4)
-                # torn inside the global color table: signature intact
-                payloads.append(p[:15] if i % 23 == 0 else p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        w, h, nf = 1 + i % 5, 1 + i % 3, 1 + i % 3
+        frames = [
+            np.full((h, w, 3), (i + 17 * f) % 256, dtype=np.uint8)
+            for f in range(nf)
+        ]
+        p = make_gif(frames, delay_cs=1 + i % 4)
+        # torn inside the global color table: signature intact
+        return p[:15] if i % 23 == 0 else p
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    decoded = extract_media_features(synth_df, "payload",
+    decoded = extract_media_features(synth_payloads(docs, make), "payload",
                                      media_type="video", decoder="real")
     return decoded.select(
         "doc_id",
@@ -8232,7 +8207,6 @@ def multimodal_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDCT → color transform) through the production mapInPandas image
     path — synthesis rules in the oracle comment above."""
     import numpy as np
-    import pandas as pd
 
     from quickstart_streaming_agents_spark.operators.multimodal import (
         extract_media_features,
@@ -8242,25 +8216,19 @@ def multimodal_jpeg_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
     ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                w, h, v = 3 + i % 13, 2 + i % 9, i % 256
-                if i % 5 == 0:
-                    img = np.full((h, w), v, dtype=np.uint8)
-                    sub = "444"
-                else:
-                    img = np.full((h, w, 3), v, dtype=np.uint8)
-                    sub = "420" if i % 2 == 0 else "444"
-                p = make_jpeg(img, subsampling=sub, quant_tables=ones)
-                # torn inside APP0: SOI intact, segment truncated
-                payloads.append(p[:20] if i % 23 == 0 else p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        w, h, v = 3 + i % 13, 2 + i % 9, i % 256
+        if i % 5 == 0:
+            img = np.full((h, w), v, dtype=np.uint8)
+            sub = "444"
+        else:
+            img = np.full((h, w, 3), v, dtype=np.uint8)
+            sub = "420" if i % 2 == 0 else "444"
+        p = make_jpeg(img, subsampling=sub, quant_tables=ones)
+        # torn inside APP0: SOI intact, segment truncated
+        return p[:20] if i % 23 == 0 else p
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    decoded = extract_media_features(synth_df, "payload",
+    decoded = extract_media_features(synth_payloads(docs, make), "payload",
                                      media_type="image", decoder="real")
     return decoded.select(
         "doc_id",
@@ -8827,12 +8795,11 @@ FROM base
 """
 
 
-@query("media_probe_meta", oracle=_MEDIA_PROBE_ORACLE)
-def media_probe_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Header-only triage probe over a mixed 7-container corpus —
-    synthesis rules in the oracle comment above."""
+def _media_asset(i: int) -> bytes:
+    """doc_id -> one asset of the 8-container corpus (see the oracle
+    comment above); every 23rd payload is garbage. Shared with the
+    streaming media triage so both probe the same bytes."""
     import numpy as np
-    import pandas as pd
 
     from quickstart_streaming_agents_spark.operators.multimodal import (
         make_bmp,
@@ -8843,53 +8810,48 @@ def media_probe_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_png,
         make_wav,
         make_webp,
+    )
+
+    if i % 23 == 0:
+        return b"garbage:" + str(i).encode()
+    c = i % 8
+    if c == 0:
+        return make_png(np.zeros((1 + i % 4, 1 + i % 6, 3), np.uint8))
+    if c == 1:
+        frames = [np.zeros((1 + i % 3, 1 + i % 5, 3), np.uint8)
+                  for _ in range(1 + i % 4)]
+        return make_gif(frames, delay_cs=1 + i % 3)
+    if c == 2:
+        ones = np.ones((8, 8), np.int64)
+        return make_jpeg(np.zeros((2 + i % 7, 3 + i % 9, 3), np.uint8),
+                         quant_tables=(ones, ones))
+    if c == 3:
+        return make_bmp(np.zeros((1 + i % 5, 1 + i % 8, 3), np.uint8))
+    if c == 4:
+        n = 104 + 8 * (i % 50)
+        return make_wav(np.zeros((n, 1 + i % 2), np.int16), rate=8000)
+    if c == 5:
+        return make_mp3(3 + i % 7, 128, 44100, mono=bool(i % 2))
+    if c == 6:
+        k = 1 + i % 4
+        return make_mp4(16 * k, 9 * k, 100 * (1 + i % 20))
+    return make_webp(
+        2 + i % 9, 1 + i % 6, kind=("vp8", "vp8l", "vp8x")[i % 3],
+        frames=(2 + i % 4) if i % 3 == 2 else 1,
+        frame_ms=40,
+    )
+
+
+@query("media_probe_meta", oracle=_MEDIA_PROBE_ORACLE)
+def media_probe_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Header-only triage probe over a mixed 7-container corpus —
+    synthesis rules in the oracle comment above."""
+    from quickstart_streaming_agents_spark.operators.multimodal import (
         probe_media,
     )
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
-    ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
-
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                c = i % 8
-                if c == 0:
-                    p = make_png(np.zeros((1 + i % 4, 1 + i % 6, 3), np.uint8))
-                elif c == 1:
-                    nf = 1 + i % 4
-                    frames = [np.zeros((1 + i % 3, 1 + i % 5, 3), np.uint8)
-                              for _ in range(nf)]
-                    p = make_gif(frames, delay_cs=1 + i % 3)
-                elif c == 2:
-                    p = make_jpeg(np.zeros((2 + i % 7, 3 + i % 9, 3), np.uint8),
-                                  quant_tables=ones)
-                elif c == 3:
-                    p = make_bmp(np.zeros((1 + i % 5, 1 + i % 8, 3), np.uint8))
-                elif c == 4:
-                    n = 104 + 8 * (i % 50)
-                    p = make_wav(np.zeros((n, 1 + i % 2), np.int16), rate=8000)
-                elif c == 5:
-                    p = make_mp3(3 + i % 7, 128, 44100, mono=bool(i % 2))
-                elif c == 6:
-                    k = 1 + i % 4
-                    p = make_mp4(16 * k, 9 * k, 100 * (1 + i % 20))
-                else:
-                    kind = ("vp8", "vp8l", "vp8x")[i % 3]
-                    p = make_webp(
-                        2 + i % 9, 1 + i % 6, kind=kind,
-                        frames=(2 + i % 4) if i % 3 == 2 else 1,
-                        frame_ms=40,
-                    )
-                payloads.append(p)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    probed = probe_media(synth_df, "payload")
+    probed = probe_media(synth_payloads(docs, _media_asset), "payload")
     return probed.select(
         "doc_id",
         "container",
@@ -9075,8 +9037,6 @@ FROM d, unnest(range(0, CAST(n AS BIGINT))) AS t(k)
 def mp3_demux_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real MP3 frame-walk demux — see block comment; operator in
     operators/multimodal.py (map-only 1->N mapInPandas)."""
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.multimodal import (
         demux_mp3_frames,
         make_mp3,
@@ -9084,25 +9044,18 @@ def mp3_demux_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                payloads.append(make_mp3(
-                    3 + i % 7,
-                    bitrate_kbps=[64, 96, 128, 192][i % 4],
-                    samplerate_hz=[44100, 48000, 32000][i % 3],
-                    mono=bool(i % 2),
-                    id3_pad=i % 17,
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        return make_mp3(
+            3 + i % 7,
+            bitrate_kbps=[64, 96, 128, 192][i % 4],
+            samplerate_hz=[44100, 48000, 32000][i % 3],
+            mono=bool(i % 2),
+            id3_pad=i % 17,
+        )
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return demux_mp3_frames(synth_df, "doc_id", "payload")
+    return demux_mp3_frames(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -9196,61 +9149,65 @@ SELECT doc_id, NULL, TRUE FROM d WHERE doc_id % 23 = 0
 """
 
 
-def _synth_afp_wav_batches():
-    """The per-batch WAV synthesis body of ``_synth_afp_wavs``,
-    exposed so the fused fingerprint queries can compose it with the
-    sig computation inside one Python stage."""
+def _afp_amps(ns: str, i: int) -> list[int]:
+    """Clip ``i``'s 8 window amplitudes under hash namespace ``ns``
+    (the closed form in the block comment)."""
+    import hashlib
+
+    amps = []
+    for w in range(8):
+        a = int(hashlib.md5(
+            f"{ns}:{i % 150}:{w}".encode()
+        ).hexdigest()[:15], 16) % 32768
+        if i % 3 != 0 and w == i % 8:
+            a = (a + (i % 5) * 997) % 32768
+        amps.append(a - 16384)
+    return amps
+
+
+def _afp_stereo(i: int, ns: str, noise_ns: str, block: int):
+    """Stereo int16 PCM of clip ``i``: channel 0 the block-constant
+    ``_afp_amps(ns, i)``, channel 1 decoy noise the fingerprint must
+    ignore, ``block`` samples per window."""
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
-    from quickstart_streaming_agents_spark.operators.multimodal import make_wav
-
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                base = i % 150
-                amps = []
-                for w in range(8):
-                    a = int(hashlib.md5(
-                        f"afp:{base}:{w}".encode()
-                    ).hexdigest()[:15], 16) % 32768
-                    if i % 3 != 0 and w == i % 8:
-                        a = (a + (i % 5) * 997) % 32768
-                    amps.append(a - 16384)
-                samples = np.repeat(
-                    np.asarray(amps, dtype=np.int16), 256
-                ).reshape(-1, 1)
-                payloads.append(make_wav(samples, rate=8000))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
-def _synth_afp_wavs(docs: DataFrame) -> DataFrame:
-    """doc_id -> deterministic block-constant PCM-16 WAV (see block
-    comment); every 23rd payload is garbage for the quarantine path."""
-    return spread_scan(docs.select("doc_id")).mapInPandas(
-        _synth_afp_wav_batches(), schema="doc_id long, payload binary"
+    noise = [int(hashlib.md5(
+        f"{noise_ns}:{i}:{w}".encode()
+    ).hexdigest()[:4], 16) % 32768 - 16384 for w in range(8)]
+    return np.stack(
+        [np.repeat(np.asarray(_afp_amps(ns, i), dtype=np.int16), block),
+         np.repeat(np.asarray(noise, dtype=np.int16), block)],
+        axis=1,
     )
 
 
+def _afp_wav(i: int) -> bytes:
+    """doc_id -> deterministic block-constant PCM-16 WAV (see block
+    comment); every 23rd payload is garbage for the quarantine path."""
+    import numpy as np
+
+    from quickstart_streaming_agents_spark.operators.multimodal import make_wav
+
+    if i % 23 == 0:
+        return b"garbage:" + str(i).encode()
+    samples = np.repeat(
+        np.asarray(_afp_amps("afp", i), dtype=np.int16), 256
+    ).reshape(-1, 1)
+    return make_wav(samples, rate=8000)
+
+
 def _fused_energy_sigs(
-    ids: DataFrame, synth, window_samples: int = 256
+    ids: DataFrame, make, window_samples: int = 256
 ) -> DataFrame:
-    """Payload synthesis (``synth``: doc_id batches → (doc_id, payload)
-    batches) and energy fingerprinting fused into ONE ``mapInPandas``
-    stage (guide §4): chaining the synth into ``audio_energy_sig`` as
-    two Arrow stages round-trips every payload Python→JVM→Python even
-    though no shuffle sits between them. Same bytes synthesized, same
-    decode exercised, half the boundary crossings — identical
-    ``(doc_id, sig, b0..b3)`` output."""
+    """Payload synthesis (``make``: doc_id → payload bytes) and energy
+    fingerprinting fused into ONE ``mapInPandas`` stage (guide §4):
+    chaining the synth into ``audio_energy_sig`` as two Arrow stages
+    round-trips every payload Python→JVM→Python even though no shuffle
+    sits between them. Same bytes synthesized, same decode exercised,
+    half the boundary crossings — identical ``(doc_id, sig, b0..b3)``
+    output."""
     from quickstart_streaming_agents_spark.operators.afp import (
         SIG_FIELDS,
         energy_sig_rows,
@@ -9258,8 +9215,10 @@ def _fused_energy_sigs(
     from quickstart_streaming_agents_spark.operators.payload import (
         payload_ddl,
         payload_rows,
+        synth_rows,
     )
 
+    synth = synth_rows(make)
     sig = payload_rows(lambda p: energy_sig_rows(p, window_samples),
                        SIG_FIELDS, fail_row=[None] * 5)
     return ids.mapInPandas(
@@ -9269,9 +9228,8 @@ def _fused_energy_sigs(
 
 
 def _synth_afp_sigs(docs: DataFrame) -> DataFrame:
-    """``_synth_afp_wavs`` fused with the energy fingerprint."""
-    return _fused_energy_sigs(spread_scan(docs.select("doc_id")),
-                              _synth_afp_wav_batches())
+    """``_afp_wav`` payloads fused with the energy fingerprint."""
+    return _fused_energy_sigs(spread_scan(docs.select("doc_id")), _afp_wav)
 
 
 @query("audio_energy_sig", oracle=_AUDIO_SIG_ORACLE)
@@ -9317,55 +9275,6 @@ SELECT doc_id, NULL, NULL, NULL, NULL, NULL FROM d WHERE doc_id % 23 = 0
 """
 
 
-def _synth_afp_mp4_batches():
-    """The per-batch stereo PCM-16 MP4 synthesis body (see block
-    comment); every 23rd payload is garbage for the quarantine path.
-    Returned as a batch generator so the query fuses it with the
-    fingerprint computation in one Python stage."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
-    from quickstart_streaming_agents_spark.operators.multimodal import (
-        make_mp4_pcm,
-    )
-
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                base = i % 150
-                amps, noise = [], []
-                for w in range(8):
-                    a = int(hashlib.md5(
-                        f"m4a:{base}:{w}".encode()
-                    ).hexdigest()[:15], 16) % 32768
-                    if i % 3 != 0 and w == i % 8:
-                        a = (a + (i % 5) * 997) % 32768
-                    amps.append(a - 16384)
-                    noise.append(int(hashlib.md5(
-                        f"noise:{i}:{w}".encode()
-                    ).hexdigest()[:4], 16) % 32768 - 16384)
-                stereo = np.stack(
-                    [np.repeat(np.asarray(amps, dtype=np.int16), 256),
-                     np.repeat(np.asarray(noise, dtype=np.int16), 256)],
-                    axis=1,
-                )
-                payloads.append(make_mp4_pcm(
-                    stereo, rate=8000,
-                    fmt="twos" if i % 2 else "sowt",
-                    two_chunks=(i % 5 == 0),
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
-
-
 @query("mp4_pcm_energy_sig", oracle=_MP4_PCM_SIG_ORACLE)
 def mp4_pcm_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio energy fingerprint over REAL MP4 PCM containers — see
@@ -9373,9 +9282,21 @@ def mp4_pcm_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint in operators/afp.py (map-only, zero shuffle;
     synth+fingerprint fused into one Python stage like
     ``_synth_afp_sigs``)."""
+    from quickstart_streaming_agents_spark.operators.multimodal import (
+        make_mp4_pcm,
+    )
+
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        return make_mp4_pcm(
+            _afp_stereo(i, "m4a", "noise", 256), rate=8000,
+            fmt="twos" if i % 2 else "sowt",
+            two_chunks=(i % 5 == 0),
+        )
+
     docs = load_table(spark, sf_dir, "documents")
-    return _fused_energy_sigs(spread_scan(docs.select("doc_id")),
-                              _synth_afp_mp4_batches())
+    return _fused_energy_sigs(spread_scan(docs.select("doc_id")), make)
 
 
 # ---------------------------------------------------------------------------
@@ -9417,48 +9338,19 @@ def adpcm_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint in operators/afp.py (map-only, zero shuffle;
     synth+fingerprint fused into one Python stage like
     ``_synth_afp_sigs``)."""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.multimodal import (
         make_wav_ima_adpcm,
     )
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                base = i % 150
-                amps, noise = [], []
-                for w in range(8):
-                    a = int(hashlib.md5(
-                        f"ima:{base}:{w}".encode()
-                    ).hexdigest()[:15], 16) % 32768
-                    if i % 3 != 0 and w == i % 8:
-                        a = (a + (i % 5) * 997) % 32768
-                    amps.append(a - 16384)
-                    noise.append(int(hashlib.md5(
-                        f"inoise:{i}:{w}".encode()
-                    ).hexdigest()[:4], 16) % 32768 - 16384)
-                stereo = np.stack(
-                    [np.repeat(np.asarray(amps, dtype=np.int16), 9),
-                     np.repeat(np.asarray(noise, dtype=np.int16), 9)],
-                    axis=1,
-                )
-                payloads.append(
-                    make_wav_ima_adpcm(stereo, rate=8000, block_samples=9)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        return make_wav_ima_adpcm(_afp_stereo(i, "ima", "inoise", 9),
+                                  rate=8000, block_samples=9)
 
-    return _fused_energy_sigs(docs, synth, window_samples=9)
+    return _fused_energy_sigs(docs, make, window_samples=9)
 
 
 # ---------------------------------------------------------------------------
@@ -9618,8 +9510,6 @@ FROM d WHERE doc_id % 23 = 0
 def mp3_id3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real ID3v2.3/2.4 tag walk over tagged MP3 streams — see block
     comment; operator in operators/multimodal.py (map-only)."""
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.multimodal import (
         id3_meta,
         make_id3v2,
@@ -9628,34 +9518,26 @@ def mp3_id3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    # torn ID3 header (< 10 bytes): the quarantine class —
-                    # arbitrary non-ID3 bytes are NOT an error for a
-                    # header-transparency probe (they're has_id3=false)
-                    payloads.append(b"ID3\x04bad")
-                    continue
-                mp3 = make_mp3(2, mono=bool(i % 2))
-                if i % 5 == 0:
-                    payloads.append(mp3)  # tag-less asset
-                    continue
-                tag = make_id3v2(
-                    {
-                        "TIT2": f"Title {i % 100}",
-                        "TPE1": f"Artist {i % 37}",
-                        "TALB": f"Album {i % 11}",
-                    },
-                    version=4 if i % 2 == 0 else 3,
-                )
-                payloads.append(tag + mp3)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            # torn ID3 header (< 10 bytes): the quarantine class —
+            # arbitrary non-ID3 bytes are NOT an error for a
+            # header-transparency probe (they're has_id3=false)
+            return b"ID3\x04bad"
+        mp3 = make_mp3(2, mono=bool(i % 2))
+        if i % 5 == 0:
+            return mp3  # tag-less asset
+        tag = make_id3v2(
+            {
+                "TIT2": f"Title {i % 100}",
+                "TPE1": f"Artist {i % 37}",
+                "TALB": f"Album {i % 11}",
+            },
+            version=4 if i % 2 == 0 else 3,
+        )
+        return tag + mp3
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return id3_meta(synth_df, "doc_id", "payload")
+    return id3_meta(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -9700,11 +9582,8 @@ def webdataset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WebDataset shard → decoded samples, one map-only pass — see
     block comment."""
     import hashlib
-    import io
-    import tarfile as _tarfile
 
     import numpy as np
-    import pandas as pd
 
     from quickstart_streaming_agents_spark.operators.multimodal import (
         make_jpeg,
@@ -9713,6 +9592,7 @@ def webdataset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         map_payloads,
     )
     from quickstart_streaming_agents_spark.operators.tar import (
+        make_tar,
         tar_member_table,
     )
 
@@ -9721,48 +9601,28 @@ def webdataset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     jpeg_cache: dict = {}
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                buf = io.BytesIO()
-                with _tarfile.open(
-                    fileobj=buf, mode="w", format=_tarfile.USTAR_FORMAT
-                ) as tf:
-                    for k in range(1 + i % 3):
-                        pad = 1 + int(hashlib.md5(
-                            f"wc:{i}:{k}".encode()
-                        ).hexdigest()[:15], 16) % 60
-                        members = [(f"s{k}.txt",
-                                    f"cap:{i}:{k}:{'c' * pad}".encode())]
-                        if (i + k) % 7 != 0:
-                            # v cycles mod 29 so the (w, h, v) triple has
-                            # ~2.2k combos — the synth memoizes the pure-
-                            # Python T.81 encode (the fixture's only heavy
-                            # step) without losing dim/pixel variety
-                            w, h, v = 3 + (i + k) % 11, 2 + (i + k) % 7, \
-                                (i + k) % 29
-                            if (w, h, v) not in jpeg_cache:
-                                img = np.full((h, w, 3), v, dtype=np.uint8)
-                                jpeg_cache[(w, h, v)] = make_jpeg(
-                                    img, quant_tables=ones
-                                )
-                            members.append(
-                                (f"s{k}.jpg", jpeg_cache[(w, h, v)])
-                            )
-                        for name, content in members:
-                            ti = _tarfile.TarInfo(name)
-                            ti.size = len(content)
-                            ti.mtime = 0
-                            tf.addfile(ti, io.BytesIO(content))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        members = []
+        for k in range(1 + i % 3):
+            pad = 1 + int(hashlib.md5(
+                f"wc:{i}:{k}".encode()
+            ).hexdigest()[:15], 16) % 60
+            members.append((f"s{k}.txt", f"cap:{i}:{k}:{'c' * pad}".encode()))
+            if (i + k) % 7 != 0:
+                # v cycles mod 29 so the (w, h, v) triple has ~2.2k
+                # combos — the synth memoizes the pure-Python T.81
+                # encode (the fixture's only heavy step) without losing
+                # dim/pixel variety
+                w, h, v = 3 + (i + k) % 11, 2 + (i + k) % 7, (i + k) % 29
+                if (w, h, v) not in jpeg_cache:
+                    img = np.full((h, w, 3), v, dtype=np.uint8)
+                    jpeg_cache[(w, h, v)] = make_jpeg(img, quant_tables=ones)
+                members.append((f"s{k}.jpg", jpeg_cache[(w, h, v)]))
+        return make_tar(members)
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
+    synth_df = synth_payloads(docs, make)
 
     def walk(p: bytes) -> list[list]:
         from quickstart_streaming_agents_spark.operators.multimodal import (
@@ -9850,37 +9710,28 @@ def zip_member_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io
     import zipfile as _zipfile
 
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.zipindex import (
         zip_members,
     )
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                buf = io.BytesIO()
-                with _zipfile.ZipFile(buf, "w", _zipfile.ZIP_STORED) as z:
-                    for k in range(1 + i % 4):
-                        pad = 1 + int(hashlib.md5(
-                            f"zl:{i}:{k}".encode()
-                        ).hexdigest()[:15], 16) % 600
-                        z.writestr(
-                            _zipfile.ZipInfo(f"e{k}.txt"),
-                            f"z:{i}:{k}:{'q' * pad}".encode(),
-                        )
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        buf = io.BytesIO()
+        with _zipfile.ZipFile(buf, "w", _zipfile.ZIP_STORED) as z:
+            for k in range(1 + i % 4):
+                pad = 1 + int(hashlib.md5(
+                    f"zl:{i}:{k}".encode()
+                ).hexdigest()[:15], 16) % 600
+                z.writestr(
+                    _zipfile.ZipInfo(f"e{k}.txt"),
+                    f"z:{i}:{k}:{'q' * pad}".encode(),
+                )
+        return buf.getvalue()
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    mem = zip_members(synth_df, "doc_id", "payload")
+    mem = zip_members(synth_payloads(docs, make), "doc_id", "payload")
     # crc32 is real (verified into crc_ok) but not SQL-replayable —
     # keep it out of the hash-checked projection
     return mem.select(
@@ -9941,42 +9792,22 @@ def _synth_tars(docs: DataFrame) -> DataFrame:
     """doc_id -> WebDataset-style ustar shard written by the stdlib
     tarfile module (see block comment); every 23rd payload garbage."""
     import hashlib
-    import io
-    import tarfile as _tarfile
 
-    import pandas as pd
+    from quickstart_streaming_agents_spark.operators.tar import make_tar
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                buf = io.BytesIO()
-                with _tarfile.open(
-                    fileobj=buf, mode="w", format=_tarfile.USTAR_FORMAT
-                ) as tf:
-                    for k in range(1 + i % 4):
-                        pad = 1 + int(hashlib.md5(
-                            f"tl:{i}:{k}".encode()
-                        ).hexdigest()[:15], 16) % 1000
-                        for name, content in (
-                            (f"s{k}.txt",
-                             f"t:{i}:{k}:{'y' * pad}".encode()),
-                            (f"s{k}.cls", str((i + k) % 10).encode()),
-                        ):
-                            ti = _tarfile.TarInfo(name)
-                            ti.size = len(content)
-                            ti.mtime = 0
-                            tf.addfile(ti, io.BytesIO(content))
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        members = []
+        for k in range(1 + i % 4):
+            pad = 1 + int(hashlib.md5(
+                f"tl:{i}:{k}".encode()
+            ).hexdigest()[:15], 16) % 1000
+            members += [(f"s{k}.txt", f"t:{i}:{k}:{'y' * pad}".encode()),
+                        (f"s{k}.cls", str((i + k) % 10).encode())]
+        return make_tar(members)
 
-    return spread_scan(docs.select("doc_id")).mapInPandas(
-        synth, schema="doc_id long, payload binary"
-    )
+    return synth_payloads(spread_scan(docs.select("doc_id")), make)
 
 
 @query("tar_member_index", oracle=_TAR_ORACLE)
@@ -10122,35 +9953,26 @@ def g711_energy_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_synth_afp_sigs``)."""
     import hashlib
 
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.multimodal import (
         make_wav_g711,
     )
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                base = i % 150
-                data = b"".join(
-                    bytes([int(hashlib.md5(
-                        f"g711:{base}:{w}".encode()
-                    ).hexdigest()[:15], 16) % 256]) * 256
-                    for w in range(8)
-                )
-                payloads.append(make_wav_g711(
-                    data, rate=8000, law="ulaw" if i % 2 == 0 else "alaw"
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        data = b"".join(
+            bytes([int(hashlib.md5(
+                f"g711:{i % 150}:{w}".encode()
+            ).hexdigest()[:15], 16) % 256]) * 256
+            for w in range(8)
+        )
+        return make_wav_g711(
+            data, rate=8000, law="ulaw" if i % 2 == 0 else "alaw"
+        )
 
-    return _fused_energy_sigs(docs, synth)
+    return _fused_energy_sigs(docs, make)
 
 
 # ---------------------------------------------------------------------------
@@ -10213,8 +10035,6 @@ def warc_record_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment; operator in operators/warc.py (map-only 1→N)."""
     import hashlib
 
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.warc import (
         make_warc,
         warc_records,
@@ -10222,29 +10042,21 @@ def warc_record_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                recs = []
-                for k in range(1 + i % 4):
-                    wt = "request" if (i + k) % 5 == 0 else "response"
-                    uri = f"https://site{(i * 7 + k) % 97}.example/p/{k}"
-                    rid = f"<urn:uuid:{i}-{k}>"
-                    pad = 1 + int(hashlib.md5(
-                        f"wl:{i}:{k}".encode()
-                    ).hexdigest()[:15], 16) % 40
-                    recs.append((wt, rid, uri,
-                                 f"c:{i}:{k}:{'x' * pad}".encode()))
-                payloads.append(make_warc(recs))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        recs = []
+        for k in range(1 + i % 4):
+            wt = "request" if (i + k) % 5 == 0 else "response"
+            uri = f"https://site{(i * 7 + k) % 97}.example/p/{k}"
+            rid = f"<urn:uuid:{i}-{k}>"
+            pad = 1 + int(hashlib.md5(
+                f"wl:{i}:{k}".encode()
+            ).hexdigest()[:15], 16) % 40
+            recs.append((wt, rid, uri, f"c:{i}:{k}:{'x' * pad}".encode()))
+        return make_warc(recs)
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return warc_records(synth_df, "doc_id", "payload")
+    return warc_records(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -10280,7 +10092,6 @@ def jpeg_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real EXIF orientation/make/model extraction — see block comment;
     operator in operators/exif.py (map-only)."""
     import numpy as np
-    import pandas as pd
 
     from quickstart_streaming_agents_spark.operators.exif import (
         exif_meta,
@@ -10292,29 +10103,22 @@ def jpeg_exif_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
+    base = make_jpeg(np.full((8, 8, 3), 100, dtype=np.uint8))
 
-    def synth(batches):
-        base = make_jpeg(np.full((8, 8, 3), 100, dtype=np.uint8))
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 29 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                elif i % 23 == 0:
-                    payloads.append(base)  # legal JPEG, no EXIF
-                else:
-                    app1 = make_exif_app1(
-                        1 + i % 8,
-                        make=f"Cam{i % 5}",
-                        model=None if i % 7 == 0 else f"MX{i % 3}",
-                        little_endian=(i % 2 == 1),
-                    )
-                    payloads.append(insert_app1(base, app1))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 29 == 0:
+            return b"garbage:" + str(i).encode()
+        if i % 23 == 0:
+            return base  # legal JPEG, no EXIF
+        app1 = make_exif_app1(
+            1 + i % 8,
+            make=f"Cam{i % 5}",
+            model=None if i % 7 == 0 else f"MX{i % 3}",
+            little_endian=(i % 2 == 1),
+        )
+        return insert_app1(base, app1)
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return exif_meta(synth_df, "doc_id", "payload")
+    return exif_meta(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -10352,7 +10156,6 @@ def exif_display_dims_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stored vs display dims under EXIF orientation — see block
     comment; operator in operators/exif.py (map-only)."""
     import numpy as np
-    import pandas as pd
 
     from quickstart_streaming_agents_spark.operators.exif import (
         exif_display_dims,
@@ -10365,33 +10168,23 @@ def exif_display_dims_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
     ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
+    cache: dict = {}
 
-    def synth(batches):
-        cache: dict = {}
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 29 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                w, h = 3 + i % 13, 2 + i % 9
-                if (w, h) not in cache:
-                    cache[(w, h)] = make_jpeg(
-                        np.full((h, w, 3), 77, dtype=np.uint8),
-                        quant_tables=ones,
-                    )
-                base = cache[(w, h)]
-                if i % 23 == 0:
-                    payloads.append(base)  # no EXIF: orientation 1
-                else:
-                    payloads.append(insert_app1(
-                        base, make_exif_app1(1 + i % 8)
-                    ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 29 == 0:
+            return b"garbage:" + str(i).encode()
+        w, h = 3 + i % 13, 2 + i % 9
+        if (w, h) not in cache:
+            cache[(w, h)] = make_jpeg(
+                np.full((h, w, 3), 77, dtype=np.uint8),
+                quant_tables=ones,
+            )
+        base = cache[(w, h)]
+        if i % 23 == 0:
+            return base  # no EXIF: orientation 1
+        return insert_app1(base, make_exif_app1(1 + i % 8))
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return exif_display_dims(synth_df, "doc_id", "payload")
+    return exif_display_dims(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -10434,8 +10227,6 @@ def mp4_demux_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle)."""
     import hashlib
 
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.multimodal import (
         demux_mp4_samples,
         make_mp4,
@@ -10443,30 +10234,21 @@ def mp4_demux_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                n = 3 + i % 6
-                samples = []
-                for k in range(n):
-                    prefix = f"{i}:{k}:"
-                    pad = 1 + int(hashlib.md5(
-                        f"sz:{i}:{k}".encode()
-                    ).hexdigest()[:15], 16) % 64
-                    samples.append((prefix + "x" * pad).encode())
-                payloads.append(make_mp4(
-                    16, 9, 40 * n, samples=samples,
-                    two_chunks=bool(i % 2),
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        n = 3 + i % 6
+        samples = []
+        for k in range(n):
+            prefix = f"{i}:{k}:"
+            pad = 1 + int(hashlib.md5(
+                f"sz:{i}:{k}".encode()
+            ).hexdigest()[:15], 16) % 64
+            samples.append((prefix + "x" * pad).encode())
+        return make_mp4(16, 9, 40 * n, samples=samples,
+                        two_chunks=bool(i % 2))
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return demux_mp4_samples(synth_df, "doc_id", "payload")
+    return demux_mp4_samples(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -10555,75 +10337,55 @@ SELECT doc_id, NULL, NULL, NULL, NULL, TRUE FROM d WHERE doc_id % 23 = 0
 """
 
 
-def _synth_phash_bmp_batches():
-    """The per-batch BMP synthesis body of ``_synth_phash_bmps``,
-    exposed so the fused dHash queries can compose it with the decode
-    inside one Python stage."""
+def _phash_bmp(i: int) -> bytes:
+    """doc_id -> deterministic 8x9 gray BMP payload (see block comment);
+    every 23rd payload is garbage for the quarantine path."""
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     from quickstart_streaming_agents_spark.operators.multimodal import make_bmp
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                base = i % 150
-                img = np.empty((8, 9, 3), np.uint8)
-                for r in range(8):
-                    for c in range(9):
-                        v = int(hashlib.md5(
-                            f"{base}:{r}:{c}".encode()
-                        ).hexdigest()[:15], 16) % 256
-                        if i % 3 != 0 and r == i % 8 and c == i % 9:
-                            v = (v + (i % 5) * 37) % 256
-                        img[r, c, :] = v
-                payloads.append(make_bmp(img))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    return synth
+    if i % 23 == 0:
+        return b"garbage:" + str(i).encode()
+    img = np.empty((8, 9, 3), np.uint8)
+    for r in range(8):
+        for c in range(9):
+            v = int(hashlib.md5(
+                f"{i % 150}:{r}:{c}".encode()
+            ).hexdigest()[:15], 16) % 256
+            if i % 3 != 0 and r == i % 8 and c == i % 9:
+                v = (v + (i % 5) * 37) % 256
+            img[r, c, :] = v
+    return make_bmp(img)
 
 
-def _synth_phash_bmps(docs: DataFrame) -> DataFrame:
-    """doc_id -> deterministic 8x9 gray BMP payload (see block comment);
-    every 23rd payload is garbage for the quarantine path."""
-    return docs.select("doc_id").mapInPandas(
-        _synth_phash_bmp_batches(), schema="doc_id long, payload binary"
-    )
+def _synth_phash_hashes(ids: DataFrame) -> DataFrame:
+    """``_phash_bmp`` synthesis and dHash over an ids-only frame, fused
+    into ONE ``mapInPandas`` stage (guide §4, the ``_synth_afp_sigs``
+    pattern): same bytes synthesized, same real BMP decode exercised,
+    half the boundary crossings — identical ``(doc_id, b0..b3)``
+    output.
 
-
-def _synth_phash_hashes(docs: DataFrame, spread: bool = True) -> DataFrame:
-    """BMP synthesis and dHash fused into ONE ``mapInPandas`` stage
-    (guide §4, the ``_synth_afp_sigs`` pattern): same bytes
-    synthesized, same real BMP decode exercised, half the boundary
-    crossings — identical ``(doc_id, b0..b3)`` output.
-
-    ``spread=False`` for consumers that persist the hash frame for
-    multiple branches (image_phash_dedup): the 8x9-BMP python work is
-    trivial, and a spread cache materialization raced by three
-    consumer jobs measured ~25% SLOWER than the single-task fill
-    (interleaved A/B 3.07 vs 2.46 s; the audio tier measures the
-    OPPOSITE because its per-clip python work dominates)."""
+    The caller picks the spread. Consumers that persist the hash frame
+    for multiple branches (image_phash_dedup) pass unspread ids: the
+    8x9-BMP python work is trivial, and a spread cache materialization
+    raced by three consumer jobs measured ~25% SLOWER than the
+    single-task fill (interleaved A/B 3.07 vs 2.46 s; the audio tier
+    measures the OPPOSITE because its per-clip python work
+    dominates)."""
     from quickstart_streaming_agents_spark.operators.payload import (
         payload_ddl,
         payload_rows,
+        synth_rows,
     )
     from quickstart_streaming_agents_spark.operators.phash import (
         DHASH_FIELDS,
         dhash_rows,
     )
 
-    synth = _synth_phash_bmp_batches()
+    synth = synth_rows(_phash_bmp)
     dhash = payload_rows(dhash_rows, DHASH_FIELDS, fail_row=[None] * 4)
-    ids = docs.select("doc_id")
-    if spread:
-        ids = spread_scan(ids)
     return ids.mapInPandas(
         lambda batches: dhash(synth(batches)),
         schema=f"doc_id long, {payload_ddl(DHASH_FIELDS)}",
@@ -10637,7 +10399,7 @@ def image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dHash band packing, map-only, zero shuffle; synth+decode fused
     into one Python stage)."""
     docs = load_table(spark, sf_dir, "documents")
-    return _synth_phash_hashes(docs)
+    return _synth_phash_hashes(spread_scan(docs.select("doc_id")))
 
 
 @query("image_phash_dedup", oracle=_IMAGE_PHASH_DEDUP_ORACLE)
@@ -10653,7 +10415,7 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return phash_dedup_from_hashes(
-        _synth_phash_hashes(docs, spread=False), "doc_id")
+        _synth_phash_hashes(docs.select("doc_id")), "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -12433,8 +12195,6 @@ def flac_stream_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     block comment; operator in operators/flac.py (map-only)."""
     import hashlib
 
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.flac import (
         flac_stream_meta as flac_probe,
         make_flac,
@@ -12443,33 +12203,26 @@ def flac_stream_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
     rates = [8000, 16000, 22050, 44100, 48000]
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 29 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                tags = None
-                if i % 23 != 0:
-                    tags = {"ARTIST": f"A{i % 13}"}
-                    if i % 7 != 0:
-                        tags["TITLE"] = f"T{i % 101}"
-                payloads.append(make_flac(
-                    rates[i % 5],
-                    1 + i % 2,
-                    16 + 8 * (i % 3),
-                    1000 + (i * 37) % 100000,
-                    audio_md5=hashlib.md5(f"fmd5:{i}".encode()).digest(),
-                    tags=tags,
-                    padding=16 if i % 3 == 0 else 0,
-                    frame_junk=b"\xff\xf8junk" * 2,
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 29 == 0:
+            return b"garbage:" + str(i).encode()
+        tags = None
+        if i % 23 != 0:
+            tags = {"ARTIST": f"A{i % 13}"}
+            if i % 7 != 0:
+                tags["TITLE"] = f"T{i % 101}"
+        return make_flac(
+            rates[i % 5],
+            1 + i % 2,
+            16 + 8 * (i % 3),
+            1000 + (i * 37) % 100000,
+            audio_md5=hashlib.md5(f"fmd5:{i}".encode()).digest(),
+            tags=tags,
+            padding=16 if i % 3 == 0 else 0,
+            frame_junk=b"\xff\xf8junk" * 2,
+        )
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return flac_probe(synth_df, "doc_id", "payload")
+    return flac_probe(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -12542,8 +12295,6 @@ def ogg_page_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     comment; operator in operators/ogg.py (map-only 1→N)."""
     import hashlib
 
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.ogg import (
         make_ogg_page,
         ogg_pages,
@@ -12551,33 +12302,26 @@ def ogg_page_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                n_pages = 1 + i % 3
-                stream = b""
-                for k in range(n_pages):
-                    pkts = []
-                    for j in range(1 + (i + k) % 2):
-                        pad = 1 + int(hashlib.md5(
-                            f"op:{i}:{k}:{j}".encode()
-                        ).hexdigest()[:15], 16) % 40
-                        pkts.append(f"pk:{i}:{k}:{j}:{'x' * pad}".encode())
-                    stream += make_ogg_page(
-                        pkts, granule=i * 1000 + k * 17,
-                        serial=1000 + i % 97, seq=k,
-                        bos=(k == 0), eos=(k == n_pages - 1),
-                    )
-                payloads.append(stream)
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        n_pages = 1 + i % 3
+        stream = b""
+        for k in range(n_pages):
+            pkts = []
+            for j in range(1 + (i + k) % 2):
+                pad = 1 + int(hashlib.md5(
+                    f"op:{i}:{k}:{j}".encode()
+                ).hexdigest()[:15], 16) % 40
+                pkts.append(f"pk:{i}:{k}:{j}:{'x' * pad}".encode())
+            stream += make_ogg_page(
+                pkts, granule=i * 1000 + k * 17,
+                serial=1000 + i % 97, seq=k,
+                bos=(k == 0), eos=(k == n_pages - 1),
+            )
+        return stream
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return ogg_pages(synth_df, "doc_id", "payload")
+    return ogg_pages(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -12826,7 +12570,8 @@ FROM g
 def parquet_footer_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real parquet-footer thrift walk over files written by pyarrow —
     see block comment; operator in operators/parquet_meta.py."""
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from quickstart_streaming_agents_spark.operators.parquet_meta import (
         parquet_footer_index,
@@ -12834,29 +12579,19 @@ def parquet_footer_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        n = 1 + i % 50
+        t = pa.table({
+            "id": list(range(n)),
+            "val": [f"v{i}:{j}" for j in range(n)],
+        })
+        sink = pa.BufferOutputStream()
+        pq.write_table(t, sink, row_group_size=16)
+        return sink.getvalue().to_pybytes()
 
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                n = 1 + i % 50
-                t = pa.table({
-                    "id": list(range(n)),
-                    "val": [f"v{i}:{j}" for j in range(n)],
-                })
-                sink = pa.BufferOutputStream()
-                pq.write_table(t, sink, row_group_size=16)
-                payloads.append(sink.getvalue().to_pybytes())
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return parquet_footer_index(synth_df, "doc_id", "payload")
+    return parquet_footer_index(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------
@@ -12903,8 +12638,6 @@ FROM blk b JOIN sz ON b.doc_id = sz.doc_id AND b.k = sz.k
 def avro_ocf_block_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real Avro OCF block walk with per-block sync verification — see
     block comment; operator in operators/avro_ocf.py."""
-    import pandas as pd
-
     from quickstart_streaming_agents_spark.operators.avro_ocf import (
         make_ocf,
         ocf_block_index,
@@ -12913,37 +12646,27 @@ def avro_ocf_block_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = spread_scan(load_table(spark, sf_dir, "documents").select("doc_id"))
 
-    def synth(batches):
-        def enc_str(s: str) -> bytes:
-            out = bytearray()
-            _write_long(out, len(s))
-            return bytes(out) + s.encode()
+    def enc_str(s: str) -> bytes:
+        out = bytearray()
+        _write_long(out, len(s))
+        return bytes(out) + s.encode()
 
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                    continue
-                blocks = [
-                    [enc_str(f"r:{i}:{k}:{j}")
-                     for j in range(1 + (i + k) % 4)]
-                    for k in range(1 + i % 3)
-                ]
-                schema = (
-                    '{"type":"record","name":"Doc%d","fields":'
-                    '[{"name":"s","type":"string"}]}' % (i % 5)
-                )
-                extra = {"user.meta": b"x"} if i % 4 == 0 else None
-                payloads.append(make_ocf(
-                    blocks, schema,
-                    sync=bytes([i % 256]) * 16, extra_meta=extra,
-                ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def make(i):
+        if i % 23 == 0:
+            return b"garbage:" + str(i).encode()
+        blocks = [
+            [enc_str(f"r:{i}:{k}:{j}") for j in range(1 + (i + k) % 4)]
+            for k in range(1 + i % 3)
+        ]
+        schema = (
+            '{"type":"record","name":"Doc%d","fields":'
+            '[{"name":"s","type":"string"}]}' % (i % 5)
+        )
+        extra = {"user.meta": b"x"} if i % 4 == 0 else None
+        return make_ocf(blocks, schema, sync=bytes([i % 256]) * 16,
+                        extra_meta=extra)
 
-    synth_df = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    return ocf_block_index(synth_df, "doc_id", "payload")
+    return ocf_block_index(synth_payloads(docs, make), "doc_id", "payload")
 
 
 # ---------------------------------------------------------------------------

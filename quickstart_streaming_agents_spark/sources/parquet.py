@@ -135,8 +135,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def spread_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition a parallelism-starved scan up to the
-    session's default parallelism — for SMALL projected frames (ids/keys)
-    that feed Python-heavy synthesis or decode.
+    session's default parallelism. Two cases use it: SMALL projected
+    frames (ids/keys) that feed Python-heavy synthesis or decode, and a
+    text-heavy JVM map whose per-row compute dwarfs the cost of moving
+    its input once (lang_id_ngram's interpreted trigram scoring).
 
     Parquet scan parallelism is capped at one task per row group; the
     fixture files are single-row-group, so every mapInPandas stage
@@ -148,8 +150,8 @@ def spread_scan(df: DataFrame) -> DataFrame:
     stays map-only there and the 100 TB "never shuffle payloads" shape is
     unchanged (callers spread the ids-only frame BEFORE payloads exist;
     the exchange moves 8-byte rows). The keyless repartition's
-    sort-before-repartition determinism cost is trivial at the row widths
-    this is gated to."""
+    sort-before-repartition determinism cost is trivial for ids; the
+    text map pays it only when its scan is starved, as on the fixture."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:

@@ -25,6 +25,7 @@ import functools
 from pyspark.sql import functions as F
 
 from ..operators.dedup import cap_hot_buckets, explode_bands
+from ..operators.payload import synth_payloads
 from ..operators.windows import tumble
 from ..runtime import persist_scope_mark, release_tracked_persists, track_persist
 from .catalog import StreamCatalog
@@ -246,7 +247,17 @@ def fraud_pipeline(
 ) -> StreamCatalog:
     """Lab-4-shaped: anomaly windows interval-joined back to the raw stream,
     then a streaming LIMIT investigation queue (J2 + L1).
-    Topics: window_counts6h, scored6h, anomalies6h, to_investigate."""
+    Topics: window_counts6h, scored6h, anomalies6h, to_investigate.
+
+    Join-state contract: the join's right side is the anomalies-only
+    topic ``anomalies6h``, so its watermark moves only when an anomalous
+    window arrives. Spark also pushes the non-event-time ``is_anomaly``
+    filter below ``withWatermark``, so watermarking before the filter
+    would not help. Raw-event join state therefore drains only as far as
+    the last anomaly's horizon; everything after it stays in state until
+    the next anomaly (the sentinel slices of
+    ``test_stream_state_bounds.py::test_lab_chain_state_bounded_and_drained``
+    exist to close it)."""
     catalog.register_events_source("events", events_path)
 
     ev = catalog.read_stream("events")
@@ -1125,40 +1136,17 @@ def webdataset_stream_pipeline(
     document stream via the stdlib tarfile writer (one .txt + one .cls
     member per doc — the fixture analog of an object-store shard feed).
     """
-    import io as _io
-    import tarfile as _tarfile
-
-    import pandas as _pd
-
-    from ..operators.tar import tar_members
+    from ..operators.tar import make_tar, tar_members
 
     spark = catalog.spark
     docs = spark.read.parquet(documents_path)
 
-    def synth(batches):
-        for pdf in batches:
-            payloads = []
-            for i, t in zip(pdf["doc_id"], pdf["text"]):
-                buf = _io.BytesIO()
-                with _tarfile.open(fileobj=buf, mode="w",
-                                   format=_tarfile.USTAR_FORMAT) as tf:
-                    for name, content in (
-                        ("s0.txt", t[:80].encode()),
-                        ("s0.cls", str(int(i) % 10).encode()),
-                    ):
-                        ti = _tarfile.TarInfo(name)
-                        ti.size = len(content)
-                        ti.mtime = 0
-                        tf.addfile(ti, _io.BytesIO(content))
-                payloads.append(buf.getvalue())
-            yield _pd.DataFrame({"doc_id": pdf["doc_id"],
-                                 "payload": payloads,
-                                 "ts": pdf["ts"]})
+    def make(i, t):
+        return make_tar([("s0.txt", t[:80].encode()),
+                         ("s0.cls", str(i % 10).encode())])
 
-    stamped = docs.select(
-        "doc_id", "text",
-        arrival_ts("doc_id").alias("ts"),
-    ).mapInPandas(synth, schema="doc_id long, payload binary, ts timestamp")
+    stamped = synth_payloads(docs, make, ("doc_id", "text")).withColumn(
+        "ts", arrival_ts("doc_id"))
     catalog.create_table_as("wds_raw_shards", stamped)
 
     stream = catalog.read_stream("wds_raw_shards")
@@ -1421,12 +1409,12 @@ def media_dedup_stream_pipeline(
 
     from ..operators.phash import dhash_images
 
-    spark = catalog.spark
-    docs = spark.read.parquet(documents_path).select("doc_id")
-    from ..queries import _synth_phash_bmps  # one synth definition
+    from ..queries import _phash_bmp  # one synth definition
 
-    assets = _synth_phash_bmps(docs)
-    stamped = assets.withColumn("ts", arrival_ts("doc_id"))
+    spark = catalog.spark
+    docs = spark.read.parquet(documents_path)
+    stamped = synth_payloads(docs, _phash_bmp).withColumn(
+        "ts", arrival_ts("doc_id"))
     catalog.create_table_as("pdup_raw_imgs", stamped)
 
     # frozen reference: band-exploded dHash index of the profile
@@ -1516,11 +1504,13 @@ def audio_dedup_stream_pipeline(
 
     from ..operators.afp import audio_energy_sig
 
+    from ..queries import _afp_wav  # one synth definition
+    from ..sources.parquet import spread_scan
+
     spark = catalog.spark
     docs = spark.read.parquet(documents_path).select("doc_id")
-    from ..queries import _synth_afp_wavs  # one synth definition
-
-    stamped = _synth_afp_wavs(docs).withColumn("ts", arrival_ts("doc_id"))
+    stamped = synth_payloads(spread_scan(docs), _afp_wav).withColumn(
+        "ts", arrival_ts("doc_id"))
     catalog.create_table_as("adup_raw_clips", stamped)
 
     ref_sigs = (
@@ -1596,83 +1586,18 @@ def media_triage_stream_pipeline(
     no shuffle, restartable at any batch boundary; parity with the
     batch probe is exact (header parsing is deterministic byte work).
 
-    The asset synthesis reuses the batch query's 8-container generator
-    shape in miniature: deterministic payloads derived from doc_id so
-    the stream is reproducible without touching binary fixtures.
+    The assets are the batch query's own 8-container generator
+    (``queries._media_asset``) over the first 200 doc_ids, so the
+    streaming triage exercises every probe path the batch query does —
+    including JPEG and the WebP family.
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.multimodal import (
-        make_bmp,
-        make_gif,
-        make_jpeg,
-        make_mp3,
-        make_mp4,
-        make_png,
-        make_wav,
-        make_webp,
-        probe_media,
-    )
+    from ..operators.multimodal import probe_media
+    from ..queries import _media_asset  # one synth definition
 
     spark = catalog.spark
     docs = spark.read.parquet(documents_path).select("doc_id").limit(200)
-    ones = (np.ones((8, 8), np.int64), np.ones((8, 8), np.int64))
-
-    def synth(batches):
-        # Same residue→container mapping as the batch media_probe_meta
-        # generator (queries.py), so the streaming triage exercises
-        # every probe path the batch query does — including JPEG and
-        # the WebP family.
-        for pdf in batches:
-            ids = pdf["doc_id"].tolist()
-            payloads = []
-            for i in ids:
-                c = i % 8
-                if i % 23 == 0:
-                    payloads.append(b"garbage:" + str(i).encode())
-                elif c == 0:
-                    payloads.append(
-                        make_png(np.zeros((1 + i % 4, 1 + i % 6, 3), np.uint8))
-                    )
-                elif c == 1:
-                    payloads.append(make_gif(
-                        [np.zeros((1 + i % 3, 1 + i % 5, 3), np.uint8)]
-                        * (1 + i % 4),
-                        delay_cs=1 + i % 3,
-                    ))
-                elif c == 2:
-                    payloads.append(make_jpeg(
-                        np.zeros((2 + i % 7, 3 + i % 9, 3), np.uint8),
-                        quant_tables=ones,
-                    ))
-                elif c == 3:
-                    payloads.append(
-                        make_bmp(np.zeros((1 + i % 5, 1 + i % 8, 3), np.uint8))
-                    )
-                elif c == 4:
-                    payloads.append(make_wav(
-                        np.zeros((104 + 8 * (i % 50), 1 + i % 2), np.int16),
-                        rate=8000,
-                    ))
-                elif c == 5:
-                    payloads.append(make_mp3(3 + i % 7, 128, 44100,
-                                             mono=bool(i % 2)))
-                elif c == 6:
-                    k = 1 + i % 4
-                    payloads.append(make_mp4(16 * k, 9 * k,
-                                             100 * (1 + i % 20)))
-                else:
-                    payloads.append(make_webp(
-                        2 + i % 9, 1 + i % 6,
-                        kind=("vp8", "vp8l", "vp8x")[i % 3],
-                        frames=(2 + i % 4) if i % 3 == 2 else 1,
-                        frame_ms=40,
-                    ))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    assets = docs.mapInPandas(synth, schema="doc_id long, payload binary")
-    stamped = assets.withColumn("ts", arrival_ts("doc_id"))
+    stamped = synth_payloads(docs, _media_asset).withColumn(
+        "ts", arrival_ts("doc_id"))
     catalog.create_table_as("media_raw_assets", stamped)
 
     stream = catalog.read_stream("media_raw_assets")
