@@ -7,7 +7,9 @@ pandas UDF appended with ``withColumn``. The iterator form initializes the
 provider client once per worker python process and streams record batches
 through it — at 100 TB the model endpoint is the bottleneck, not Spark, so
 the knobs that matter are batch size (``spark.sql.execution.arrow.
-maxRecordsPerBatch``) and endpoint-side concurrency = number of tasks.
+maxRecordsPerBatch``) and endpoint-side concurrency = number of tasks ×
+the model's ``max_concurrency`` param (requests in flight per task,
+default 2; ``providers._post_all``).
 """
 
 from __future__ import annotations
@@ -19,7 +21,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from quickstart_streaming_agents_spark.providers import resolve_provider
+from quickstart_streaming_agents_spark.providers import (
+    request_width,
+    resolve_provider,
+)
 from quickstart_streaming_agents_spark.registries import Model
 
 
@@ -30,8 +35,10 @@ def ml_predict(model: Model, input_col: str | Column) -> Column:
     ``task="embedding"`` → ArrayType(FloatType) ``embedding``.
     Use as ``df.withColumn("response", ml_predict(model, "prompt"))``.
     """
-    resolve_provider(model)  # fail fast on the driver (raises for any
-    # task outside the provider registry)
+    # fail fast on the driver: raises for any task outside the provider
+    # registry and for a max_concurrency that is not an integer >= 1
+    resolve_provider(model)
+    request_width(model)
     col = F.col(input_col) if isinstance(input_col, str) else input_col
     ret_type = (
         T.ArrayType(T.FloatType())

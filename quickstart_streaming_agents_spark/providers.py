@@ -14,6 +14,9 @@ import hashlib
 import json
 import math
 import re
+import threading
+import time
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 from quickstart_streaming_agents_spark.registries import Model
 
@@ -182,78 +185,173 @@ def fake_embedding(texts: list[str], model: Model) -> list[list[float]]:
 # real providers — same batched signature, gated on deps/credentials
 # ---------------------------------------------------------------------------
 
-def _http_post_json(url: str, headers: dict, payload: dict, timeout: float) -> dict:
+# HTTP 429 and 503 say the provider did not do the work, and so does a
+# refused connection; those are retried. The waits before the 2nd and 3rd
+# attempts, and the longest wait a Retry-After header can ask for.
+_RETRY_STATUS = frozenset({429, 503})
+_BACKOFF_S = (0.1, 0.4)
+# How long a request waits for the one before it to be written. Far below
+# a 1-s SYN retransmit, so a stalled connect delays no other request.
+_ORDER_WAIT_S = 0.05
+
+
+def request_width(model: Model) -> int:
+    """The model's ``max_concurrency`` param: the most requests one provider
+    call keeps in flight (default 2). Raises ``ValueError`` naming the model
+    unless it is an integer >= 1."""
+    raw = model.param("max_concurrency", "2")
+    try:
+        width = int(raw)
+    except ValueError:
+        width = 0
+    if width < 1:
+        raise ValueError(
+            f"model {model.name!r}: max_concurrency must be an integer >= 1, "
+            f"got {raw!r}"
+        )
+    return width
+
+
+class _SentBody:
+    """A request body that sets ``sent`` once its bytes are written."""
+
+    def __init__(self, data: bytes, sent: threading.Event):
+        self.data, self.sent = data, sent
+
+    def __iter__(self):
+        yield self.data
+        self.sent.set()
+
+
+def _http_post_json(url: str, headers: dict, payload: dict, timeout: float,
+                    sent: threading.Event) -> dict:
+    """POST one JSON body and return the JSON reply; ``sent`` is set once
+    the body has been written.
+
+    Only a reply that says the work was not done is retried: HTTP 429 or
+    503, or a refused connection. There are at most 3 attempts, with waits
+    of 0.1 s then 0.4 s; a ``Retry-After`` of N seconds replaces the wait,
+    capped at 0.4 s. A timeout, a reset or any other status raises at once,
+    because the provider may already have served, and billed, the request.
+    """
     import urllib.error
     import urllib.request
 
+    data = json.dumps(payload).encode()
     req = urllib.request.Request(
-        url, data=json.dumps(payload).encode(), headers={"Content-Type": "application/json", **headers}
+        url, data=_SentBody(data, sent),
+        headers={"Content-Type": "application/json", "Content-Length": str(len(data)),
+                 **headers},
     )
+    for backoff in (*_BACKOFF_S, None):
+        try:
+            with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310
+                return json.loads(resp.read())
+        except urllib.error.HTTPError as exc:
+            detail = exc.read().decode(errors="replace")[:500]
+            if backoff is None or exc.code not in _RETRY_STATUS:
+                raise RuntimeError(f"HTTP {exc.code} from {url}: {detail}") from exc
+            # delay-seconds only: an HTTP-date Retry-After keeps the fixed wait
+            after = re.fullmatch(r"\s*(\d+)\s*", exc.headers.get("Retry-After", ""),
+                                 re.ASCII)
+            if after:
+                backoff = min(int(after.group(1)), _BACKOFF_S[-1])
+        except urllib.error.URLError as exc:
+            if backoff is None or not isinstance(exc.reason, ConnectionRefusedError):
+                raise
+        time.sleep(backoff)
+
+
+def _post_all(url: str, headers: dict, bodies: list[dict], model: Model) -> list[dict]:
+    """POST every body to ``url`` and return the replies in input order.
+
+    A thread pool made for this call keeps ``min(len(bodies),
+    request_width(model))`` requests in flight. A body is written after
+    the one before it, so the provider receives them in input order,
+    unless the one before has waited more than ``_ORDER_WAIT_S`` to be
+    written (a stalled connect). On the first failure the bodies still
+    queued are cancelled, so none is sent (or billed) after it, and the
+    failure is re-raised as it was; requests already in flight finish
+    first. Each request retries as :func:`_http_post_json` says.
+    """
+    if not bodies:
+        return []
+    timeout = float(model.param("timeout", "30"))
+    sent = [threading.Event() for _ in bodies]
+
+    def post(i: int) -> dict:
+        try:
+            if i:
+                sent[i - 1].wait(_ORDER_WAIT_S)
+            return _http_post_json(url, headers, bodies[i], timeout, sent[i])
+        finally:
+            sent[i].set()  # a failed request must not hold up the next
+
+    pool = ThreadPoolExecutor(min(len(bodies), request_width(model)))
     try:
-        with urllib.request.urlopen(req, timeout=timeout) as resp:  # noqa: S310
-            return json.loads(resp.read())
-    except urllib.error.HTTPError as exc:
-        detail = exc.read().decode(errors="replace")[:500]
-        raise RuntimeError(f"HTTP {exc.code} from {url}: {detail}") from exc
+        futures = [pool.submit(post, i) for i in range(len(bodies))]
+        wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            if f.done() and f.exception() is not None:
+                raise f.exception()
+        return [f.result() for f in futures]
+    finally:
+        pool.shutdown(cancel_futures=True)
+
+
+def _openai_headers(conn) -> dict:
+    # Azure rejects Bearer for plain api keys
+    key = dict(conn.credentials).get("api_key", "")
+    return {"api-key": key} if conn.type == "azureopenai" else {
+        "Authorization": f"Bearer {key}"
+    }
 
 
 def openai_compatible_textgen(prompts: list[str], model: Model) -> list[str]:
     """Chat-completions-shaped endpoint (Azure OpenAI / OpenAI-compatible).
 
     Reference model params: azureopenai.PARAMS.max_completion_tokens=16384
-    (terraform/core/main.tf:495). Sequential per-batch; ml_predict batches
-    rows so each worker amortizes connection setup.
+    (terraform/core/main.tf:495). One request per prompt, sent through
+    :func:`_post_all`: up to ``max_concurrency`` in flight per call, replies
+    in prompt order.
     """
     conn = model.connection
     if conn is None or not conn.endpoint:
         raise RuntimeError(f"model {model.name!r}: no connection/endpoint configured")
-    creds = dict(conn.credentials)
-    headers = {"api-key": creds.get("api_key", "")} if conn.type == "azureopenai" else {
-        "Authorization": f"Bearer {creds.get('api_key', '')}"
-    }
-    out = []
     # gpt-5/o-series endpoints reject 'max_tokens'; the reference's Azure
     # model sets max_completion_tokens (terraform/core/main.tf:495) — honor
     # whichever the model declares
     mct = model.param("max_completion_tokens", "")
-    for p in prompts:
-        body = {
-            "messages": [{"role": "user", "content": p}],
-            **(
-                {"max_completion_tokens": int(mct)}
-                if mct
-                else {"max_tokens": int(model.param("max_tokens", "1024"))}
-            ),
-        }
-        if model.param("model_name"):
-            body["model"] = model.param("model_name")
-        resp = _http_post_json(conn.endpoint, headers, body, float(model.param("timeout", "30")))
-        out.append(resp["choices"][0]["message"]["content"])
-    return out
+    limit = (
+        {"max_completion_tokens": int(mct)}
+        if mct
+        else {"max_tokens": int(model.param("max_tokens", "1024"))}
+    )
+    name = {"model": model.param("model_name")} if model.param("model_name") else {}
+    bodies = [{"messages": [{"role": "user", "content": p}], **limit, **name}
+              for p in prompts]
+    return [
+        resp["choices"][0]["message"]["content"]
+        for resp in _post_all(conn.endpoint, _openai_headers(conn), bodies, model)
+    ]
 
 
 def openai_compatible_embedding(texts: list[str], model: Model) -> list[list[float]]:
     conn = model.connection
     if conn is None or not conn.endpoint:
         raise RuntimeError(f"model {model.name!r}: no connection/endpoint configured")
-    creds = dict(conn.credentials)
-    # same auth split as the textgen sibling: Azure rejects Bearer for
-    # plain api keys
-    headers = {"api-key": creds.get("api_key", "")} if conn.type == "azureopenai" else {
-        "Authorization": f"Bearer {creds.get('api_key', '')}"
-    }
     # OpenAI-compatible endpoints cap `input` items per request; an Arrow
     # batch can exceed it, so chunk
     chunk = int(model.param("max_inputs_per_request", "2048"))
-    out: list[list[float]] = []
-    for lo in range(0, len(texts), chunk):
-        resp = _http_post_json(
-            conn.endpoint, headers,
-            {"input": texts[lo:lo + chunk], "model": model.param("model_name", "")},
-            float(model.param("timeout", "30")),
-        )
-        out.extend(d["embedding"] for d in resp["data"])
-    return out
+    bodies = [
+        {"input": texts[lo:lo + chunk], "model": model.param("model_name", "")}
+        for lo in range(0, len(texts), chunk)
+    ]
+    return [
+        d["embedding"]
+        for resp in _post_all(conn.endpoint, _openai_headers(conn), bodies, model)
+        for d in resp["data"]
+    ]
 
 
 def _bedrock_url(model: Model) -> tuple[str, dict]:
@@ -289,20 +387,22 @@ def bedrock_textgen(prompts: list[str], model: Model) -> list[str]:
     → ``{"content": [{"type": "text", "text": …}, …]}``.
     """
     url, headers = _bedrock_url(model)
-    timeout = float(model.param("timeout", "30"))
-    out = []
-    for p in prompts:
-        body = {
+    max_tokens = int(model.param("max_tokens", "1024"))
+    bodies = [
+        {
             "anthropic_version": "bedrock-2023-05-31",
-            "max_tokens": int(model.param("max_tokens", "1024")),
+            "max_tokens": max_tokens,
             "messages": [{"role": "user", "content": [{"type": "text", "text": p}]}],
         }
-        resp = _http_post_json(url, headers, body, timeout)
-        out.append("".join(
+        for p in prompts
+    ]
+    return [
+        "".join(
             block.get("text", "") for block in resp.get("content", [])
             if block.get("type") == "text"
-        ))
-    return out
+        )
+        for resp in _post_all(url, headers, bodies, model)
+    ]
 
 
 def bedrock_embedding(texts: list[str], model: Model) -> list[list[float]]:
@@ -311,11 +411,8 @@ def bedrock_embedding(texts: list[str], model: Model) -> list[list[float]]:
     (reference embedding model: terraform/core/main.tf:461).
     """
     url, headers = _bedrock_url(model)
-    timeout = float(model.param("timeout", "30"))
-    return [
-        _http_post_json(url, headers, {"inputText": t}, timeout)["embedding"]
-        for t in texts
-    ]
+    bodies = [{"inputText": t} for t in texts]
+    return [resp["embedding"] for resp in _post_all(url, headers, bodies, model)]
 
 
 PROVIDERS: dict[tuple[str, str], object] = {
