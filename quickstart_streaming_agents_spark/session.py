@@ -53,7 +53,9 @@ def get_spark(app_name: str = "quickstart_streaming_agents_spark",
       vector search) moves data in columnar batches, not pickled rows.
     - shuffle partitions default to the local core count; on a real
       cluster this is overridden via spark-submit conf (AQE coalescing
-      makes the initial number far less critical).
+      makes the initial number far less critical). Streams get no AQE
+      coalescing: ``StreamCatalog`` starts each streaming CTAS at its
+      topics' partition count instead.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if shuffle_partitions is None:

@@ -20,10 +20,18 @@ the topic (``<topic>_ckpt``), seed an empty ``foreachBatch`` topic only
 when no checkpoint exists (a restart resumes and must keep its rows),
 then pick the trigger (``availableNow`` or processing-time).
 
-Scale note: a topic-directory written by N executors produces N files per
-micro-batch; downstream readers scan in parallel with normal file-source
-listing. Partition keys (ST5's PRIMARY KEY → Kafka message key) map to
-``partitionBy`` on the file sink so downstream per-key reads prune.
+Partition contract: ``StreamCatalog.partitions`` is the partition count of
+the catalog's topics, the analog of a Kafka topic's partition count. The
+reference's producers write partition 0 everywhere (SURVEY.md:308), so the
+default is 1. Every streaming CTAS starts with ``spark.sql.shuffle.partitions``
+set to it, so each stage has that many state partitions and shuffle tasks per
+trigger; the session's own value (sized for batch, where AQE coalesces) is
+restored once the query has started. Spark writes the count to the offset log
+at the first batch and a restart reads it back from there, so the count is
+fixed per checkpoint at first start. A deployment raises it the way it raises
+a Kafka topic's partitions: for new topics, on fresh checkpoints. Partition
+keys (ST5's PRIMARY KEY → Kafka message key) map to ``partitionBy`` on the
+file sink so downstream per-key reads prune.
 """
 
 from __future__ import annotations
@@ -51,11 +59,22 @@ class StreamTable:
 
 @dataclass
 class StreamCatalog:
-    """Named streams over a root directory; one subdir per "topic"."""
+    """Named streams over a root directory; one subdir per "topic".
+
+    ``partitions`` is the topics' partition count: the state partitions
+    and shuffle width every streaming CTAS stage starts with.
+    """
 
     spark: SparkSession
     root: str
     tables: dict[str, StreamTable] = field(default_factory=dict)
+    partitions: int = 1
+
+    def __post_init__(self) -> None:
+        p = self.partitions
+        if isinstance(p, bool) or not isinstance(p, int) or p < 1:
+            raise ValueError(
+                f"StreamCatalog.partitions must be an integer >= 1, got {p!r}")
 
     def _dir(self, name: str) -> Path:
         return Path(self.root) / name
@@ -212,7 +231,8 @@ class StreamCatalog:
         """The one streaming CTAS start: stop a live query of the same
         name, open the sink (the parquet file sink, or ``batch_fn``'s
         output appended per micro-batch), checkpoint beside the topic,
-        pick the trigger, register the table."""
+        pick the trigger, start at ``self.partitions`` shuffle partitions,
+        register the table."""
         # re-registering a live table: stop the old query first, or its
         # handle is orphaned and the checkpoint dir collides
         self._stop(name)
@@ -244,8 +264,17 @@ class StreamCatalog:
             writer = writer.trigger(availableNow=True)
         elif processing_time:
             writer = writer.trigger(processingTime=processing_time)
+        # start() clones the session with this count and the first batch
+        # writes it to the offset log; a restart reads it back from there
+        conf = df.sparkSession.conf
+        prev = conf.get("spark.sql.shuffle.partitions")
+        conf.set("spark.sql.shuffle.partitions", str(self.partitions))
+        try:
+            query = writer.start()
+        finally:
+            conf.set("spark.sql.shuffle.partitions", prev)
         t = StreamTable(name=name, path=path, schema=schema, key=key,
-                        query=writer.start())
+                        query=query)
         self.tables[name] = t
         return t
 

@@ -62,7 +62,9 @@ def ml_detect_anomalies_stream(
 
     Scale note: state is O(keys × max_training_size) doubles in the state
     store — thousands of keys × 7000 floats is megabytes, not gigabytes.
-    Parallelism = key cardinality, exactly the reference's PARTITION BY.
+    Parallelism = key cardinality, at most the topic's partitions
+    (``StreamCatalog.partitions``): each state partition is one Python task
+    per trigger.
     """
     import pandas as pd
 

@@ -1974,6 +1974,100 @@ def test_foreach_batch_topic_survives_restart(spark, catalog, tmp_path):
     assert got == sorted(tuple(r) for r in rows.collect())
 
 
+def _ckpt_partitions(topic_path):
+    """(count in the newest offset-log entry, state/0 partition dirs) of
+    the checkpoint beside ``topic_path``."""
+    import json
+    import os
+
+    ckpt = f"{topic_path}_ckpt"
+    newest = max((f for f in os.listdir(f"{ckpt}/offsets") if f.isdigit()),
+                 key=int)
+    with open(f"{ckpt}/offsets/{newest}") as fh:
+        conf = json.loads(fh.read().splitlines()[1])["conf"]
+    state = [d for d in os.listdir(f"{ckpt}/state/0") if d.isdigit()]
+    return int(conf["spark.sql.shuffle.partitions"]), len(state)
+
+
+def _tumble_slices(spark, src, slices):
+    """Append chronological event slices (one file each) to ``src``."""
+    for k in slices:
+        spark.range(k * 60, (k + 1) * 60, 1, 1).select(
+            F.timestamp_seconds(F.col("id") * 10).alias("ts"),
+            (F.col("id") % 3).cast("string").alias("event_type"),
+        ).write.mode("append").parquet(str(src))
+
+
+def _start_tumble(cat, src):
+    """A watermarked one-minute tumble CTAS, one source file per trigger."""
+    stream = cat.spark.readStream.schema("ts timestamp, event_type string") \
+        .option("maxFilesPerTrigger", "1").parquet(str(src))
+    agg = tumble(stream, "ts", "1 minute", keys=["event_type"],
+                 aggs=[F.count("*").alias("n")], watermark="5 seconds")
+    cat.create_table_as("counts", agg.select("window_start", "event_type", "n"),
+                        available_now=True)
+    cat.await_all()
+    return sorted(tuple(r) for r in cat.read_batch("counts").collect())
+
+
+def test_restarted_stage_keeps_checkpointed_partitions(spark, tmp_path):
+    """The partition count is fixed per checkpoint at first start: a stage
+    started at 3 and restarted from a catalog at 1 keeps 3 in its offset
+    log and its state, and its topic equals one uninterrupted run."""
+    src, root = tmp_path / "src", str(tmp_path / "topics")
+    _tumble_slices(spark, src, range(3))
+    _start_tumble(StreamCatalog(spark, root, partitions=3), src)
+    assert _ckpt_partitions(f"{root}/counts") == (3, 3)
+    _tumble_slices(spark, src, [3])
+    got = _start_tumble(StreamCatalog(spark, root, partitions=1), src)
+    assert _ckpt_partitions(f"{root}/counts") == (3, 3)
+
+    once = _start_tumble(StreamCatalog(spark, str(tmp_path / "once")), src)
+    assert got == once
+    assert len(once) > 3
+
+
+def test_stream_start_contract(spark, catalog, tmp_path):
+    """A fresh stage starts at the catalog's count (1): the offset log says
+    1 and the state has one partition. The session's count is untouched
+    after a start, after a start that raises, and is the count a batch
+    CTAS runs with."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import StringType
+
+    session = spark.conf.get("spark.sql.shuffle.partitions")
+    assert session != "1"
+    src = tmp_path / "src"
+    _tumble_slices(spark, src, range(3))
+    assert _start_tumble(catalog, src)
+    assert _ckpt_partitions(catalog.tables["counts"].path) == (1, 1)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session
+
+    # append mode cannot emit an aggregation without a watermark
+    no_wm = spark.readStream.schema("ts timestamp, event_type string") \
+        .parquet(str(src)).groupBy("event_type").count()
+    with pytest.raises(AnalysisException):
+        catalog.create_table_as("no_wm", no_wm)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == session
+
+    @F.udf(StringType())
+    def shuffle_conf():
+        from pyspark import TaskContext
+
+        return TaskContext.get().getLocalProperty("spark.sql.shuffle.partitions")
+
+    catalog.create_table_as("snap", spark.range(4).select(shuffle_conf().alias("p")))
+    assert {r.p for r in catalog.read_batch("snap").collect()} == {session}
+
+
+@pytest.mark.parametrize("bad", [0, -1, 2.5, "2", True])
+def test_catalog_rejects_bad_partition_count(spark, tmp_path, bad):
+    import re
+
+    with pytest.raises(ValueError, match=re.escape(repr(bad))):
+        StreamCatalog(spark, str(tmp_path), partitions=bad)
+
+
 def test_frozen_profile_scope_releases_on_raise(spark):
     """Frames tracked inside a pipeline's frozen-profile scope are
     unpersisted when its body raises, the exception propagates, and a
