@@ -392,7 +392,10 @@ def _semantic_members_df(
                 sq = np.zeros(len(X))
                 for d in range(X.shape[1]):
                     sq += X[:, d] * X[:, d]
-                en = X / np.sqrt(sq)[:, None]
+                # a zero-norm row normalizes to NaN (0/0) on purpose:
+                # see _semantic_kept_fn's zero-norm contract
+                with np.errstate(invalid="ignore", divide="ignore"):
+                    en = X / np.sqrt(sq)[:, None]
                 yield pd.DataFrame({
                     "item_id": pdf["item_id"].to_numpy(np.int64),
                     "cluster": cl.astype(np.int32),
@@ -428,12 +431,13 @@ def _semantic_kept_fn(threshold: float):
     old zip_with (null-padded) and were never dups — reproduced by
     pairing only within same-length subgroups.
 
-    Zero-norm rows normalize to NaN. Here a NaN cosine fails
-    ``>= threshold``, so such a row is never a dup and is kept; the
-    DuckDB oracle orders NaN above every number, so there the comparison
-    holds and the row would be dropped. No fixture has a zero-norm
-    vector, so the parity sweep never sees the split (the contract
-    decision is an open ROADMAP item).
+    Zero-norm contract: a zero-norm row is never a dup and is kept, and
+    a pair of zero vectors never forms. Here the row normalizes to NaN
+    and a NaN cosine fails ``>= threshold``; the DuckDB oracle evaluates
+    ``0/0`` as NULL, so its cosine is NULL and the pair is filtered out
+    too. Both engines put a zero vector in cluster 0.
+    ``test_semantic_dedup_zero_norm_rows_match_oracle`` pins this on a
+    fixture with two zero vectors.
 
     Memory: one cluster is one group, held whole in one Python worker
     (its rows plus an ``m x dim`` float64 matrix), so the largest

@@ -18,7 +18,11 @@ All three CTAS flavours (file sink, ``foreachBatch``, changelog) start
 through one path: stop a live query of the same name, checkpoint beside
 the topic (``<topic>_ckpt``), seed an empty ``foreachBatch`` topic only
 when no checkpoint exists (a restart resumes and must keep its rows),
-then pick the trigger (``availableNow`` or processing-time).
+then pick the trigger (``availableNow`` or processing-time). Every
+checkpoint file (offset, commit, source and sink logs, state) is written
+through the FileSystem-based checkpoint manager that ``get_spark`` sets
+session-wide, which renames a temp file into place without forking a
+``readlink`` per write on the local filesystem.
 
 Partition contract: ``StreamCatalog.partitions`` is the partition count of
 the catalog's topics, the analog of a Kafka topic's partition count. The

@@ -527,3 +527,47 @@ def test_assign_tie_breaks_to_lowest_cell_in_both_paths(spark):
     # alignment quantization: cos values floor(cos*1e6)
     assert both[1][1] == 1_000_000
     assert both[0][1] == both[2][1] == int(np.floor((1 / np.sqrt(2)) * 1e6))
+
+
+def test_semantic_dedup_zero_norm_rows_match_oracle(spark, tmp_path):
+    """Zero-norm contract, pinned on a degenerate fixture: sf0.001 with
+    embeddings 7 and 123 set to all zeros. Engine and DuckDB oracle agree
+    on every row. Both zero vectors land in cluster 0 and both are kept:
+    numpy normalizes them to NaN and a NaN cosine fails ``>= threshold``,
+    while DuckDB evaluates ``0/0`` as NULL, so the pair never forms."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from quickstart_streaming_agents_spark.queries import ORACLE, QUERIES
+    from tests.oracle_util import assert_query_matches_oracle, duckdb_conn
+
+    ship_package(spark)
+    zero = [7, 123]
+    for name in os.listdir(SF_DIR):
+        os.symlink(f"{SF_DIR}/{name}", tmp_path / name)
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    is_zero = pc.is_in(emb["vec_id"], pa.array(zero, emb["vec_id"].type))
+    vecs = emb["embedding"].to_pylist()
+    vecs = [[0.0] * len(v) if z else v
+            for v, z in zip(vecs, is_zero.to_pylist())]
+    emb = emb.set_column(emb.schema.get_field_index("embedding"), "embedding",
+                         pa.array(vecs, emb.schema.field("embedding").type))
+    os.unlink(tmp_path / "embeddings.parquet")
+    pq.write_table(emb, tmp_path / "embeddings.parquet")
+
+    sf = str(tmp_path)
+    assert_query_matches_oracle(spark, sf, QUERIES["semantic_dedup"],
+                                ORACLE["semantic_dedup"])
+    got = QUERIES["semantic_dedup"](spark, sf) \
+        .filter(F.col("vec_id").isin(zero)).collect()
+    assert sorted((r.vec_id, r.cluster, r.kept) for r in got) \
+        == [(7, 0, True), (123, 0, True)]
+    con = duckdb_conn(sf)
+    want = con.execute(
+        f"SELECT vec_id, cluster, kept FROM ({ORACLE['semantic_dedup']}) "
+        "WHERE vec_id IN (7, 123) ORDER BY vec_id").fetchall()
+    con.close()
+    assert want == [(7, 0, True), (123, 0, True)]

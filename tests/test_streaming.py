@@ -2060,6 +2060,77 @@ def test_stream_start_contract(spark, catalog, tmp_path):
     assert {r.p for r in catalog.read_batch("snap").collect()} == {session}
 
 
+def test_surge_chain_restart_matches_uninterrupted_run(spark, tmp_path):
+    """Exactly-once across a restart for the whole lab3 chain: run
+    ``surge_pipeline`` over the first half of the events as chronological
+    slices, append the rest and run it again on the same root, so every
+    stage resumes from its checkpoint. Each topic holds exactly the rows
+    of one uninterrupted run in a fresh root."""
+    import pyarrow.parquet as pq
+
+    ship_package(spark)
+    events = pq.read_table(EVENTS).sort_by("ts")
+    src = tmp_path / "events"
+    src.mkdir()
+    cuts = [events.num_rows * k // 4 for k in range(5)]
+
+    def append(slices):
+        for k in slices:
+            pq.write_table(events.slice(cuts[k], cuts[k + 1] - cuts[k]),
+                           src / f"slice-{k}.parquet")
+
+    def topics(cat):
+        return {t: sorted(map(repr, cat.read_batch(t).collect()))
+                for t in ("window_counts", "scored", "anomalies")}
+
+    root = str(tmp_path / "restarted")
+    append(range(2))
+    first = topics(surge_pipeline(StreamCatalog(spark, root), str(src)))
+    append(range(2, 4))
+    got = topics(surge_pipeline(StreamCatalog(spark, root), str(src)))
+    once = topics(surge_pipeline(StreamCatalog(spark, str(tmp_path / "once")),
+                                 str(src)))
+    assert first["scored"] and len(got["scored"]) > len(first["scored"])
+    assert got["anomalies"]
+    for t in once:
+        assert got[t] == once[t], t
+
+
+def test_checkpoint_writes_go_through_filesystem_manager(spark, catalog,
+                                                        tmp_path):
+    """A catalog checkpoint is written through Spark's FileSystem-based
+    manager, and an atomic write still refuses a second writer of a
+    batch id: the existing log file keeps its bytes, and the refused
+    write leaves only hidden files, which the log never lists."""
+    import os
+
+    from py4j.protocol import Py4JJavaError
+
+    src = tmp_path / "src"
+    _tumble_slices(spark, src, range(2))
+    _start_tumble(catalog, src)
+    offsets = f"{catalog.tables['counts'].path}_ckpt/offsets"
+    log = f"{offsets}/0"
+    written, listed = open(log, "rb").read(), set(os.listdir(offsets))
+
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path
+    fm = jvm.org.apache.spark.sql.execution.streaming.checkpointing \
+        .CheckpointFileManager.create(
+            path(offsets), spark._jsparkSession.sessionState().newHadoopConf())
+    assert fm.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+    out = fm.createAtomic(path(log), False)
+    out.write(bytearray(b"a second writer of batch 0"))
+    with pytest.raises(Py4JJavaError) as err:
+        out.close()
+    exists = jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.FileAlreadyExistsException")
+    assert exists.isInstance(err.value.java_exception)
+    assert open(log, "rb").read() == written
+    assert all(f.startswith(".") for f in set(os.listdir(offsets)) - listed)
+
+
 @pytest.mark.parametrize("bad", [0, -1, 2.5, "2", True])
 def test_catalog_rejects_bad_partition_count(spark, tmp_path, bad):
     import re
